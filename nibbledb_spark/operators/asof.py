@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -134,20 +134,6 @@ def _asof_nearest(
         ],
     )
     return out
-
-
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str],
-    condition: Column,
-) -> DataFrame:
-    """Banded/interval join: equi keys + a range predicate. Catalyst
-    executes the equi part as a hash/sort-merge join and applies the
-    band as a post-join filter — linear in matches, not |L|x|R|."""
-    return left.join(right, [*(left[c] == right[c] for c in on)], "inner").where(
-        condition
-    )
 
 
 def interval_join(

@@ -12,6 +12,20 @@ Scale design (the 100 TB stance):
   O(docs) + O(candidates), not O(docs²).
 - All hashing is md5-based so results are engine-portable and
   deterministic (the DuckDB oracle computes the identical signatures).
+
+The near-dup pair algorithm is written once, as SQL text composed by
+``session.sql_over`` into one parse and one analysis per plan (classic
+PySpark re-analyzes the whole tree at every DataFrame call). Two
+definitions carry it: the shared-key overlap step
+(:func:`_overlap_sql`: per-id sizes, the ``id1 < id2`` self equi-join
+on a key, sizes joined back) and the LSH probe (:func:`_probe_sql`:
+probe-side bands joined to a persisted index). ``ngram_jaccard_pairs``,
+``ngram_containment_pairs`` and ``winnow_near_dup_pairs`` add only their
+score and filter to the overlap step; ``lsh_query_near_dups`` runs the
+probe; the crawl gate ``lsh_dedup_gate`` unions the probe statement
+with ``ngram_jaccard_pairs``' pair statement. The Jaccard ratio
+(:func:`_jaccard_sql`), the band query (:func:`_bands_sql`) and the
+stop-key cap (:func:`_drop_hot_keys`) are likewise stated once.
 """
 
 from __future__ import annotations
@@ -328,18 +342,6 @@ def _minhash_agg_sql(num_hashes: int) -> list[str]:
     ]
 
 
-def _band_struct_sql(num_hashes: int, band_size: int) -> str:
-    """The banded-bucket struct array over h0..h{k-1} signature columns."""
-    n_bands = num_hashes // band_size
-    return ", ".join(
-        "struct({b} AS band, md5(cast(concat_ws('|', {cols}) as binary)) AS bucket)".format(
-            b=b,
-            cols=", ".join(f"h{b * band_size + i}" for i in range(band_size)),
-        )
-        for b in range(n_bands)
-    )
-
-
 def minhash_rows(
     sh_rows: DataFrame, num_hashes: int = DEFAULT_NUM_HASHES
 ) -> DataFrame:
@@ -349,43 +351,77 @@ def minhash_rows(
     return sh_rows.groupBy("id").agg(*aggs)
 
 
-def lsh_candidate_pairs_fast(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = DEFAULT_SHINGLE_N,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    band_size: int = DEFAULT_BAND_SIZE,
-) -> DataFrame:
-    """Row-oriented LSH banding (same semantics as lsh_candidate_pairs)."""
-    sh = shingle_rows(docs, id_col=id_col, text_col=text_col, n=shingle_n)
-    return _lsh_candidates_from_sh(sh, num_hashes, band_size)
+def _bands_sql(rows: str, num_hashes: int, band_size: int) -> str:
+    """The LSH band query: (id, band, bucket) rows from the MinHash
+    signature of each id in the (id, shingle) relation ``rows``."""
+    hashes = ", ".join(_minhash_agg_sql(num_hashes))
+    structs = ", ".join(
+        "struct({b} AS band, md5(cast(concat_ws('|', {cols}) as binary)) AS bucket)".format(
+            b=b,
+            cols=", ".join(f"h{b * band_size + i}" for i in range(band_size)),
+        )
+        for b in range(num_hashes // band_size)
+    )
+    return f"""SELECT id, bb.band, bb.bucket
+FROM (SELECT id, explode(array({structs})) AS bb
+      FROM (SELECT id, {hashes} FROM {rows} GROUP BY id))"""
 
 
 def _band_rows(sh: DataFrame, num_hashes: int, band_size: int) -> DataFrame:
     """(id, band, bucket) LSH band rows from shingle rows: the banded
-    signature table both the in-plan pipeline and the persisted index
-    materialize."""
-    sig = minhash_rows(sh, num_hashes)
-    structs = _band_struct_sql(num_hashes, band_size)
-    return sig.selectExpr("id", f"explode(array({structs})) AS bb").select(
-        "id", "bb.band", "bb.bucket"
+    signature table the persisted index materializes."""
+    from nibbledb_spark.session import sql_over
+
+    return sql_over(
+        sh.sparkSession, _bands_sql("{sh}", num_hashes, band_size), sh=sh
     )
 
 
-def _lsh_candidates_from_sh(
-    sh: DataFrame, num_hashes: int, band_size: int
-) -> DataFrame:
-    bands = _band_rows(sh, num_hashes, band_size)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        .distinct()
+def _jaccard_sql(sz1: str, sz2: str) -> str:
+    """Exact Jaccard of two sets from their intersection count ``inter``
+    and their sizes: integer counts, one deterministic double divide."""
+    return f"cast(inter AS double) / ({sz1} + {sz2} - inter)"
+
+
+def _overlap_sql(rows: str, key: str) -> str:
+    """The shared-key overlap step over the (id, ``key``) relation
+    ``rows`` (one row per distinct (id, key)): (id1, id2, inter, sz1,
+    sz2) for every id pair with id1 < id2 sharing at least one key.
+    The candidates ARE the key equi-join — never an all-pairs product
+    — and the intersection count falls out of the same join; the
+    per-id row counts join back as the set sizes."""
+    return f"""
+WITH sizes AS (SELECT id, count(*) AS sz FROM {rows} GROUP BY id),
+inter AS (
+  SELECT id1, id2, count(*) AS inter
+  FROM (SELECT id AS id1, {key} AS s FROM {rows}) s1
+  JOIN (SELECT id AS id2, {key} AS s FROM {rows}) s2 USING (s)
+  WHERE id1 < id2
+  GROUP BY id1, id2)
+SELECT id1, id2, inter, sz1, sz2
+FROM inter
+JOIN (SELECT id AS id1, sz AS sz1 FROM sizes) z1 USING (id1)
+JOIN (SELECT id AS id2, sz AS sz2 FROM sizes) z2 USING (id2)"""
+
+
+def _drop_hot_keys(rows: DataFrame, key: str, max_doc_freq: int) -> DataFrame:
+    """The stop-key cap: drop every ``key`` present in more than
+    ``max_doc_freq`` rows of the (id, ``key``) table ``rows`` (rows are
+    distinct per (id, key), so that is its document frequency). The hot
+    set is by construction the SMALL side — at corpus scale it is the
+    boilerplate keys, thousands not billions — so: partial-agg (one row
+    per distinct key reaches the shuffle) then broadcast ANTI join. The
+    big table itself never reshuffles for the cap; a count-over-window
+    formulation was measured 2x slower end-to-end in clean_corpus (it
+    shuffles every ROW). Changes semantics from exact to filtered-exact:
+    sizes and intersections both exclude the hot keys."""
+    hot = (
+        rows.groupBy(key)
+        .agg(F.count("*").alias("df"))
+        .where(F.col("df") > max_doc_freq)
+        .select(key)
     )
+    return rows.join(F.broadcast(hot), key, "left_anti")
 
 
 def near_dup_pairs_minhash_fast(
@@ -408,21 +444,12 @@ def near_dup_pairs_minhash_fast(
     analogue of materializing the shingle table once per corpus, which
     is what a 100 TB dedup run does anyway.
 
-    The post-shingle pipeline (signatures, banding, candidate join,
-    intersection, Jaccard) is ONE ``spark.sql`` call over the persisted
-    shingle table: classic PySpark re-runs the analyzer over the whole
-    deepening tree at every DataFrame method call (~26 ms per join on
-    this chain), so the ~20-call chain cost ~0.4 s of driver time
-    before any job ran; the fused form parses and analyzes the
-    identical tree once (~0.25 s build — r15 opt, plan and results
-    unchanged, oracle-verified)."""
+    The intersection joins the shingle rows onto the band CANDIDATES
+    first (not the shared-shingle join of :func:`_overlap_sql`): that
+    join order is what keeps LSH sub-quadratic."""
     sh = shingle_rows(docs, id_col=id_col, text_col=text_col, n=shingle_n).persist()
-    hashes = ", ".join(_minhash_agg_sql(num_hashes))
-    structs = _band_struct_sql(num_hashes, band_size)
     q = f"""
-WITH sig AS (SELECT id, {hashes} FROM {{sh}} GROUP BY id),
-bands AS (SELECT id, bb.band, bb.bucket
-          FROM (SELECT id, explode(array({structs})) AS bb FROM sig)),
+WITH bands AS ({_bands_sql("{sh}", num_hashes, band_size)}),
 cands AS (SELECT DISTINCT a.id AS id1, b.id AS id2
           FROM bands a JOIN bands b USING (band, bucket) WHERE a.id < b.id),
 sizes AS (SELECT id, count(*) AS sz FROM {{sh}} GROUP BY id),
@@ -433,7 +460,7 @@ inter AS (
   JOIN (SELECT id AS id2, shingle AS s FROM {{sh}}) s2 USING (id2, s)
   GROUP BY id1, id2)
 SELECT id1, id2, jaccard FROM (
-  SELECT id1, id2, cast(inter AS double) / (z1.sz1 + z2.sz2 - inter) AS jaccard
+  SELECT id1, id2, {_jaccard_sql("z1.sz1", "z2.sz2")} AS jaccard
   FROM inter
   JOIN (SELECT id AS id1, sz AS sz1 FROM sizes) z1 USING (id1)
   JOIN (SELECT id AS id2, sz AS sz2 FROM sizes) z2 USING (id2)
@@ -1034,10 +1061,7 @@ def lsh_query_near_dups(
     probe batch at the index's frozen ``shingle_n`` (caller-owned
     persistence — the crawl gate computes one shingle table per batch
     and feeds probe + intra-batch + add from it)."""
-    import os as _os
-
-    idx = path if isinstance(path, LshIndex) else None
-    meta = idx.meta if idx else _lsh_index_meta(path)
+    meta = path.meta if isinstance(path, LshIndex) else _lsh_index_meta(path)
     # Probe-side frames are NOT persisted: the returned frame is lazy,
     # so a persist here could never be unpersisted and each probe batch
     # in the incremental crawl workflow would pin another dead cache
@@ -1055,22 +1079,40 @@ def lsh_query_near_dups(
             query_docs, id_col=id_col, text_col=text_col, n=meta["shingle_n"]
         )
     )
-    idx_bands = idx.bands if idx else _lsh_read(spark, path, "bands")
-    idx_sh = idx.shingles if idx else _lsh_read(spark, path, "shingles")
-    idx_sizes = idx.sizes if idx else _lsh_read(spark, path, "sizes")
-    # One spark.sql call for the whole probe pipeline (query banding,
-    # candidate equi-join, intersection, Jaccard) — the analyzer-once
-    # rationale of near_dup_pairs_minhash_fast. This builder runs once
-    # PER MICRO-BATCH in lsh_dedup_gate, so the ~0.3 s/call of saved
-    # driver time recurs per crawl batch; sql_over keeps the open
-    # handle's persisted index frames cached.
-    hashes = ", ".join(_minhash_agg_sql(meta["num_hashes"]))
-    structs = _band_struct_sql(meta["num_hashes"], meta["band_size"])
-    sql = f"""
-WITH q_bands AS (
-  SELECT id, bb.band, bb.bucket
-  FROM (SELECT id, explode(array({structs})) AS bb
-        FROM (SELECT id, {hashes} FROM {{q_sh}} GROUP BY id))),
+    from nibbledb_spark.session import sql_over
+
+    return sql_over(
+        q_sh.sparkSession,
+        _probe_sql(meta, threshold),
+        q_sh=q_sh,
+        **_index_frames(spark, path),
+    )
+
+
+def _index_frames(spark, path: str | LshIndex) -> dict[str, DataFrame]:
+    """The probe's corpus-side inputs: the open handle's (cached)
+    frames, or the tables as the manifest lists them now."""
+    if isinstance(path, LshIndex):
+        return {
+            "idx_bands": path.bands,
+            "idx_sh": path.shingles,
+            "idx_sizes": path.sizes,
+        }
+    return {
+        "idx_bands": _lsh_read(spark, path, "bands"),
+        "idx_sh": _lsh_read(spark, path, "shingles"),
+        "idx_sizes": _lsh_read(spark, path, "sizes"),
+    }
+
+
+def _probe_sql(meta: dict, threshold: float) -> str:
+    """The LSH probe statement, (query_id, index_id, jaccard) over the
+    ``sql_over`` frames ``q_sh`` (probe shingle rows) and the three
+    :func:`_index_frames`: band the probe side with the index's frozen
+    parameters, equi-join its buckets against the persisted band
+    table, and count shared shingle rows of candidate pairs only."""
+    return f"""
+WITH q_bands AS ({_bands_sql("{q_sh}", meta["num_hashes"], meta["band_size"])}),
 cand AS (
   SELECT DISTINCT q.id AS query_id, i.id AS index_id
   FROM q_bands q JOIN {{idx_bands}} i USING (band, bucket) WHERE q.id != i.id),
@@ -1082,23 +1124,12 @@ inter AS (
   GROUP BY query_id, index_id),
 q_sizes AS (SELECT id AS query_id, count(*) AS q_sz FROM {{q_sh}} GROUP BY id)
 SELECT query_id, index_id, jaccard FROM (
-  SELECT query_id, index_id,
-         cast(inter AS double) / (q_sz + i_sz - inter) AS jaccard
+  SELECT query_id, index_id, {_jaccard_sql("q_sz", "i_sz")} AS jaccard
   FROM inter
   JOIN q_sizes USING (query_id)
   JOIN (SELECT id AS index_id, sz AS i_sz FROM {{idx_sizes}}) iz USING (index_id)
 ) WHERE jaccard >= {threshold!r}
 """
-    from nibbledb_spark.session import sql_over
-
-    return sql_over(
-        q_sh.sparkSession,
-        sql,
-        q_sh=q_sh,
-        idx_bands=idx_bands,
-        idx_sh=idx_sh,
-        idx_sizes=idx_sizes,
-    )
 
 
 def ngram_jaccard_pairs(
@@ -1134,75 +1165,24 @@ def ngram_jaccard_pairs(
         else shingle_rows(docs, id_col=id_col, text_col=text_col, n=n).persist()
     )
     if max_doc_freq is not None:
-        # The hot set (df > cap) is by construction the SMALL side — at
-        # corpus scale it is the boilerplate shingles, thousands not
-        # billions — so: partial-agg (map-side combined, one row per
-        # distinct shingle reaches the shuffle) then broadcast ANTI
-        # join. The big shingle table itself never reshuffles for the
-        # cap. A count-over-window formulation was measured 2x slower
-        # end-to-end in clean_corpus: it shuffles every shingle ROW.
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .where(F.col("df") > max_doc_freq)
-            .select("shingle")
-        )
         # Persist the CAPPED table as well: three consumers follow
         # (sizes + both join sides) and without this each replays the
         # anti-join probe — measured 2x on clean_corpus end-to-end.
-        #
-        # This branch keeps the incremental DataFrame chain: the capped
-        # persist's analyzed subtree is large, and the fused-SQL form
-        # re-analyzes it from scratch 3x (measured slightly SLOWER than
-        # the chain, whose calls reuse already-analyzed children); the
-        # uncapped path below is where analyzer-once pays (r15 opt A/B).
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti").persist()
-        sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-        s1 = sh.select(F.col("id").alias("id1"), F.col("shingle").alias("s"))
-        s2 = sh.select(F.col("id").alias("id2"), F.col("shingle").alias("s"))
-        inter = (
-            s1.join(s2, "s")
-            .where(F.col("id1") < F.col("id2"))
-            .groupBy("id1", "id2")
-            .agg(F.count("*").alias("inter"))
-        )
-        z1 = sizes.select(F.col("id").alias("id1"), F.col("sz").alias("sz1"))
-        z2 = sizes.select(F.col("id").alias("id2"), F.col("sz").alias("sz2"))
-        return (
-            inter.join(z1, "id1")
-            .join(z2, "id2")
-            .select(
-                "id1",
-                "id2",
-                (
-                    F.col("inter").cast("double")
-                    / (F.col("sz1") + F.col("sz2") - F.col("inter"))
-                ).alias("jaccard"),
-            )
-            .where(F.col("jaccard") >= threshold)
-        )
-    # One spark.sql call for the whole post-shingle pipeline — same
-    # analyzer-once rationale as near_dup_pairs_minhash_fast (this
-    # builder also runs once PER MICRO-BATCH inside lsh_dedup_gate, so
-    # the saved driver time recurs per batch).
-    q = f"""
-WITH sizes AS (SELECT id, count(*) AS sz FROM {{sh}} GROUP BY id),
-inter AS (
-  SELECT id1, id2, count(*) AS inter
-  FROM (SELECT id AS id1, shingle AS s FROM {{sh}}) s1
-  JOIN (SELECT id AS id2, shingle AS s FROM {{sh}}) s2 USING (s)
-  WHERE id1 < id2
-  GROUP BY id1, id2)
-SELECT id1, id2, jaccard FROM (
-  SELECT id1, id2, cast(inter AS double) / (z1.sz1 + z2.sz2 - inter) AS jaccard
-  FROM inter
-  JOIN (SELECT id AS id1, sz AS sz1 FROM sizes) z1 USING (id1)
-  JOIN (SELECT id AS id2, sz AS sz2 FROM sizes) z2 USING (id2)
-) WHERE jaccard >= {threshold!r}
-"""
+        sh = _drop_hot_keys(sh, "shingle", max_doc_freq).persist()
     from nibbledb_spark.session import sql_over
 
-    return sql_over(sh.sparkSession, q, sh=sh)
+    return sql_over(sh.sparkSession, _jaccard_pairs_sql("{sh}", threshold), sh=sh)
+
+
+def _jaccard_pairs_sql(rows: str, threshold: float) -> str:
+    """The exact-Jaccard pair statement over the (id, shingle) relation
+    ``rows``: (id1, id2, jaccard) with jaccard >= ``threshold``."""
+    return f"""
+SELECT id1, id2, jaccard FROM (
+  SELECT id1, id2, {_jaccard_sql("sz1", "sz2")} AS jaccard
+  FROM ({_overlap_sql(rows, "shingle")})
+) WHERE jaccard >= {threshold!r}
+"""
 
 
 def winnow_near_dup_pairs(
@@ -1236,13 +1216,7 @@ def winnow_near_dup_pairs(
         .distinct()
     )
     if max_doc_freq is not None:
-        hot = (
-            fps.groupBy("fp")
-            .agg(F.count("*").alias("df"))
-            .where(F.col("df") > max_doc_freq)
-            .select("fp")
-        )
-        fps = fps.join(F.broadcast(hot), "fp", "left_anti")
+        fps = _drop_hot_keys(fps, "fp", max_doc_freq)
     # Persist ONCE, after the optional stop-fingerprint filter: an
     # earlier draft persisted both the raw and the filtered frame, and
     # the raw copy stayed pinned in the filtered frame's lineage with
@@ -1251,31 +1225,15 @@ def winnow_near_dup_pairs(
     # fingerprints once at materialization; cache memory is the scarcer
     # resource at corpus scale.
     fps = fps.persist()
-    sizes = fps.groupBy("id").agg(F.count("*").alias("sz"))
-    f1 = fps.select(F.col("id").alias("id1"), "fp")
-    f2 = fps.select(F.col("id").alias("id2"), "fp")
-    inter = (
-        f1.join(f2, "fp")
-        .where(F.col("id1") < F.col("id2"))
-        .groupBy("id1", "id2")
-        .agg(F.count("*").alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
-    )
-    z1 = sizes.select(F.col("id").alias("id1"), F.col("sz").alias("sz1"))
-    z2 = sizes.select(F.col("id").alias("id2"), F.col("sz").alias("sz2"))
-    return (
-        inter.join(z1, "id1")
-        .join(z2, "id2")
-        .select(
-            "id1",
-            "id2",
-            "n_shared",
-            (
-                F.col("n_shared").cast("double")
-                / F.least("sz1", "sz2")
-            ).alias("containment"),
-        )
-    )
+    q = f"""
+SELECT id1, id2, inter AS n_shared,
+       cast(inter AS double) / least(sz1, sz2) AS containment
+FROM ({_overlap_sql("{fps}", "fp")})
+WHERE inter >= {min_shared!r}
+"""
+    from nibbledb_spark.session import sql_over
+
+    return sql_over(fps.sparkSession, q, fps=fps)
 
 
 def ngram_containment_pairs(
@@ -1303,40 +1261,20 @@ def ngram_containment_pairs(
     counts => the ratio is one deterministic double divide."""
     sh = shingle_rows(docs, id_col=id_col, text_col=text_col, n=n)
     if max_doc_freq is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .where(F.col("df") > max_doc_freq)
-            .select("shingle")
-        )
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
+        sh = _drop_hot_keys(sh, "shingle", max_doc_freq)
     # Single persist after the stop-shingle filter — see the matching
     # note in winnow_near_dup_pairs (double-persist pinned the raw
     # shingle frame in cache with no unpersist handle).
     sh = sh.persist()
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    s1 = sh.select(F.col("id").alias("id1"), F.col("shingle").alias("s"))
-    s2 = sh.select(F.col("id").alias("id2"), F.col("shingle").alias("s"))
-    inter = (
-        s1.join(s2, "s")
-        .where(F.col("id1") < F.col("id2"))
-        .groupBy("id1", "id2")
-        .agg(F.count("*").alias("inter"))
-    )
-    z1 = sizes.select(F.col("id").alias("id1"), F.col("sz").alias("sz1"))
-    z2 = sizes.select(F.col("id").alias("id2"), F.col("sz").alias("sz2"))
-    return (
-        inter.join(z1, "id1")
-        .join(z2, "id2")
-        .select(
-            "id1",
-            "id2",
-            (
-                F.col("inter").cast("double") / F.least("sz1", "sz2")
-            ).alias("containment"),
-        )
-        .where(F.col("containment") >= threshold)
-    )
+    q = f"""
+SELECT id1, id2, containment FROM (
+  SELECT id1, id2, cast(inter AS double) / least(sz1, sz2) AS containment
+  FROM ({_overlap_sql("{sh}", "shingle")})
+) WHERE containment >= {threshold!r}
+"""
+    from nibbledb_spark.session import sql_over
+
+    return sql_over(sh.sparkSession, q, sh=sh)
 
 
 def simhash_near_dup_pairs(
@@ -1819,9 +1757,6 @@ def substring_dup_spans(
             .select("h")
         )
         anch = anch.join(F.broadcast(hot), "h", "left_anti")
-    # One spark.sql call for the whole post-anchor pipeline (self-join,
-    # diagonal run merge, span fold) — same analyzer-once rationale as
-    # near_dup_pairs_minhash_fast.
     q = f"""
 WITH hits AS (
   SELECT a.id AS d1, b.id AS d2, a.pos AS p1, b.pos AS p2, a.pos - b.pos AS diag
@@ -2155,65 +2090,21 @@ def lsh_dedup_gate(
         try:
           with micro_batch_tuning(spark, n_rows):
             # BOTH drop rules in ONE parsed statement and ONE anti join
-            # (r16 opt): the vs-index probe (lsh_query_near_dups' SQL)
-            # and the intra-batch pair step (ngram_jaccard_pairs' SQL)
-            # union their drop ids — anti join of a union equals the
-            # former two chained anti joins, the .distinct()s drop
-            # (left_anti is set-semantics on its right side), and the
-            # driver parses/analyzes once per batch instead of twice.
-            # Jaccard expressions are byte-identical to the two
-            # operators' own SQL, so the drop set is unchanged.
+            # (r16 opt): the vs-index probe statement of
+            # lsh_query_near_dups and the intra-batch pair statement of
+            # ngram_jaccard_pairs union their drop ids — anti join of a
+            # union equals two chained anti joins (left_anti is
+            # set-semantics on its right side), and the statement
+            # is parsed and analyzed once per batch instead of twice.
             from nibbledb_spark.session import sql_over
 
-            hashes = ", ".join(_minhash_agg_sql(meta["num_hashes"]))
-            structs = _band_struct_sql(meta["num_hashes"], meta["band_size"])
-            drops_sql = f"""
-WITH q_bands AS (
-  SELECT id, bb.band, bb.bucket
-  FROM (SELECT id, explode(array({structs})) AS bb
-        FROM (SELECT id, {hashes} FROM {{q_sh}} GROUP BY id))),
-cand AS (
-  SELECT DISTINCT q.id AS query_id, i.id AS index_id
-  FROM q_bands q JOIN {{idx_bands}} i USING (band, bucket) WHERE q.id != i.id),
-probe_inter AS (
-  SELECT query_id, index_id, count(*) AS inter
-  FROM cand
-  JOIN (SELECT id AS query_id, shingle FROM {{q_sh}}) qs USING (query_id)
-  JOIN (SELECT id AS index_id, shingle FROM {{idx_sh}}) ix USING (index_id, shingle)
-  GROUP BY query_id, index_id),
-q_sizes AS (SELECT id AS query_id, count(*) AS q_sz FROM {{q_sh}} GROUP BY id),
-probe_drops AS (
-  SELECT query_id AS id FROM (
-    SELECT query_id,
-           cast(inter AS double) / (q_sz + i_sz - inter) AS jaccard
-    FROM probe_inter
-    JOIN q_sizes USING (query_id)
-    JOIN (SELECT id AS index_id, sz AS i_sz FROM {{idx_sizes}}) iz USING (index_id)
-  ) WHERE jaccard >= {threshold!r}),
-intra_inter AS (
-  SELECT id1, id2, count(*) AS inter
-  FROM (SELECT id AS id1, shingle AS s FROM {{q_sh}}) s1
-  JOIN (SELECT id AS id2, shingle AS s FROM {{q_sh}}) s2 USING (s)
-  WHERE id1 < id2
-  GROUP BY id1, id2),
-intra_drops AS (
-  SELECT id2 AS id FROM (
-    SELECT id2, cast(inter AS double) / (z1.sz1 + z2.sz2 - inter) AS jaccard
-    FROM intra_inter
-    JOIN (SELECT query_id AS id1, q_sz AS sz1 FROM q_sizes) z1 USING (id1)
-    JOIN (SELECT query_id AS id2, q_sz AS sz2 FROM q_sizes) z2 USING (id2)
-  ) WHERE jaccard >= {threshold!r})
-SELECT id AS {id_col} FROM probe_drops
-UNION ALL
-SELECT id AS {id_col} FROM intra_drops
-"""
             drops = sql_over(
                 spark,
-                drops_sql,
+                f"SELECT query_id AS {id_col} FROM ({_probe_sql(meta, threshold)})\n"
+                f"UNION ALL\n"
+                f"SELECT id2 AS {id_col} FROM ({_jaccard_pairs_sql('{q_sh}', threshold)})",
                 q_sh=batch_sh,
-                idx_bands=_lsh_read(spark, path, "bands"),
-                idx_sh=_lsh_read(spark, path, "shingles"),
-                idx_sizes=_lsh_read(spark, path, "sizes"),
+                **_index_frames(spark, path),
             )
             survivors = batch.join(drops, id_col, "left_anti").persist()
 

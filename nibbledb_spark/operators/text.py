@@ -49,15 +49,6 @@ def _in_list_sql(vals: tuple[str, ...]) -> str:
     return "(" + ", ".join(f"'{v}'" for v in vals) + ")"
 
 
-def stopword_ratio_sql(text_frag: str) -> str:
-    """SQL text of the stopword-ratio expression (quality gates)."""
-    w = tokens_sql(text_frag)
-    return (
-        f"CAST(size(filter({w}, x -> x IN {_in_list_sql(STOPWORDS)})) AS DOUBLE)"
-        f" / size({w})"
-    )
-
-
 # GPT-2-style pre-tokenizer approximation: contractions, space-prefixed
 # letter runs, digit runs, punctuation runs. Restricted to constructs both
 # Java regex (Spark) and RE2 (DuckDB oracle) support identically — no

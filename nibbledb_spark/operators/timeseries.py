@@ -209,12 +209,6 @@ def aggregate_result(df: DataFrame, agg: str) -> dict[str, float]:
     return {agg: float(val)}
 
 
-def grouped_aggregate(points: DataFrame, agg: str) -> DataFrame:
-    """Per-series variant of A16-A22 (the reference computes these via a
-    REST call per series; one hash-aggregate pass here)."""
-    return points.groupBy("series").agg(_agg_column(agg)).orderBy("series")
-
-
 # --------------------------------------------------------------------------
 # delete (A25-A26)
 # --------------------------------------------------------------------------

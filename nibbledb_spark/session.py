@@ -149,7 +149,7 @@ class micro_batch_tuning:
             "spark.sql.shuffle.partitions": conf.get("spark.sql.shuffle.partitions"),
         }
         session_parts = int(self.saved["spark.sql.shuffle.partitions"])
-        parts = max(4, min(session_parts, self.n_rows // 128 + 1))
+        parts = min(session_parts, max(4, self.n_rows // 128 + 1))
         conf.set("spark.sql.adaptive.enabled", "false")
         conf.set("spark.sql.shuffle.partitions", str(parts))
         return self

@@ -4990,9 +4990,14 @@ def test_lsh_dedup_gate_crawl_loop(spark, tmp_path):
     them; a crash-replayed batch re-adds nothing and re-emits the same
     survivors (downstream idempotence by batch_id); the index stays
     validate-clean throughout."""
+    import json
+    import os
+
     from nibbledb_spark.operators.dedup import (
         build_lsh_index,
         lsh_dedup_gate,
+        lsh_query_near_dups,
+        ngram_jaccard_pairs,
         validate_lsh_index,
     )
 
@@ -5023,8 +5028,23 @@ def test_lsh_dedup_gate_crawl_loop(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
+    # composition contract: the gate drops exactly the probe hits of
+    # lsh_query_near_dups plus the higher ids of ngram_jaccard_pairs
+    # at the index's shingle_n — evaluated before the sink grows the index
+    with open(os.path.join(path, "meta.json")) as f:
+        shingle_n = json.load(f)["shingle_n"]
+    probe_ids = {
+        r["query_id"]
+        for r in lsh_query_near_dups(spark, path, b1, threshold=0.6).collect()
+    }
+    pair_ids = {
+        r["id2"]
+        for r in ngram_jaccard_pairs(b1, n=shingle_n, threshold=0.6).collect()
+    }
+    assert probe_ids and pair_ids
     sink(b1, 0)
     assert emitted[0] == [11, 13]
+    assert {10, 11, 12, 13} - set(emitted[0]) == probe_ids | pair_ids
     validate_lsh_index(spark, path)
 
     # later batch dedups against batch-1 SURVIVORS, now in the index

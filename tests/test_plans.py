@@ -737,3 +737,34 @@ def test_staged_text_scores_survive_the_optimizer(spark):
         assert p.count(marker) == 1, p
     p = token_stats(docs)._jdf.queryExecution().optimizedPlan().toString()
     assert p.count("split(text") == 1, p
+
+
+def _plan_audit_module():
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "plan_audit.py")
+    spec = importlib.util.spec_from_file_location("plan_audit", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_committed_plan_audit_is_clean():
+    """The committed PLANS.md is a complete audit: no query failed to
+    plan and no zero-exchange pin is breached or stale."""
+    pa = _plan_audit_module()
+    with open(pa.PLANS_MD) as f:
+        text = f.read()
+    for section in ("Failed to plan", "INVARIANT BREACH", "INVARIANT PIN STALE"):
+        assert section not in text, section
+    assert "| ngram_jaccard_pairs |" in text
+
+
+def test_plan_audit_rejects_non_directory_without_writing(tmp_path):
+    pa = _plan_audit_module()
+    before = open(pa.PLANS_MD).read()
+    assert pa.main(["--help"]) == 2
+    assert pa.main([str(tmp_path / "missing")]) == 2
+    assert pa.main([str(tmp_path), "extra"]) == 2
+    assert open(pa.PLANS_MD).read() == before

@@ -853,3 +853,28 @@ def test_dedup_within_watermark_bounds_state(spark, tmp_path):
         StreamingIngest(eng, str(tmp_path / "x")).start_replay(
             src, dedup=True, dedup_within="1 hour"
         )
+
+
+def test_micro_batch_tuning_never_raises_session_partitions(spark):
+    """The micro-batch partition floor is clamped to the session setting:
+    a session running 2 shuffle partitions keeps at most 2 inside the
+    block (a floor of 4 would raise it), and both confs restore on exit."""
+    from nibbledb_spark.session import micro_batch_tuning
+
+    conf = spark.conf
+    saved = {
+        k: conf.get(k)
+        for k in ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    }
+    conf.set("spark.sql.shuffle.partitions", "2")
+    try:
+        with micro_batch_tuning(spark, 10):
+            assert int(conf.get("spark.sql.shuffle.partitions")) <= 2
+            assert conf.get("spark.sql.adaptive.enabled") == "false"
+        assert conf.get("spark.sql.shuffle.partitions") == "2"
+        assert conf.get("spark.sql.adaptive.enabled") == saved[
+            "spark.sql.adaptive.enabled"
+        ]
+    finally:
+        for k, v in saved.items():
+            conf.set(k, v)

@@ -7,6 +7,10 @@ whether the parquet scan carries pushed filters — so plan regressions
 are visible in review, not just in runtime.
 
 Usage: python tools/plan_audit.py [sf_dir]   (writes PLANS.md)
+
+``sf_dir`` defaults to the oracle harness's tables
+(``tests/oracle_harness.py`` ``SF_DIR``) and must be a directory;
+anything else exits 2 without touching PLANS.md.
 """
 
 from __future__ import annotations
@@ -19,7 +23,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+from tests.oracle_harness import SF_DIR as DEFAULT_SF_DIR  # noqa: E402
+
+PLANS_MD = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"
+)
 
 JOIN_OPS = [
     "BroadcastHashJoin",
@@ -84,8 +92,8 @@ def plan_of(df, mode: str) -> str:
     return buf.getvalue()
 
 
-def audit(name, fn, spark):
-    df = fn(spark, SF_DIR)
+def audit(name, fn, spark, sf_dir):
+    df = fn(spark, sf_dir)
     p = plan_of(df, "formatted")
     joins = sorted(
         {op for op in JOIN_OPS if op in p},
@@ -101,7 +109,16 @@ def audit(name, fn, spark):
     }
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
+    args = sys.argv[1:] if argv is None else argv
+    sf_dir = args[0] if args else DEFAULT_SF_DIR
+    if len(args) > 1 or not os.path.isdir(sf_dir):
+        print(
+            f"usage: python tools/plan_audit.py [sf_dir] (got {args}); sf_dir "
+            "must be an existing directory. PLANS.md left unchanged.",
+            file=sys.stderr,
+        )
+        return 2
     from nibbledb_spark.queries import QUERIES
     from nibbledb_spark.session import get_spark
 
@@ -109,13 +126,13 @@ def main() -> int:
     rows, failed = [], []
     for name in sorted(QUERIES):
         try:
-            rows.append(audit(name, QUERIES[name], spark))
+            rows.append(audit(name, QUERIES[name], spark, sf_dir))
         except Exception as e:  # pragma: no cover - audit robustness
             failed.append((name, str(e).splitlines()[0][:80]))
     lines = [
         "# Physical-plan audit (auto-generated: `python tools/plan_audit.py`)",
         "",
-        f"Every declared query's plan at {SF_DIR}, summarized by the",
+        f"Every declared query's plan at {sf_dir}, summarized by the",
         "properties that matter at 100 TB. `exchanges` counts shuffle",
         "Exchange operators in the formatted plan (broadcast exchanges and",
         "subtree reprints excluded from runtime cost by reuse); `python`",
@@ -170,7 +187,7 @@ def main() -> int:
         "Every equi-join hashes or merges.",
         "",
     ]
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    with open(PLANS_MD, "w") as f:
         f.write("\n".join(lines))
     print(
         f"PLANS.md: {len(rows)} audited, {len(failed)} failed, "
