@@ -1,12 +1,14 @@
 """TimeSeriesEngine — the storage-backed engine.
 
 Replaces the reference's Irmin/Git shard + index machinery
-(src/shard.re, src/index.re, SURVEY.md §1.3) with a Spark-native
-layout:
+(src/shard.re, src/index.re, SURVEY.md §1.3) with ONE Spark-native
+store format:
 
-- one parquet dataset partitioned by ``bucket = pmod(xxhash64(series), B)``
-  — bounded partition count regardless of series cardinality (the 100 TB
-  stance: raw ``partitionBy(series)`` explodes with millions of series),
+- one parquet dataset partitioned two-level by
+  ``bucket = pmod(xxhash64(series), B)`` and ``day = ts div DAY_US`` —
+  bounded partition count regardless of series cardinality (the 100 TB
+  stance: raw ``partitionBy(series)`` explodes with millions of series)
+  plus directory-level time pruning,
 - rows sorted within files by (series, ts) at write so parquet row-group
   min/max statistics give the same pruning the reference's hand-rolled
   shard-range index provides (src/index.re:92-105) — maintained by the
@@ -14,18 +16,31 @@ layout:
 - the "shard index" observability endpoint (A29) is derived from
   file-level footer stats via a manifest query, not a second store.
 
+``_nibbledb_meta.json`` pins the store's bucket count, layout and
+rollup state; a meta the engine cannot read, or one naming another
+layout or an unknown key, is refused at construction rather than read
+with the wrong bucket routing.
+
+Bucket routing is a Spark expression, never a driver-side lookup: a
+series read filters ``bucket IN (<bucket_sql of each id literal>)``,
+which Catalyst folds to literal partition filters, so building a read
+runs no Spark job.
+
 Mutation model: append for ingest; delete/compact rewrite only the
 affected buckets via a STAGED SWAP (write survivors to a sibling staging
 dir, then flip each bucket directory with atomic FS renames — see
 _staged_swap) — the Spark equivalent of the reference's shard rewrite
 (src/timeseries.re:259-303), with per-bucket atomicity standing in for
-Irmin's transactional store. Like the reference, ingest never
-deduplicates (quirk Q6).
+Irmin's transactional store. The surviving rows come from
+``ts_ops.delete_rows`` (precise or quirk-Q2 membership). Like the
+reference, ingest never deduplicates (quirk Q6).
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 from collections.abc import Sequence
 from typing import Any
 
@@ -57,16 +72,18 @@ STORE_SCHEMA = T.StructType(
     + [T.StructField("bucket", T.IntegerType()), T.StructField("day", T.IntegerType())]
 )
 
-# layout v2 = bucket/day two-level partitioning; v1 stores (bucket only)
-# are not silently mixed — the store's meta pins its layout.
+# the one partition layout (bucket/day); the store's meta pins it, and
+# any other layout number is refused rather than read as this one
 STORE_LAYOUT = 2
+PARTITION_COLS = ("bucket", "day")
 
 # Continuous-aggregate rollup (the hypertable-rollup analogue): per
 # (series, time bucket) mergeable partials. Sums are scaled longs
 # (1e-6 resolution) so merge order never changes the result —
 # incremental maintenance is bit-identical to a full recompute, which
 # is the pinned test. value_sum/value_mean are derived at read.
-ROLLUP_SCALE = 1_000_000
+ROLLUP_DIGITS = 6
+ROLLUP_SCALE = 10**ROLLUP_DIGITS
 ROLLUP_SCHEMA = T.StructType(
     [
         T.StructField("series", T.StringType()),
@@ -79,14 +96,43 @@ ROLLUP_SCHEMA = T.StructType(
 )
 
 
-def bucket_of(series_col, num_buckets: int):
-    return F.pmod(F.xxhash64(series_col), F.lit(num_buckets)).cast("int")
+def bucket_sql(series: str, num_buckets: int) -> str:
+    """THE series -> bucket hash, as SQL over ``series`` (a column name
+    or a string literal). The writer applies it to the series column;
+    reads apply it to id literals, which Catalyst folds to literal
+    partition filters."""
+    return f"CAST(pmod(xxhash64({series}), {num_buckets}) AS INT)"
+
+
+def _sql_string(s: str) -> str:
+    # any id as a SQL string literal with nothing to escape: its UTF-8
+    # bytes as a hex binary literal, cast back to string
+    return f"CAST(X'{s.encode().hex()}' AS STRING)"
 
 
 def day_of(ts_col):
     # floor division (matches Python's // used for read-side bounds;
     # double intermediate is exact: |day| < 2^26)
     return F.floor(ts_col / F.lit(DAY_US)).cast("int")
+
+
+def _merge_partials(partials: DataFrame, every_us: int | None = None) -> DataFrame:
+    """THE rollup partial merge: one row per (series, bucket_us) from
+    any number of partial rows — n and sum_scaled are long sums, min/max
+    are order-free, so the merge is exact in any order. With
+    ``every_us`` the partials are re-bucketed to that coarser nesting
+    width first: for ts = qW + r with W % f == 0, (ts - ts%f)
+    re-bucketed at W lands on qW, the bucket the point maps to
+    directly."""
+    key = F.col("bucket_us")
+    if every_us is not None:
+        key = (key - F.pmod(key, F.lit(every_us))).alias("bucket_us")
+    return partials.groupBy("series", key).agg(
+        F.sum("n").alias("n"),
+        F.sum("sum_scaled").alias("sum_scaled"),
+        F.min("vmin").alias("vmin"),
+        F.max("vmax").alias("vmax"),
+    )
 
 
 class TimeSeriesEngine:
@@ -102,29 +148,25 @@ class TimeSeriesEngine:
     ) -> None:
         self.spark = spark
         self.path = path
-        self.num_buckets = num_buckets
         self.strict_ingest = strict_ingest
-        self._bucket_cache: dict[str, int] = {}
         # A store written with B buckets MUST be read with B buckets or
         # bucket pruning silently misses data: the store's own metadata
-        # wins over the constructor argument. Same for the partition
-        # layout version (a v1 bucket-only store must not be read or
-        # appended with day-partition assumptions).
+        # wins over the constructor argument.
         meta = self._read_meta()
-        if meta is not None:
-            stored = meta.get("num_buckets")
-            if stored is not None and stored != num_buckets:
-                self.num_buckets = int(stored)
-            self.layout = int(meta.get("layout", 1))
-            widths = meta.get("rollup_widths")
-            if widths is None and meta.get("rollup_every_us"):
-                widths = [meta["rollup_every_us"]]  # pre-multi-width meta
-            self.rollup_widths: list[int] = sorted(int(x) for x in (widths or []))
-            self.retention_floor_us: int = int(meta.get("retention_floor_us", 0))
-        else:
-            self.layout = STORE_LAYOUT
-            self.rollup_widths = []
-            self.retention_floor_us = 0
+        if meta is None:  # new store
+            meta = {"num_buckets": num_buckets, "layout": STORE_LAYOUT}
+        unknown = set(meta) - self._META_KEYS
+        if unknown or meta.get("layout") != STORE_LAYOUT or "num_buckets" not in meta:
+            raise ValueError(
+                f"{self._meta_path()}: unsupported store meta {meta!r}: this "
+                f"engine reads layout {STORE_LAYOUT} with num_buckets and "
+                f"optionally {sorted(self._META_KEYS - {'layout', 'num_buckets'})}"
+            )
+        self.num_buckets = int(meta["num_buckets"])
+        self.rollup_widths: list[int] = sorted(
+            int(x) for x in meta.get("rollup_widths", [])
+        )
+        self.retention_floor_us: int = int(meta.get("retention_floor_us", 0))
         # heal any bucket swap interrupted by a crash (see _staged_swap)
         self._recover_staged_swap()
 
@@ -135,34 +177,42 @@ class TimeSeriesEngine:
         return self.rollup_widths[0] if self.rollup_widths else None
 
     _META_FILE = "_nibbledb_meta.json"
+    _META_KEYS = {"num_buckets", "layout", "rollup_widths", "retention_floor_us"}
 
     def _meta_path(self) -> str:
         return os.path.join(self.path, self._META_FILE)
 
     def _read_meta(self) -> dict | None:
+        """The store's meta, or None for a new store. Only a MISSING
+        file means new: an unreadable one raises, because reopening it
+        with the constructor's bucket count would prune reads to the
+        wrong buckets."""
         try:
             with open(self._meta_path()) as f:
-                import json
-
-                return dict(json.load(f))
-        except (OSError, ValueError):
+                meta = json.load(f)
+        except FileNotFoundError:
             return None
+        except ValueError as e:
+            raise ValueError(f"{self._meta_path()}: unreadable store meta: {e}") from e
+        if not isinstance(meta, dict):
+            raise ValueError(f"{self._meta_path()}: store meta is not an object")
+        return meta
 
     def _write_meta(self, *, force: bool = False) -> None:
+        """Stamp the meta (first write, or ``force`` on a change),
+        through a temp file and an atomic rename so a crash never
+        leaves a truncated meta behind."""
         if force or not os.path.exists(self._meta_path()):
             os.makedirs(self.path, exist_ok=True)
-            import json
-
-            meta: dict = {"num_buckets": self.num_buckets, "layout": self.layout}
+            meta: dict = {"num_buckets": self.num_buckets, "layout": STORE_LAYOUT}
             if self.rollup_widths:
                 meta["rollup_widths"] = self.rollup_widths
             if self.retention_floor_us:
                 meta["retention_floor_us"] = self.retention_floor_us
-            with open(self._meta_path(), "w") as f:
+            tmp = self._meta_path() + ".tmp"
+            with open(tmp, "w") as f:
                 json.dump(meta, f)
-
-    def _partition_cols(self) -> list[str]:
-        return ["bucket", "day"] if self.layout >= 2 else ["bucket"]
+            os.replace(tmp, self._meta_path())
 
     # -- write path --------------------------------------------------------
 
@@ -174,13 +224,19 @@ class TimeSeriesEngine:
         wall-clock µs timestamps when absent, appends to the store."""
         if isinstance(records, dict):
             records = [records]
-        rows = [
-            (series, t, tag, v)
-            for (t, tag, v) in validate_points(records, strict=self.strict_ingest)
-        ]
-        df = self.spark.createDataFrame(rows, POINT_SCHEMA)
-        self.append_points(df)
+        rows = validate_points(records, strict=self.strict_ingest)
+        self.append_rows(series, rows)
         return len(rows)
+
+    def append_rows(self, series: str, rows: Sequence[tuple]) -> None:
+        """Append validated ``(ts, tag, value)`` tuples of one series
+        (the output of ``validate_points``); no-op when empty."""
+        if rows:
+            self.append_points(
+                self.spark.createDataFrame(
+                    [(series, t, tag, v) for (t, tag, v) in rows], POINT_SCHEMA
+                )
+            )
 
     def append_points(self, df: DataFrame) -> None:
         """Append canonical-schema points. Sorted within partitions by
@@ -191,16 +247,16 @@ class TimeSeriesEngine:
         file listing; swap the open() for the Hadoop FS API on a
         non-local store)."""
         self._write_meta()
-        out = df.withColumn("bucket", bucket_of(F.col("series"), self.num_buckets))
-        if self.layout >= 2:
-            out = out.withColumn("day", day_of(F.col("ts")))
+        out = df.withColumn(
+            "bucket", F.expr(bucket_sql("series", self.num_buckets))
+        ).withColumn("day", day_of(F.col("ts")))
 
         def _write_main(src: DataFrame) -> None:
             (
                 src.repartition("bucket")
                 .sortWithinPartitions("series", "ts")
                 .write.mode("append")
-                .partitionBy(*self._partition_cols())
+                .partitionBy(*PARTITION_COLS)
                 .parquet(self.path)
             )
 
@@ -233,7 +289,7 @@ class TimeSeriesEngine:
 
                 def _write_width(every: int) -> None:
                     src = (
-                        self._rollup_merge_partials(base, every)
+                        _merge_partials(base, every)
                         if every != finest and every % finest == 0
                         else (base if every == finest
                               else self._rollup_partials(pts, every))
@@ -258,6 +314,14 @@ class TimeSeriesEngine:
         empty or fully-deleted store reads as an empty DataFrame."""
         return self.spark.read.schema(STORE_SCHEMA).parquet(self.path)
 
+    def _in_buckets(self, store: DataFrame, ids: Sequence[str]) -> DataFrame:
+        """Prune ``store`` to the buckets of ``ids``. bucket_sql over
+        literals folds to literal partition filters in Catalyst, so
+        this costs no Spark job; one parsed predicate is one py4j call,
+        where a Column per id costs ~8."""
+        keys = ", ".join(bucket_sql(_sql_string(s), self.num_buckets) for s in ids)
+        return store.where(f"bucket IN ({keys})")
+
     def points(
         self,
         ids: Sequence[str] = (),
@@ -271,43 +335,17 @@ class TimeSeriesEngine:
         partition-prunes BOTH dimensions to only the relevant
         directories before any file is opened."""
         if not os.path.exists(self.path):
-            df = self.spark.createDataFrame([], POINT_SCHEMA)
-            if ts_from is not None:
-                df = df.where(F.col("ts") >= ts_from)
-            if ts_to is not None:
-                df = df.where(F.col("ts") <= ts_to)
-            return df
+            return self.spark.createDataFrame([], POINT_SCHEMA)
         df = self._store()
         if ids:
-            buckets = sorted(
-                {self._bucket_py(series_id) for series_id in ids}
-            )
-            df = df.where(F.col("bucket").isin(buckets))
-            df = df.where(F.col("series").isin(list(ids)))
+            df = self._in_buckets(df, ids).where(F.col("series").isin(list(ids)))
         if ts_from is not None:
-            if self.layout >= 2:
-                df = df.where(F.col("day") >= ts_from // DAY_US)
+            df = df.where(F.col("day") >= ts_from // DAY_US)
             df = df.where(F.col("ts") >= ts_from)
         if ts_to is not None:
-            if self.layout >= 2:
-                df = df.where(F.col("day") <= ts_to // DAY_US)
+            df = df.where(F.col("day") <= ts_to // DAY_US)
             df = df.where(F.col("ts") <= ts_to)
         return df.select("series", "ts", "tag", "value")
-
-    def _bucket_py(self, series_id: str) -> int:
-        # one tiny driver-side round-trip per distinct NEW id (memoized
-        # thereafter). Kept exact with the JVM hash by asking the JVM.
-        cached = self._bucket_cache.get(series_id)
-        if cached is not None:
-            return cached
-        row = (
-            self.spark.range(1)
-            .select(bucket_of(F.lit(series_id), self.num_buckets).alias("b"))
-            .collect()
-        )
-        b = row[0]["b"]
-        self._bucket_cache[series_id] = b
-        return b
 
     # query surface (thin delegation to the pure operators) -----------------
 
@@ -437,29 +475,16 @@ class TimeSeriesEngine:
         pred = ts_ops.delete_predicate(
             ids, ts_from, ts_to, tag_names, tag_values, tag_mode
         )
-        buckets = sorted({self._bucket_py(s) for s in ids}) if ids else None
-
-        store = self._store()
-        affected = store.where(F.col("bucket").isin(buckets)) if buckets else store
-
-        if compat_membership:
-            victims = (
-                affected.where(pred).select("series", "ts").distinct()
-            )
-            survivors = affected.join(victims, ["series", "ts"], "left_anti")
-        else:
-            survivors = affected.where(~pred | pred.isNull())
+        affected = self._store()
+        if ids:
+            affected = self._in_buckets(affected, ids)
+        survivors = ts_ops.delete_rows(affected, pred, membership=compat_membership)
 
         # The staged swap never reads and overwrites the same path: compute
         # which buckets the rewrite touches, write survivors to a sibling
         # staging dir, then flip bucket directories with atomic renames.
-        affected_buckets = (
-            set(buckets)
-            if buckets is not None
-            else {r["bucket"] for r in store.select("bucket").distinct().collect()}
-        )
         out = survivors.repartition("bucket").sortWithinPartitions("series", "ts")
-        self._staged_swap(out, affected_buckets)
+        self._staged_swap(out, self._bucket_ids(affected))
         # rollup partials for the deleted rows can't be subtracted
         # (min/max aren't invertible): refresh the derived table
         self.rollup_rebuild()
@@ -497,6 +522,11 @@ class TimeSeriesEngine:
     def _trash_dir(self) -> str:
         return self.path.rstrip("/") + ".__trash__"
 
+    @staticmethod
+    def _bucket_ids(store: DataFrame) -> set[int]:
+        """The bucket directories a (pruned) store frame reads."""
+        return {r["bucket"] for r in store.select("bucket").distinct().collect()}
+
     def _staged_swap(self, out: DataFrame, affected_buckets: set[int]) -> None:
         """Write ``out``'s buckets to staging, then atomically flip each
         affected bucket directory into the store. Buckets absent from
@@ -506,7 +536,7 @@ class TimeSeriesEngine:
         P = jvm.org.apache.hadoop.fs.Path
         staging, trash = self._staging_dir(), self._trash_dir()
         fs.delete(P(staging), True)
-        out.write.mode("overwrite").partitionBy(*self._partition_cols()).parquet(staging)
+        out.write.mode("overwrite").partitionBy(*PARTITION_COLS).parquet(staging)
         fs.mkdirs(P(trash))
         for b in sorted(affected_buckets):
             live, staged = P(f"{self.path}/bucket={b}"), P(f"{staging}/bucket={b}")
@@ -588,35 +618,9 @@ class TimeSeriesEngine:
             "series", (F.col("ts") - F.pmod(F.col("ts"), every)).alias("bucket_us")
         ).agg(
             F.count("*").alias("n"),
-            F.sum(
-                F.floor(F.col("value") * F.lit(float(ROLLUP_SCALE)) + F.lit(0.5)).cast(
-                    "long"
-                )
-            ).alias("sum_scaled"),
+            F.sum(ts_ops.scaled_long(F.col("value"), ROLLUP_DIGITS)).alias("sum_scaled"),
             F.min("value").alias("vmin"),
             F.max("value").alias("vmax"),
-        )
-
-    def _rollup_merge_partials(
-        self, partials: DataFrame, every_us: int
-    ) -> DataFrame:
-        """Partials at a COARSER nesting width from finer partials
-        (every_us must be a multiple of the finer width). Exact by the
-        same associativity argument as the read-path merge: n and
-        sum_scaled are longs, min/max are order-free — for ts = qW + r
-        with W % f == 0, (ts - ts%f) re-bucketed at W lands on qW, the
-        same bucket the point maps to directly."""
-        every = F.lit(every_us)
-        return partials.groupBy(
-            "series",
-            (F.col("bucket_us") - F.pmod(F.col("bucket_us"), every)).alias(
-                "bucket_us"
-            ),
-        ).agg(
-            F.sum("n").alias("n"),
-            F.sum("sum_scaled").alias("sum_scaled"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
         )
 
     def rollup(
@@ -648,20 +652,14 @@ class TimeSeriesEngine:
             df = df.where(F.col("bucket_us") >= ts_from - ts_from % every)
         if ts_to is not None:
             df = df.where(F.col("bucket_us") <= ts_to)
-        merged = df.groupBy("series", "bucket_us").agg(
-            F.sum("n").alias("n"),
-            F.sum("sum_scaled").alias("sum_scaled"),
-            F.min("vmin").alias("value_min"),
-            F.max("vmax").alias("value_max"),
-        )
         s = F.col("sum_scaled").cast("double") / F.lit(float(ROLLUP_SCALE))
-        return merged.select(
+        return _merge_partials(df).select(
             "series",
             "bucket_us",
             "n",
             s.alias("value_sum"),
-            "value_min",
-            "value_max",
+            F.col("vmin").alias("value_min"),
+            F.col("vmax").alias("value_max"),
             (s / F.col("n")).alias("value_mean"),
         )
 
@@ -670,8 +668,6 @@ class TimeSeriesEngine:
         rollup dir is lost); None refreshes every enabled width."""
         if not os.path.exists(self.path):
             return
-        import shutil
-
         widths = [every_us] if every_us else self.rollup_widths
         pts = self.points()
         floor = self.retention_floor_us
@@ -764,24 +760,14 @@ class TimeSeriesEngine:
     def _rollup_consolidate(self) -> None:
         """Merge accumulated per-append delta rows to one row per
         (series, bucket) in every width: the rollup's own compaction."""
-        import shutil
-
         for every in self.rollup_widths:
             rdir = self._rollup_dir(every)
             if not os.path.exists(rdir):
                 continue
-            df = self.spark.read.schema(ROLLUP_SCHEMA).parquet(rdir)
-            merged = df.groupBy("series", "bucket_us").agg(
-                F.sum("n").alias("n"),
-                F.sum("sum_scaled").alias("sum_scaled"),
-                F.min("vmin").alias("vmin"),
-                F.max("vmax").alias("vmax"),
-            )
+            merged = _merge_partials(self.spark.read.schema(ROLLUP_SCHEMA).parquet(rdir))
             tmp = rdir + ".__rebuild__"
             shutil.rmtree(tmp, ignore_errors=True)
-            merged.select(*[f.name for f in ROLLUP_SCHEMA.fields]).write.mode(
-                "overwrite"
-            ).parquet(tmp)
+            merged.write.mode("overwrite").parquet(tmp)
             shutil.rmtree(rdir, ignore_errors=True)
             os.rename(tmp, rdir)
 
@@ -804,7 +790,7 @@ class TimeSeriesEngine:
         if not os.path.exists(self.path):
             return  # empty store: nothing to compact
         store = self._store()
-        affected = {r["bucket"] for r in store.select("bucket").distinct().collect()}
+        affected = self._bucket_ids(store)
         if files_per_bucket > 1:
             split = F.pmod(F.xxhash64("series"), F.lit(files_per_bucket))
             out = store.repartition(

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from nibbledb_spark.operators.timeseries import scaled_long
+
 # hex digits of md5 prefix used for rate thresholds: 4 -> 16-bit buckets,
 # i.e. rate granularity 1/65536
 _PREFIX_LEN = 4
@@ -330,9 +332,7 @@ def temperature_mix_rates(
     if not 0.0 < budget_frac <= 1.0:
         raise ValueError(f"budget_frac must be in (0, 1]: {budget_frac}")
     counts = df.groupBy(group_col).agg(F.count("*").alias("n_docs"))
-    s = F.floor(F.sqrt(F.col("n_docs").cast("double")) * F.lit(1e6) + F.lit(0.5)).cast(
-        "long"
-    )
+    s = scaled_long(F.sqrt(F.col("n_docs").cast("double")), 6)
     w = Window.partitionBy()
     scaled = counts.withColumn("s_scaled", s).withColumn(
         "denom", F.sum("s_scaled").over(w)

@@ -27,6 +27,8 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from nibbledb_spark.operators.timeseries import scaled_long
+
 
 # The dot/norm/cosine family accepts either Columns or SQL fragments
 # (column names / array literals as text). The string path builds the
@@ -857,11 +859,7 @@ def kmeans_centroids(
             .groupBy("cid", "dim")
             .agg(
                 (
-                    F.sum(
-                        F.floor(F.col("val").cast("double") * 1e9 + F.lit(0.5)).cast(
-                            "long"
-                        )
-                    ).cast("double")
+                    F.sum(scaled_long(F.col("val").cast("double"), 9)).cast("double")
                     / 1e9
                     / F.count("*")
                 ).alias("m")
@@ -1718,11 +1716,7 @@ def pq_codebook_kmeans(
             .groupBy("j", "c", "dim")
             .agg(
                 (
-                    F.sum(
-                        F.floor(
-                            F.col("val").cast("double") * 1e9 + F.lit(0.5)
-                        ).cast("long")
-                    ).cast("double")
+                    F.sum(scaled_long(F.col("val").cast("double"), 9)).cast("double")
                     / 1e9
                     / F.count("*")
                 ).alias("mval")

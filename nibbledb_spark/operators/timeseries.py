@@ -45,6 +45,14 @@ def for_series(points: DataFrame, ids: Sequence[str]) -> DataFrame:
     return points.where(F.col("series").isin(list(ids)))
 
 
+def scaled_long(col: Column, scale: int) -> Column:
+    """``FLOOR(col * 10^scale + 0.5)`` as a long: THE half-up scaled-long
+    quantization. Sums of it are exact and order-independent on any
+    partitioning, stay on the codegen long-sum path, and match the
+    DuckDB oracles, which spell the same rounding in SQL."""
+    return F.floor(col * F.lit(float(10**scale)) + F.lit(0.5)).cast("long")
+
+
 def _canonical_order(descending: bool) -> list[Column]:
     """Q5 canonical total order: (ts, series, value), direction per op."""
     if descending:
@@ -223,9 +231,9 @@ def delete_predicate(
     tag_mode: str = "equals",
 ) -> Column:
     """Victim predicate for delete-since / delete-range, with optional
-    tag filter (reference src/timeseries.re:259-303). Default semantics
-    are the precise predicate delete; the reference's timestamp-membership
-    over-delete (quirk Q2) lives in ``compat_delete_victims``."""
+    tag filter (reference src/timeseries.re:259-303). ``delete_rows``
+    applies it precisely or with the reference's timestamp-membership
+    over-delete (quirk Q2)."""
     pred = F.col("ts") >= F.lit(int(ts_from))
     if ts_to is not None:
         pred = pred & (F.col("ts") <= F.lit(int(ts_to)))
@@ -236,20 +244,21 @@ def delete_predicate(
     return pred
 
 
-def delete_rows(points: DataFrame, predicate: Column) -> DataFrame:
-    """Read-side delete: the surviving rows. The engine persists this via
-    read-filter-overwrite of affected series partitions (Spark's parquet
-    equivalent of the reference's shard rewrite)."""
+def delete_rows(
+    points: DataFrame, predicate: Column, *, membership: bool = False
+) -> DataFrame:
+    """The rows that survive a delete; the engine swaps them in for the
+    affected buckets (Spark's parquet equivalent of the reference's
+    shard rewrite). Precise by default: exactly the ``predicate`` rows
+    go. ``membership`` is quirk Q2 compat mode: the reference deletes
+    every point whose (series, TIMESTAMP) appears among the victims
+    (src/timeseries.re:264-268), so a tag-filtered delete also kills
+    same-ts points that did not match — a left_anti join on the
+    victims' (series, ts)."""
+    if membership:
+        victims = points.where(predicate).select("series", "ts").distinct()
+        return points.join(victims, ["series", "ts"], "left_anti")
     return points.where(~predicate | predicate.isNull())
-
-
-def compat_delete_victims(points: DataFrame, predicate: Column) -> DataFrame:
-    """Quirk Q2 compat mode: the reference deletes every point whose
-    TIMESTAMP appears in the victim set (src/timeseries.re:264-268), so a
-    tag-filtered delete also kills same-ts points that didn't match.
-    Expressed as a left_semi join per (series, ts) of victims."""
-    victims = points.where(predicate).select("series", "ts").distinct()
-    return points.join(victims, ["series", "ts"], "left_semi")
 
 
 # --------------------------------------------------------------------------
@@ -311,7 +320,7 @@ def resample(
     tb = (F.col("ts") - F.pmod(F.col("ts"), F.lit(every_us))).alias("bucket_us")
     agg = points.groupBy(F.col("series"), tb).agg(
         (
-            F.sum(F.floor(F.col("value") * m + F.lit(0.5)).cast("long")).cast("double")
+            F.sum(scaled_long(F.col("value"), value_scale)).cast("double")
             / m
             / F.count("*")
         ).alias("value"),
@@ -482,9 +491,7 @@ def ewma(points: DataFrame, *, window: int = 20, value_scale: int = 6) -> DataFr
         .orderBy(F.col("ts").asc(), F.col("value").asc())
         .rowsBetween(-(window - 1), 0)
     )
-    arr = F.collect_list(
-        F.floor(F.col("value") * F.lit(float(q)) + F.lit(0.5)).cast("long")
-    ).over(w)
+    arr = F.collect_list(scaled_long(F.col("value"), value_scale)).over(w)
     num = F.expr(
         "aggregate(transform(_arr, (v, i) -> shiftleft(v, i)), "
         "CAST(0 AS BIGINT), (a, x) -> a + x)"
@@ -526,9 +533,7 @@ def autocorr(points: DataFrame, lag: int = 1, *, value_scale: int = 2) -> DataFr
     for hotter series."""
     if lag < 1:
         raise ValueError(f"lag must be >= 1: {lag}")
-    x = F.floor(F.col("value") * F.lit(float(10**value_scale)) + F.lit(0.5)).cast(
-        "long"
-    )
+    x = scaled_long(F.col("value"), value_scale)
     # tie-break on the quantized x (monotone-injective in the quantized
     # value domain, so identical to ordering by value — and the same
     # column the oracle's LEAD window orders by)
@@ -581,9 +586,7 @@ def cusum_changepoint(points: DataFrame, *, value_scale: int = 2) -> DataFrame:
     scale=2 and |x|<=5e4 that holds past 40M points per series;
     coarsen ``value_scale`` beyond.
     """
-    x = F.floor(F.col("value") * F.lit(float(10**value_scale)) + F.lit(0.5)).cast(
-        "long"
-    )
+    x = scaled_long(F.col("value"), value_scale)
     w = Window.partitionBy("series").orderBy(F.col("ts").asc(), F.col("x").asc())
     c = (
         points.select("series", "ts", x.alias("x"))
@@ -653,9 +656,7 @@ def linreg_trend(
     """
     if x_unit_us < 1:
         raise ValueError(f"x_unit_us must be >= 1: {x_unit_us}")
-    y = F.floor(F.col("value") * F.lit(float(10**value_scale)) + F.lit(0.5)).cast(
-        "long"
-    )
+    y = scaled_long(F.col("value"), value_scale)
     d = points.select("series", "ts", y.alias("y")).select(
         "series",
         F.expr(f"(ts - min(ts) OVER (PARTITION BY series)) DIV {x_unit_us}").alias(
@@ -712,9 +713,7 @@ def lttb(points: DataFrame, every_us: int, *, value_scale: int = 6) -> DataFrame
     ag = b.groupBy("series", "bucket_us").agg(
         (F.sum("ts").cast("double") / F.count(F.lit(1))).alias("avg_t"),
         (
-            F.sum(F.floor(F.col("value") * F.lit(m) + F.lit(0.5)).cast("long")).cast(
-                "double"
-            )
+            F.sum(scaled_long(F.col("value"), value_scale)).cast("double")
             / F.lit(m)
             / F.count(F.lit(1))
         ).alias("avg_v"),

@@ -90,16 +90,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # SUM(FLOOR(x * 10^s + 0.5)::BIGINT) / 10^s is (a) exact and order-
 # independent, (b) identical on Spark and DuckDB, and (c) a plain long sum
 # (~4x faster than DECIMAL aggregation, which leaves the codegen fast path).
-
-
-def _scaled_long(col, scale: int):
-    m = float(10**scale)
-    return F.floor(col * F.lit(m) + F.lit(0.5)).cast("long")
+# The column form is ts_ops.scaled_long.
 
 
 def _ssum(col, scale: int):
     m = float(10**scale)
-    return F.sum(_scaled_long(col, scale)).cast("double") / F.lit(m)
+    return F.sum(ts_ops.scaled_long(col, scale)).cast("double") / F.lit(m)
 
 
 def _ssum_sql(expr: str, scale: int) -> str:
@@ -941,7 +937,7 @@ def join_salted_orders_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.select(
         "o_orderkey",
         "c_name",
-        _scaled_long(F.col("o_totalprice"), 2).alias("price_c"),
+        ts_ops.scaled_long(F.col("o_totalprice"), 2).alias("price_c"),
     )
 
 
@@ -1316,7 +1312,7 @@ def moving_avg_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     day = F.date_format(F.timestamp_micros(event_ts_us(ev)), "yyyy-MM-dd")
     daily = (
         ev.groupBy(F.col("event_type").alias("series"), day.alias("day"))
-        .agg(F.sum(_scaled_long(F.col("value"), 6)).alias("total"))
+        .agg(F.sum(ts_ops.scaled_long(F.col("value"), 6)).alias("total"))
     )
     w = Window.partitionBy("series").orderBy("day").rowsBetween(-6, 0)
     return daily.select(
@@ -3835,7 +3831,7 @@ def embed_label_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = e.select("label", F.posexplode("embedding").alias("pos", "x"))
     dims = cells.groupBy("label", (F.col("pos") + 1).alias("d")).agg(
         (
-            F.sum(F.floor(F.col("x").cast("double") * F.lit(1e9) + F.lit(0.5)).cast("long"))
+            F.sum(ts_ops.scaled_long(F.col("x").cast("double"), 9))
             .cast("double")
             / F.lit(1e9)
             / F.count(F.lit(1))
@@ -3856,7 +3852,7 @@ def embed_label_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n"),
             (
-                F.sum(F.floor(F.col("c") * F.lit(1e9) + F.lit(0.5)).cast("long"))
+                F.sum(ts_ops.scaled_long(F.col("c"), 9))
                 .cast("double")
                 / F.lit(1e9)
                 / F.count(F.lit(1))
@@ -4350,7 +4346,7 @@ def window_range_frame_30d(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         day.alias("order_day"),
         (
-            F.sum(_scaled_long(F.col("o_totalprice"), 2)).over(w).cast("double") / 100
+            F.sum(ts_ops.scaled_long(F.col("o_totalprice"), 2)).over(w).cast("double") / 100
         ).alias("rev_30d"),
     )
 
@@ -6437,7 +6433,7 @@ def q8_national_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("supp_nation")
     )
     r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    vol_s = _scaled_long(
+    vol_s = ts_ops.scaled_long(
         F.col("l_extendedprice") * (1 - F.col("l_discount")), 4
     )
     base = (
@@ -6499,7 +6495,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1996-02-01").cast("timestamp"))
     )
     p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
-    vol_s = _scaled_long(
+    vol_s = ts_ops.scaled_long(
         F.col("l_extendedprice") * (1 - F.col("l_discount")), 4
     )
     return (
@@ -6554,7 +6550,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rev = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
         F.sum(
-            _scaled_long(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)
+            ts_ops.scaled_long(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)
         ).alias("total_s")
     )
     top = rev.agg(F.max("total_s").alias("max_s"))
@@ -7955,7 +7951,7 @@ def ts_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     pts = points_from_events(spark, sf_dir).select("series", "ts", "value")
-    x = F.floor(F.col("value") * F.lit(10000) + F.lit(0.5)).cast("long")
+    x = ts_ops.scaled_long(F.col("value"), 4)
     fr = (
         W.partitionBy("series")
         .orderBy("ts")
@@ -8078,12 +8074,12 @@ def ts_seasonal_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = pts.select("series", "ts", "value", hod.alias("hod"))
     season = h.groupBy("series", "hod").agg(
         (
-            F.sum(_scaled_long(F.col("value"), 6)).cast("double")
+            F.sum(ts_ops.scaled_long(F.col("value"), 6)).cast("double")
             / 1_000_000
             / F.count("*")
         ).alias("hod_mean"),
         (
-            F.sum(_scaled_long(F.col("value") * F.col("value"), 6)).cast("double")
+            F.sum(ts_ops.scaled_long(F.col("value") * F.col("value"), 6)).cast("double")
             / 1_000_000
             / F.count("*")
         ).alias("hod_m2"),
@@ -8282,7 +8278,7 @@ def ts_corr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = (
         pts.groupBy("series", F.expr("ts DIV 3600000000").alias("bucket"))
         .agg(
-            F.sum(_scaled_long(F.col("value"), 2)).alias("sv"),
+            F.sum(ts_ops.scaled_long(F.col("value"), 2)).alias("sv"),
             F.count(F.lit(1)).alias("nb"),
         )
         .select("series", "bucket", F.expr("sv DIV nb").alias("xm"))
@@ -8347,7 +8343,7 @@ def window_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of sorting the world into one partition."""
     orders = _t(spark, sf_dir, "orders")
     s = orders.groupBy("o_custkey").agg(
-        F.sum(_scaled_long(F.col("o_totalprice"), 2)).alias("spend_c")
+        F.sum(ts_ops.scaled_long(F.col("o_totalprice"), 2)).alias("spend_c")
     )
     w = Window.orderBy(F.col("spend_c").desc(), F.col("o_custkey").asc())
     return s.select(

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from nibbledb_spark.engine import TimeSeriesEngine
 from nibbledb_spark.operators import timeseries as ts_ops
-from nibbledb_spark.schema import POINT_SCHEMA, ValidationError, validate_points
+from nibbledb_spark.schema import ValidationError, validate_points
 
 DEFAULT_MAX_BUFFER_SIZE = 100_000  # reference src/main.re:9
 DEFAULT_SHARD_SIZE = 20_000  # reference src/main.re:10
@@ -104,6 +104,13 @@ class Router:
         compat_q1: bool = False,
         compat_q2: bool = False,
     ) -> None:
+        # a size below 1 never shrinks the buffer in _post's spill loop,
+        # which would then spin forever holding the lock
+        if max_buffer_size < 1 or shard_size < 1:
+            raise ValueError(
+                f"max_buffer_size and shard_size must be >= 1: "
+                f"{max_buffer_size}, {shard_size}"
+            )
         self.engine = engine
         self.max_buffer_size = max_buffer_size
         self.shard_size = shard_size
@@ -140,11 +147,7 @@ class Router:
                 self._flush_rows(series, batch)
 
     def _flush_rows(self, series: str, rows: list) -> None:
-        if rows:
-            df = self.engine.spark.createDataFrame(
-                [(series, t, tag, v) for (t, tag, v) in rows], POINT_SCHEMA
-            )
-            self.engine.append_points(df)
+        self.engine.append_rows(series, rows)
 
     def _flush(self, ids: list[str] | None = None) -> None:
         """Flush listed (or all) series buffers to the store (A5;

@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from nibbledb_spark.engine import TimeSeriesEngine
+from nibbledb_spark.operators.timeseries import scaled_long
 
 # raw event schema of the driver's events table (ts is TIMESTAMP(MICROS)
 # isAdjustedToUTC=false in the parquet => TIMESTAMP_NTZ). NOTE: streaming
@@ -166,7 +167,7 @@ def windowed_counts(
             F.count("*").alias("n"),
             # scaled-long sum: exact, order-independent, codegen fast path
             (
-                F.sum(F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)).cast("long"))
+                F.sum(scaled_long(F.col("value"), 6))
                 .cast("double")
                 / F.lit(1e6)
             ).alias("sum_value"),
@@ -289,90 +290,6 @@ def series_stats_batch(pdf, alpha: float = 0.2):
         "last_ts": int(pdf["ts"].max()),
         "ewma": ewma,
     }
-
-
-def stateful_series_stats_v2(points: DataFrame, *, alpha: float = 0.2) -> DataFrame:
-    """``stateful_series_stats`` on Spark 4's state-v2 API
-    (``transformWithStateInPandas``, SPARK-49560) — same recurrence,
-    same output schema, so the convergence test pins both
-    implementations to the identical batch oracle.
-
-    Why carry both: state v2 is where custom stateful operators are
-    headed — typed composite state (value/list/map handles instead of
-    one opaque tuple), event-time timers for TTL/session logic, and the
-    RocksDB state store backing, which is the 100 TB answer to state
-    that outgrows executor heap (incremental checkpointing, spill to
-    disk). The v1 operator stays because it runs on the default HDFS
-    state store; v2 REQUIRES the RocksDB provider
-    (``spark.sql.streaming.stateStore.providerClass`` =
-    ``...RocksDBStateStoreProvider``) — set it on the session before
-    starting the query (the convergence test shows the wiring).
-
-    Environmental seam: TWS's streaming Python worker imports
-    google.protobuf (its state-server protocol). Where protobuf is
-    absent the JVM-integrated convergence test importorskips, and the
-    processor's recurrence + state plumbing stays covered by the
-    fake-handle unit test (tests/test_streaming.py) — the pairing is
-    itself pinned by ``test_stateful_v2_env_skip_is_paired_coverage``.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _SeriesStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("stats", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            (series,) = key
-            if self._state.exists():
-                n, total, vmin, vmax, last_ts, ewma = self._state.get()
-            else:
-                n, total, vmin, vmax, last_ts, ewma = 0, 0.0, None, None, None, None
-            for pdf in rows:
-                pdf = pdf.sort_values(["ts", "value"])
-                vals = pdf["value"].to_numpy()
-                ts = pdf["ts"].to_numpy()
-                if len(vals) == 0:
-                    continue
-                n += len(vals)
-                total += float(vals.sum())
-                bmin, bmax = float(vals.min()), float(vals.max())
-                vmin = bmin if vmin is None else min(vmin, bmin)
-                vmax = bmax if vmax is None else max(vmax, bmax)
-                last_ts = (
-                    int(ts[-1]) if last_ts is None else max(last_ts, int(ts[-1]))
-                )
-                for v in vals:  # O(batch) scalar recurrence — inherently serial
-                    ewma = (
-                        float(v)
-                        if ewma is None
-                        else alpha * float(v) + (1 - alpha) * ewma
-                    )
-            self._state.update((n, total, vmin, vmax, last_ts, ewma))
-            yield pd.DataFrame(
-                [
-                    {
-                        "series": series,
-                        "n": n,
-                        "total": total,
-                        "vmin": vmin,
-                        "vmax": vmax,
-                        "last_ts": last_ts,
-                        "ewma": ewma,
-                    }
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return points.groupBy("series").transformWithStateInPandas(
-        _SeriesStats(), SERIES_STATS_SCHEMA, "update", "none"
-    )
 
 
 def interval_join_streams(

@@ -172,6 +172,74 @@ def test_store_bucket_count_is_sticky(spark, tmp_path):
     assert reopened.last(["butterflies"], 1).count() == 1
 
 
+def test_damaged_meta_is_refused_not_reset(spark, tmp_path):
+    """A truncated store meta must not reopen the store as a new one
+    with the constructor's bucket count — reads would then prune to the
+    wrong buckets and silently return nothing."""
+    from nibbledb_spark.engine import TimeSeriesEngine
+
+    path = str(tmp_path / "torn")
+    eng = TimeSeriesEngine(spark, path, num_buckets=8)
+    eng.write("butterflies", WIRE_BUTTERFLIES)
+    meta = eng._meta_path()
+    with open(meta) as f:
+        text = f.read()
+    with open(meta, "w") as f:
+        f.write(text[: len(text) // 2])
+    with pytest.raises(ValueError, match="unreadable store meta"):
+        TimeSeriesEngine(spark, path, num_buckets=32)
+
+
+def test_meta_rewrite_survives_a_failed_write(spark, tmp_path, monkeypatch):
+    """A crash while rewriting the meta leaves the previous meta whole:
+    it is written to a temp file and renamed into place."""
+    import json
+
+    from nibbledb_spark.engine import TimeSeriesEngine
+
+    eng = TimeSeriesEngine(spark, str(tmp_path / "store"), num_buckets=8)
+    eng.write("butterflies", WIRE_BUTTERFLIES)
+    with open(eng._meta_path()) as f:
+        before = f.read()
+
+    def torn_dump(obj, f):
+        f.write(json.dumps(obj)[:5])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        eng._write_meta(force=True)
+    with open(eng._meta_path()) as f:
+        assert f.read() == before
+
+
+@pytest.mark.parametrize(
+    "meta",
+    [
+        {"num_buckets": 8, "layout": 1},
+        {"num_buckets": 8},
+        {"num_buckets": 8, "layout": 2, "rollup_every_us": 3_600_000_000},
+    ],
+    ids=["layout1", "no_layout", "unknown_key"],
+)
+def test_foreign_store_meta_is_refused(spark, tmp_path, meta):
+    """Only the bucket/day layout exists: a meta naming another layout
+    (or none, the pre-layout convention) or a key the engine does not
+    know is refused at construction, not read with the wrong
+    partitioning."""
+    import json
+    import os
+
+    from nibbledb_spark.engine import TimeSeriesEngine
+
+    path = str(tmp_path / "foreign")
+    os.makedirs(path)
+    with open(os.path.join(path, "_nibbledb_meta.json"), "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="unsupported store meta"):
+        TimeSeriesEngine(spark, path)
+
+
 def test_staged_swap_crash_recovery(spark, tmp_path):
     """A crash between the two renames of the staged bucket swap parks
     the live bucket dir in trash. Engine construction must rename it
@@ -180,7 +248,9 @@ def test_staged_swap_crash_recovery(spark, tmp_path):
     import os
     import shutil
 
-    from nibbledb_spark.engine import TimeSeriesEngine
+    from pyspark.sql import functions as F
+
+    from nibbledb_spark.engine import TimeSeriesEngine, bucket_sql
 
     store = str(tmp_path / "store")
     eng = TimeSeriesEngine(spark, store, num_buckets=4)
@@ -190,7 +260,7 @@ def test_staged_swap_crash_recovery(spark, tmp_path):
 
     # simulate the torn state: live bucket dir moved to trash, staging
     # left behind, live dir gone
-    b = eng._bucket_py("crashy")
+    b = spark.range(1).select(F.expr(bucket_sql("'crashy'", eng.num_buckets))).first()[0]
     live = os.path.join(store, f"bucket={b}")
     trash = eng._trash_dir()
     os.makedirs(trash, exist_ok=True)

@@ -12,10 +12,12 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
+from nibbledb_spark.engine import bucket_sql
 from nibbledb_spark.operators import timeseries as ts_ops
 
 SF = "/root/testdata/sf0.01"
@@ -64,11 +66,44 @@ def test_series_read_prunes_buckets(store_engine):
     df = store_engine.points(["s1"])
     p = plan(df)
     assert "PartitionFilters" in p
-    b = store_engine._bucket_py("s1")
+    b = (
+        store_engine.spark.range(1)
+        .select(F.expr(bucket_sql("'s1'", store_engine.num_buckets)))
+        .first()[0]
+    )
     assert f"bucket#" in p or f"EqualTo(bucket,{b})" in p or f"bucket IN ({b})" in p or "isnotnull(bucket" in p
     # the partition count actually read must be 1 of 8
     scanned = df.select(F.spark_partition_id()).distinct()
     assert scanned.count() <= 2
+
+
+def test_series_read_builds_without_jobs(store_engine):
+    """Building a series read launches no Spark job, even for ids the
+    engine has never seen: bucket routing is an expression, and its
+    plan carries the bucket ids as literal partition filters."""
+    spark = store_engine.spark
+    sc = spark.sparkContext
+    ids = ["never-seen-a", "never-seen-b", "s1", "s2"]
+    group = "series_read_builds_without_jobs"
+    sc.setJobGroup(group, "plan-only read build")
+    try:
+        before = list(sc.statusTracker().getJobIdsForGroup(group))
+        df = store_engine.points(ids)
+        after = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert before == [] and after == []
+
+    want = {
+        r[0]
+        for r in spark.createDataFrame([(i,) for i in ids], "s string")
+        .select(F.expr(bucket_sql("s", store_engine.num_buckets)))
+        .collect()
+    }
+    m = re.search(r"PartitionFilters: \[[^\]]*bucket#\d+ IN \(([\d, ]+)\)", plan(df))
+    assert m, plan(df)
+    assert {int(b) for b in m.group(1).split(",")} == want
 
 
 def test_projection_prunes_columns(spark):

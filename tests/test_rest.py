@@ -572,6 +572,15 @@ def test_full_wire_protocol_over_http(engine, tmp_path):
         server.shutdown()
 
 
+@pytest.mark.parametrize("kw", [{"shard_size": 0}, {"max_buffer_size": 0}])
+def test_router_rejects_buffer_sizes_below_one(engine, kw):
+    """A buffer or shard size below 1 never shrinks the buffer in the
+    POST spill loop, which would spin forever holding the router lock:
+    refused at construction."""
+    with pytest.raises(ValueError, match=">= 1"):
+        Router(engine, **kw)
+
+
 def test_client_loop_zero_posts_once():
     """client.re's post_loop sends once even at the default loop=0
     (loop(0) fires the first request before checking n > 1); the port

@@ -187,9 +187,11 @@ def test_delete_rows_precise(fixture_points):
 def test_compat_delete_membership(fixture_points, spark):
     # Q2: same-ts point NOT matching the tag filter is also deleted
     pred = ts.delete_predicate(["butterflies"], T0, T0, ["scientist"], ["perpetua"])
-    victims = ts.compat_delete_victims(fixture_points, pred)
+    surv = ts.delete_rows(fixture_points, pred, membership=True)
+    victims = fixture_points.join(surv, ["series", "ts"], "left_anti")
     # both T0 butterflies points share the timestamp -> both are victims
     assert victims.where("series = 'butterflies'").count() == 2
+    assert surv.count() == fixture_points.count() - 2
 
 
 # -- metadata -------------------------------------------------------------------
