@@ -1554,23 +1554,12 @@ def main() -> int:
     # raw Spark total can't distinguish regression from a slow host.
     # duckdb_total measured in the same sitting is the normalizer —
     # ratio = value / duckdb_total is host-speed-invariant.
-    import duckdb
-
-    tables = (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split()
     duck_timings: dict[str, float] = {}
     duck_spread: dict[str, list[float]] = {}
     for name in headline:
         if name not in ORACLE:
             continue
-        con = duckdb.connect()
-        for t in tables:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{SF_DIR}/{t}.parquet')"
-            )
+        con = _duck_connect(SF_DIR)
         con.execute(ORACLE[name]).df()  # warm (pandas channel, like Spark)
         samples = []
         for _ in range(3):
@@ -1615,12 +1604,7 @@ def main() -> int:
     for name in DEEP:
         if name not in ORACLE:
             continue
-        con = duckdb.connect()
-        for t in tables:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{SF_DIR}/{t}.parquet')"
-            )
+        con = _duck_connect(SF_DIR)
         con.execute(ORACLE[name]).df()  # warm
         samples = []
         for _ in range(3):
@@ -1641,12 +1625,7 @@ def main() -> int:
         for name in headline:
             if name not in ORACLE:
                 continue
-            con = duckdb.connect()
-            for t in tables:
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"read_parquet('{SF_DIR}/{t}.parquet')"
-                )
+            con = _duck_connect(SF_DIR)
             samples = []
             con.execute(ORACLE[name]).df()  # warm (pandas channel, like Spark)
             for _ in range(5):

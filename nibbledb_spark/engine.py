@@ -26,6 +26,19 @@ series read filters ``bucket IN (<bucket_sql of each id literal>)``,
 which Catalyst folds to literal partition filters, so building a read
 runs no Spark job.
 
+One listing per write generation, like the reference's in-memory shard
+ranges (src/index.re:19): reads share one held store DataFrame, whose
+file index holds the listing, and only this engine's own mutations
+(append, staged swap, crash heal) drop it. The engine is the store's
+single writer, as the reference's one process is (src/main.re:225-227):
+another writer's files are seen by an engine built after that write, or
+after this engine's next one.
+
+Per-series top-n is bounded: ``last``/``first`` over k distinct ids
+return at most n*k rows (quirk Q4), so the engine adds ``limit(n*k)``,
+which moves no row and plans the global sort as one
+TakeOrderedAndProject instead of a range exchange.
+
 Mutation model: append for ingest; delete/compact rewrite only the
 affected buckets via a STAGED SWAP (write survivors to a sibling staging
 dir, then flip each bucket directory with atomic FS renames — see
@@ -38,9 +51,11 @@ reference, ingest never deduplicates (quirk Q6).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
+import threading
 from collections.abc import Sequence
 from typing import Any
 
@@ -96,6 +111,11 @@ ROLLUP_SCHEMA = T.StructType(
 )
 
 
+# Spark plans ORDER BY ... LIMIT k as one TakeOrderedAndProject for k
+# below this (spark.sql.execution.topKSortFallbackThreshold's default)
+_TOP_K_MAX = 2**31 - 16
+
+
 def bucket_sql(series: str, num_buckets: int) -> str:
     """THE series -> bucket hash, as SQL over ``series`` (a column name
     or a string literal). The writer applies it to the series column;
@@ -135,8 +155,23 @@ def _merge_partials(partials: DataFrame, every_us: int | None = None) -> DataFra
     )
 
 
+def _drops_listing(mutation):
+    """A store mutation: when it returns, or raises partway, the held
+    store listing is dropped, so the next read lists the store again."""
+
+    @functools.wraps(mutation)
+    def wrapper(self, *args, **kwargs):
+        try:
+            return mutation(self, *args, **kwargs)
+        finally:
+            self._drop_listing()
+
+    return wrapper
+
+
 class TimeSeriesEngine:
-    """Batch engine over a bucket-partitioned parquet points store."""
+    """Batch engine over a bucket-partitioned parquet points store; the
+    store's single writer (see the module docstring)."""
 
     def __init__(
         self,
@@ -167,6 +202,10 @@ class TimeSeriesEngine:
             int(x) for x in meta.get("rollup_widths", [])
         )
         self.retention_floor_us: int = int(meta.get("retention_floor_us", 0))
+        # the held store listing and its write generation (see _store)
+        self._listing: DataFrame | None = None
+        self._generation = 0
+        self._listing_lock = threading.Lock()
         # heal any bucket swap interrupted by a crash (see _staged_swap)
         self._recover_staged_swap()
 
@@ -238,6 +277,7 @@ class TimeSeriesEngine:
                 )
             )
 
+    @_drops_listing
     def append_points(self, df: DataFrame) -> None:
         """Append canonical-schema points. Sorted within partitions by
         (series, ts) so row-group stats stay tight for time pruning; the
@@ -311,8 +351,27 @@ class TimeSeriesEngine:
 
     def _store(self) -> DataFrame:
         """The raw store (with bucket column), schema-explicit so an
-        empty or fully-deleted store reads as an empty DataFrame."""
-        return self.spark.read.schema(STORE_SCHEMA).parquet(self.path)
+        empty or fully-deleted store reads as an empty DataFrame.
+
+        One listing per write generation: the frame is held (its file
+        index holds the listing) until this engine's next store
+        mutation drops it. A listing that began before a mutation
+        finished serves its own read but is never installed, so the
+        read after a flush always sees the flushed points."""
+        with self._listing_lock:
+            if self._listing is not None:
+                return self._listing
+            generation = self._generation
+        df = self.spark.read.schema(STORE_SCHEMA).parquet(self.path)
+        with self._listing_lock:
+            if self._generation == generation:
+                self._listing = df
+        return df
+
+    def _drop_listing(self) -> None:
+        with self._listing_lock:
+            self._generation += 1
+            self._listing = None
 
     def _in_buckets(self, store: DataFrame, ids: Sequence[str]) -> DataFrame:
         """Prune ``store`` to the buckets of ``ids``. bucket_sql over
@@ -349,17 +408,27 @@ class TimeSeriesEngine:
 
     # query surface (thin delegation to the pure operators) -----------------
 
+    @staticmethod
+    def _top_n(df: DataFrame, ids: Sequence[str], n: int) -> DataFrame:
+        """Quirk Q4: k distinct ids return at most n*k rows, so a limit
+        of n*k changes no row or order, but it plans the global sort as
+        one TakeOrderedAndProject instead of a range exchange. Without
+        ids (every series) or past Spark's top-K threshold it is left
+        off."""
+        bound = n * len(set(ids))
+        return df.limit(bound) if ids and 0 <= bound < _TOP_K_MAX else df
+
     def last(self, ids: Sequence[str], n: int) -> DataFrame:
-        return ts_ops.last_n(self.points(ids), (), n)
+        return self._top_n(ts_ops.last_n(self.points(ids), (), n), ids, n)
 
     def latest(self, ids: Sequence[str]) -> DataFrame:
-        return ts_ops.latest(self.points(ids), ())
+        return self.last(ids, 1)
 
     def first(self, ids: Sequence[str], n: int) -> DataFrame:
-        return ts_ops.first_n(self.points(ids), (), n)
+        return self._top_n(ts_ops.first_n(self.points(ids), (), n), ids, n)
 
     def earliest(self, ids: Sequence[str]) -> DataFrame:
-        return ts_ops.earliest(self.points(ids), ())
+        return self.first(ids, 1)
 
     def since(self, ids: Sequence[str], ts_from: int) -> DataFrame:
         return ts_ops.since(self.points(ids, ts_from=ts_from), (), ts_from)
@@ -527,6 +596,7 @@ class TimeSeriesEngine:
         """The bucket directories a (pruned) store frame reads."""
         return {r["bucket"] for r in store.select("bucket").distinct().collect()}
 
+    @_drops_listing
     def _staged_swap(self, out: DataFrame, affected_buckets: set[int]) -> None:
         """Write ``out``'s buckets to staging, then atomically flip each
         affected bucket directory into the store. Buckets absent from
@@ -555,17 +625,20 @@ class TimeSeriesEngine:
             os.path.exists(self._trash_dir()) or os.path.exists(self._staging_dir())
         ):
             return  # fast path without JVM round-trips
-        jvm, fs = self._fs()
-        P = jvm.org.apache.hadoop.fs.Path
-        trash = P(self._trash_dir())
-        if fs.exists(trash):
-            for status in fs.listStatus(trash):
-                name = status.getPath().getName()
-                live = P(f"{self.path}/{name}")
-                if name.startswith("bucket=") and not fs.exists(live):
-                    fs.rename(status.getPath(), live)
-            fs.delete(trash, True)
-        fs.delete(P(self._staging_dir()), True)
+        try:
+            jvm, fs = self._fs()
+            P = jvm.org.apache.hadoop.fs.Path
+            trash = P(self._trash_dir())
+            if fs.exists(trash):
+                for status in fs.listStatus(trash):
+                    name = status.getPath().getName()
+                    live = P(f"{self.path}/{name}")
+                    if name.startswith("bucket=") and not fs.exists(live):
+                        fs.rename(status.getPath(), live)
+                fs.delete(trash, True)
+            fs.delete(P(self._staging_dir()), True)
+        finally:
+            self._drop_listing()
 
     # -- continuous-aggregate rollup (hypertable-rollup analogue) ------------
     # A materialized downsample maintained INCREMENTALLY: each append also

@@ -1178,7 +1178,12 @@ def ivf_index_add(
     ``vn`` (the gate's assignment keeps both), those rows are written
     directly — no vector re-join, no norm re-fold (r16 opt; the values
     are deterministic projections of the same rows, so the postings are
-    identical either way)."""
+    identical either way).
+
+    Duplicate ids: with ``v``/``vn`` in ``assignments`` the postings
+    are the assignment rows semi-filtered by id, so a batch repeating
+    an id gets one posting per DISTINCT id (the gate's assignments hold
+    one row per id); without them, one posting per input row."""
     if assignments is not None:
         keys = new_vectors.select(F.col(id_col).alias("id")).distinct()
         if {"v", "vn"} <= set(assignments.columns):
@@ -1399,8 +1404,12 @@ def semdedup_gate(
     the vs-index join reads only the probed cid partitions of the
     posting lists (partition-pruned directories); the intra-batch pair
     join is batch x batch within clusters; the add appends cid-keyed
-    parquet. The id-guard anti-join scans the postings' id column —
-    the same read class as the LSH gate's sizes-table check.
+    parquet. The id-guard join scans the postings' id column — the
+    same read class as the LSH gate's sizes-table check.
+
+    Reserved name: the sink adds a helper column ``__in_index`` to the
+    batch (the replay-guard flag; ``on_pass`` never sees it), so a
+    batch frame must not carry a column of that name.
     """
     cents = spark.read.parquet(f"{path}/centroids")
 
@@ -1504,16 +1513,16 @@ def semdedup_gate(
             # as the survivors themselves: a left join against the
             # posting ids flags already-indexed rows, so the add below
             # is a cache filter instead of its own postings re-read +
-            # anti-join stages (r16 opt — postings ids are unique by
-            # construction, one row per vector, so the join never
-            # multiplies rows)
+            # anti-join stages (r16 opt). The flag side is distinct, so
+            # an id posted twice (a batch added with a repeated id, or
+            # a partly committed add) cannot multiply survivors.
             flagged = (
                 batch.join(drops, id_col, "left_anti")
                 .join(
                     post.select(
                         F.col("id").alias(id_col),
                         F.lit(True).alias("__in_index"),
-                    ),
+                    ).distinct(),
                     id_col,
                     "left",
                 )

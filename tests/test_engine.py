@@ -538,3 +538,175 @@ def test_retention_drops_raw_keeps_rollup_aggregates(spark, tmp_path):
     with pytest.raises(ValueError, match="primary data"):
         eng.rollup_rebuild(HOUR)
     assert not os.path.exists(eng._rollup_dir(HOUR))
+
+
+# ---------------------------------------------------------------------------
+# one store listing per write generation
+# ---------------------------------------------------------------------------
+
+
+def _rows(t0, n):
+    return [(t0 + i, {}, float(i)) for i in range(n)]
+
+
+def test_each_store_mutation_starts_a_new_listing(spark, tmp_path):
+    """The engine holds one store listing between its own writes. Every
+    mutation drops it, so the read built after each one (on the same
+    instance) sees the change."""
+    import os
+    import shutil
+
+    from nibbledb_spark.engine import TimeSeriesEngine
+    from nibbledb_spark.schema import POINT_SCHEMA
+
+    eng = TimeSeriesEngine(spark, str(tmp_path / "store"), num_buckets=4)
+    eng.append_rows("a", _rows(1000, 6))
+    eng.append_rows("b", _rows(2000, 6))
+
+    # a bucket parked in trash, as a crash between the swap's renames
+    # leaves it: the read lists without it, and the heal that engine
+    # construction runs puts it back
+    parked = sorted(d for d in os.listdir(eng.path) if d.startswith("bucket="))[0]
+    os.makedirs(eng._trash_dir())
+    shutil.move(os.path.join(eng.path, parked), eng._trash_dir())
+    assert eng.length() < 12
+    eng._recover_staged_swap()
+    assert eng.length() == 12
+
+    eng.append_rows("b", _rows(2006, 6))
+    assert eng.length() == 18
+    eng.enable_rollup(1000)
+    eng.append_points(
+        spark.createDataFrame([("c", 3000 + i, {}, 1.0) for i in range(4)], POINT_SCHEMA)
+    )
+    assert eng.length() == 22
+    eng.delete(["a"], 1000, 1002)
+    assert eng.length() == 19
+    eng.compact()  # rewrites every file: a stale listing names gone ones
+    assert eng.length() == 19 and eng.length(["a"]) == 3
+    eng.apply_retention(2000)  # drops the rest of "a"
+    assert eng.length() == 16 and eng.length(["a"]) == 0
+
+
+def test_reads_without_a_write_share_one_listing(engine):
+    engine.append_rows("a", _rows(1000, 4))
+    held = engine._store()
+    assert engine.last(["a"], 2).count() == 2
+    assert engine.length(["a"]) == 4
+    assert engine._store() is held
+
+
+def test_listing_begun_before_an_append_is_not_installed(spark, engine, monkeypatch):
+    """A read that lists the store while an append lands (the Router's
+    flush thread racing a reader) serves its own result from that
+    listing but must not install it: the next read re-lists and counts
+    the appended rows."""
+    engine.append_rows("a", _rows(1000, 4))
+    reader = type(spark.read)
+    list_store = reader.parquet
+    raced = []
+
+    def list_then_append(self, *paths, **kwargs):
+        df = list_store(self, *paths, **kwargs)
+        if paths == (engine.path,) and not raced:
+            raced.append(True)
+            engine.append_rows("a", _rows(2000, 3))
+        return df
+
+    monkeypatch.setattr(reader, "parquet", list_then_append)
+    assert engine.length() == 4  # listed before the append landed
+    assert engine.length() == 7
+
+
+def test_failed_append_still_starts_a_new_listing(spark, engine, monkeypatch):
+    """An append whose write raises after its files landed still drops
+    the held listing, so the next read sees what was written."""
+    engine.append_rows("a", _rows(1000, 4))
+    assert engine.length() == 4
+    writer = type(spark.range(1).write)
+    write = writer.parquet
+
+    def write_then_fail(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)
+        raise OSError("commit lost")
+
+    monkeypatch.setattr(writer, "parquet", write_then_fail)
+    with pytest.raises(OSError, match="commit lost"):
+        engine.append_rows("a", _rows(2000, 3))
+    monkeypatch.undo()
+    assert engine.length() == 7
+
+
+def test_reads_racing_appends_see_every_finished_append(engine):
+    """One writer (the Router flushes under one lock) appends while
+    more readers than cores re-read the store: a read that starts after
+    an append returned counts its rows, however listings and appends
+    interleave, and the writer reads its own write exactly."""
+    import sys
+    import threading
+
+    appends, batch = 4, 3
+    done = [0]  # appends finished; the writer is its only mutator
+    errors: list[str] = []
+    stop = threading.Event()
+
+    def writer() -> None:
+        try:
+            for k in range(1, appends + 1):
+                engine.append_rows("w", _rows(1000 * k, batch))
+                done[0] = k
+                if engine.length() != k * batch:
+                    errors.append(f"writer missed its append {k}")
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(f"writer: {e}"[:500])
+        finally:
+            stop.set()
+
+    def reader(i: int) -> None:
+        try:
+            while not stop.is_set():
+                floor = done[0] * batch
+                got = engine.length()
+                if got < floor:
+                    errors.append(f"reader {i} read {got} rows after {floor} landed")
+        except Exception as e:
+            errors.append(f"reader {i}: {e}"[:500])
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=writer)]
+        threads += [threading.Thread(target=reader, args=(i,)) for i in range(6)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        stop.set()
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert engine.length() == appends * batch
+
+
+# ---------------------------------------------------------------------------
+# bounded per-series top-n
+# ---------------------------------------------------------------------------
+
+
+def test_bounded_top_n_matches_the_unbounded_operators(spark, engine):
+    """last/first/latest/earliest carry a limit of n * (distinct ids);
+    it must change no row and no order of the unbounded operators,
+    including timestamps tied across series, duplicate and unknown ids,
+    and n past the series length."""
+    from nibbledb_spark.operators import timeseries as ts_ops
+
+    engine.append_rows("a", [(t, {"k": "x"}, 1.0) for t in (10, 20, 30, 40)])
+    engine.append_rows("b", [(t, {"k": "y"}, v) for t, v in ((20, 1.0), (30, 2.0), (30, 1.0))])
+    for ids in (["a", "b"], ["a", "a"], ["b", "zz"]):
+        pts = engine.points(ids)
+        for n in (2, 50):
+            assert engine.last(ids, n).collect() == ts_ops.last_n(pts, (), n).collect()
+            assert engine.first(ids, n).collect() == ts_ops.first_n(pts, (), n).collect()
+        assert engine.latest(ids).collect() == ts_ops.last_n(pts, (), 1).collect()
+        assert engine.earliest(ids).collect() == ts_ops.first_n(pts, (), 1).collect()

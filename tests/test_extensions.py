@@ -5191,6 +5191,40 @@ def test_semdedup_gate_replay_idempotent_and_cross_batch(spark, tmp_path):
     }
 
 
+def test_semdedup_gate_posting_id_twice_passes_survivor_once(spark, tmp_path):
+    """The replay guard's flag side is distinct: an id posted twice (a
+    batch that repeated it, added without assignments) must not
+    multiply that id's survivor row on its replay."""
+    from nibbledb_spark.operators.similarity import (
+        build_ivf_index,
+        ivf_index_add,
+        semdedup_gate,
+    )
+
+    def vec(d):
+        return [1.0 if i == d else 0.0 for i in range(8)]
+
+    schema = "vec_id long, embedding array<double>"
+    seed = spark.createDataFrame([(0, vec(0)), (1, vec(4))], schema)
+    idx = str(tmp_path / "sdidx")
+    build_ivf_index(
+        seed,
+        idx,
+        centroids=seed.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")),
+    )
+    ivf_index_add(spark, idx, spark.createDataFrame([(11, vec(1)), (11, vec(1))], schema))
+    post = spark.read.parquet(f"{idx}/postings")
+    assert post.where("id = 11").count() == 2
+
+    passed: list[int] = []
+    sink = semdedup_gate(
+        spark, idx, eps=0.8, on_pass=lambda surv, _: passed.extend(r["vec_id"] for r in surv.collect())
+    )
+    sink(spark.createDataFrame([(11, vec(1)), (13, vec(5))], schema), 1)
+    assert sorted(passed) == [11, 13]
+    assert spark.read.parquet(f"{idx}/postings").count() == post.count() + 1  # 13 only
+
+
 def test_gif_out_of_table_index_on_transparent_pixels_decodes():
     """Real-world GIFs carry out-of-table indices on TRANSPARENT pixels
     (the palette is never consulted for them; browsers/giflib render

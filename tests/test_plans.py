@@ -167,6 +167,15 @@ def test_per_series_topn_uses_window_group_limit(spark, fixture_points):
     assert "WindowGroupLimit" in p
 
 
+def test_engine_top_n_takes_ordered_without_range_exchange(store_engine):
+    """The engine's last/first are bounded by n * (distinct ids), so the
+    global sort plans as one TakeOrderedAndProject, not a range
+    exchange."""
+    p = plan(store_engine.last(["s1", "s2"], 3))
+    assert "TakeOrderedAndProject" in p
+    assert "rangepartitioning" not in p
+
+
 def test_ts_agg_no_python_in_plan(spark, fixture_points):
     """Aggregates are pure JVM: no BatchEvalPython / ArrowEvalPython
     stages in any reference-surface plan."""

@@ -109,6 +109,25 @@ def test_filter_applies_after_topn(router):
     assert out == []  # newest 2 are both perpetua
 
 
+def test_bounded_top_n_bodies(router):
+    """last/first carry a per-series bound (n * distinct ids) that must
+    not move a row: timestamps tied across series keep their order, and
+    a filter + aggregate still runs over the whole top-n."""
+    L1, L2, P1, P2 = (
+        [{"location": loc}, {"scientist": who}]
+        for loc, who in (("1", "langstroth"), ("2", "langstroth"), ("1", "perpetua"), ("2", "perpetua"))
+    )
+    assert get(router, "/ts/butterflies,honeybees/last/3") == [
+        {"timestamp": 1439878320000000, "tag": P2, "value": 7.0},
+        {"timestamp": 1439877960000000, "tag": P2, "value": 8.0},
+        {"timestamp": 1439877600000000, "tag": L2, "value": 1.0},
+        {"timestamp": 1439856360000000, "tag": L1, "value": 28.0},
+        {"timestamp": 1439856360000000, "tag": P1, "value": 28.0},
+        {"timestamp": 1439856000000000, "tag": P1, "value": 30.0},
+    ]
+    assert get(router, "/ts/butterflies/first/2/filter/location/equals/1/sd") == {"sd": 5.5}
+
+
 def test_aggregates(router):
     assert get(router, "/ts/butterflies/last/8/sum") == {"sum": 45.0}
     assert get(router, "/ts/butterflies/last/8/count") == {"count": 8.0}
