@@ -1578,15 +1578,16 @@ def main() -> int:
 
     # Round-14 verdict task 7: the expensive LLM-pipeline half only
     # surfaced in one-off BENCH_scale_* files, so a regression there
-    # was invisible to the per-round driver capture. A fixed DEEP pair
-    # — the streaming-gated corpus clean and the LSH gate replay —
-    # now rides every headline capture as separate keys (NOT folded
-    # into `value`: the headline total stays comparable across
-    # rounds). Median-of-3 with clearCache between runs (the
-    # honest-cold protocol — these ops pin caches by contract).
-    DEEP = ["clean_corpus_gated", "lsh_gate_replay"]
+    # was invisible to the per-round driver capture. A fixed DEEP set
+    # — the streaming-gated corpus clean and the LSH and semantic
+    # dedup gate replays — rides every headline capture as separate
+    # keys (NOT folded into `value`: the headline total stays
+    # comparable across rounds). Median-of-3 with clearCache between
+    # runs (the honest-cold protocol — these ops pin caches by
+    # contract).
+    DEEP = ["clean_corpus_gated", "lsh_gate_replay", "semdedup_gate_replay"]
     if headline is not HEADLINE:
-        DEEP = []  # --names subset runs: skip the fixed deep pair
+        DEEP = []  # --names subset runs: skip the fixed deep set
     deep_t: dict[str, float] = {}
     deep_d: dict[str, float] = {}
     for name in DEEP:

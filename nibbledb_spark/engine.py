@@ -34,10 +34,23 @@ single writer, as the reference's one process is (src/main.re:225-227):
 another writer's files are seen by an engine built after that write, or
 after this engine's next one.
 
-Per-series top-n is bounded: ``last``/``first`` over k distinct ids
-return at most n*k rows (quirk Q4), so the engine adds ``limit(n*k)``,
-which moves no row and plans the global sort as one
-TakeOrderedAndProject instead of a range exchange.
+Every raw read (``last``/``first``/``since``/``range``, and
+``latest``/``earliest`` through them) is ONE ``sql_over`` statement,
+composed from the scan builders in ``operators/timeseries.py`` over the
+held listing. Its selection prunes the store to the ids' buckets, the
+series and the day/ts bounds, and is read on ONE partition (a
+``COALESCE(1)`` hint on the selection's own SELECT). Over a
+single-partition child the per-series window, the Q5 sort and the tag
+filter + aggregate the REST layer adds all plan with no exchange, so
+each read runs as one Spark job of one task. That costs no parallelism
+a response could use: every read result goes to the driver anyway, as
+the reference answers every read inside its one process. It also makes
+float ``sum``/``mean``/``sd`` fold in Q5 order, so they depend only on
+the selected rows, not on file layout, core count or shuffle
+partitions. The trade-off: a raw aggregate over a very long window
+scans on one task. Bucket-aligned aggregate windows have the rollup
+route (``aggregate_range``); ``length``, ``names``, ``stats``,
+``index``, ``delete`` and the rollups keep their parallel scans.
 
 Mutation model: append for ingest; delete/compact rewrite only the
 affected buckets via a STAGED SWAP (write survivors to a sibling staging
@@ -65,6 +78,7 @@ from pyspark.sql import types as T
 
 from nibbledb_spark.operators import timeseries as ts_ops
 from nibbledb_spark.schema import POINT_SCHEMA, validate_points
+from nibbledb_spark.session import sql_over
 
 DEFAULT_NUM_BUCKETS = 32
 
@@ -91,6 +105,8 @@ STORE_SCHEMA = T.StructType(
 # any other layout number is refused rather than read as this one
 STORE_LAYOUT = 2
 PARTITION_COLS = ("bucket", "day")
+# the point columns a raw read returns, in POINT_SCHEMA order
+_READ_COLS = ", ".join(f.name for f in POINT_SCHEMA.fields)
 
 # Continuous-aggregate rollup (the hypertable-rollup analogue): per
 # (series, time bucket) mergeable partials. Sums are scaled longs
@@ -111,23 +127,12 @@ ROLLUP_SCHEMA = T.StructType(
 )
 
 
-# Spark plans ORDER BY ... LIMIT k as one TakeOrderedAndProject for k
-# below this (spark.sql.execution.topKSortFallbackThreshold's default)
-_TOP_K_MAX = 2**31 - 16
-
-
 def bucket_sql(series: str, num_buckets: int) -> str:
     """THE series -> bucket hash, as SQL over ``series`` (a column name
     or a string literal). The writer applies it to the series column;
     reads apply it to id literals, which Catalyst folds to literal
     partition filters."""
     return f"CAST(pmod(xxhash64({series}), {num_buckets}) AS INT)"
-
-
-def _sql_string(s: str) -> str:
-    # any id as a SQL string literal with nothing to escape: its UTF-8
-    # bytes as a hex binary literal, cast back to string
-    return f"CAST(X'{s.encode().hex()}' AS STRING)"
 
 
 def day_of(ts_col):
@@ -373,13 +378,19 @@ class TimeSeriesEngine:
             self._generation += 1
             self._listing = None
 
-    def _in_buckets(self, store: DataFrame, ids: Sequence[str]) -> DataFrame:
-        """Prune ``store`` to the buckets of ``ids``. bucket_sql over
+    def _in_buckets_sql(self, ids: Sequence[str]) -> str:
+        """The predicate on the buckets of ``ids``. bucket_sql over
         literals folds to literal partition filters in Catalyst, so
-        this costs no Spark job; one parsed predicate is one py4j call,
-        where a Column per id costs ~8."""
-        keys = ", ".join(bucket_sql(_sql_string(s), self.num_buckets) for s in ids)
-        return store.where(f"bucket IN ({keys})")
+        pruning by it costs no Spark job."""
+        keys = ", ".join(
+            bucket_sql(ts_ops.sql_string(s), self.num_buckets) for s in ids
+        )
+        return f"bucket IN ({keys})"
+
+    def _in_buckets(self, store: DataFrame, ids: Sequence[str]) -> DataFrame:
+        """Prune ``store`` to the buckets of ``ids``; one parsed
+        predicate is one py4j call, where a Column per id costs ~8."""
+        return store.where(self._in_buckets_sql(ids))
 
     def points(
         self,
@@ -406,37 +417,57 @@ class TimeSeriesEngine:
             df = df.where(F.col("ts") <= ts_to)
         return df.select("series", "ts", "tag", "value")
 
-    # query surface (thin delegation to the pure operators) -----------------
+    # raw reads: one statement each (see the module docstring) -------------
 
-    @staticmethod
-    def _top_n(df: DataFrame, ids: Sequence[str], n: int) -> DataFrame:
-        """Quirk Q4: k distinct ids return at most n*k rows, so a limit
-        of n*k changes no row or order, but it plans the global sort as
-        one TakeOrderedAndProject instead of a range exchange. Without
-        ids (every series) or past Spark's top-K threshold it is left
-        off."""
-        bound = n * len(set(ids))
-        return df.limit(bound) if ids and 0 <= bound < _TOP_K_MAX else df
+    def _read(self, query: str) -> DataFrame:
+        """``query`` (whose FROM source is ``{store}``) as one statement
+        over the held listing; a store not written yet reads empty."""
+        store = (
+            self._store()
+            if os.path.exists(self.path)
+            else self.spark.createDataFrame([], STORE_SCHEMA)
+        )
+        return sql_over(self.spark, query, store=store)
+
+    def _selection(
+        self,
+        ids: Sequence[str],
+        ts_from: int | None = None,
+        ts_to: int | None = None,
+    ) -> str:
+        """The store pruned to the ids' buckets and series and the
+        day/ts bounds, read on one partition."""
+        where = [self._in_buckets_sql(ids)] if ids else []
+        if ts_from is not None:
+            where.append(f"day >= {ts_from // DAY_US}")
+        if ts_to is not None:
+            where.append(f"day <= {ts_to // DAY_US}")
+        return ts_ops.selection_sql(
+            "{store}", _READ_COLS, ids, ts_from, ts_to,
+            where=where, hint="/*+ COALESCE(1) */ ",
+        )
 
     def last(self, ids: Sequence[str], n: int) -> DataFrame:
-        return self._top_n(ts_ops.last_n(self.points(ids), (), n), ids, n)
+        sel = self._selection(ids)
+        return self._read(ts_ops.top_n_sql(sel, _READ_COLS, n, ids, descending=True))
 
     def latest(self, ids: Sequence[str]) -> DataFrame:
         return self.last(ids, 1)
 
     def first(self, ids: Sequence[str], n: int) -> DataFrame:
-        return self._top_n(ts_ops.first_n(self.points(ids), (), n), ids, n)
+        sel = self._selection(ids)
+        return self._read(ts_ops.top_n_sql(sel, _READ_COLS, n, ids, descending=False))
 
     def earliest(self, ids: Sequence[str]) -> DataFrame:
         return self.first(ids, 1)
 
     def since(self, ids: Sequence[str], ts_from: int) -> DataFrame:
-        return ts_ops.since(self.points(ids, ts_from=ts_from), (), ts_from)
+        sel = self._selection(ids, ts_from=ts_from)
+        return self._read(ts_ops.ordered_sql(sel, _READ_COLS))
 
     def range(self, ids: Sequence[str], ts_from: int, ts_to: int) -> DataFrame:
-        return ts_ops.time_range(
-            self.points(ids, ts_from=ts_from, ts_to=ts_to), (), ts_from, ts_to
-        )
+        sel = self._selection(ids, ts_from=ts_from, ts_to=ts_to)
+        return self._read(ts_ops.ordered_sql(sel, _READ_COLS))
 
     def length(self, ids: Sequence[str] = ()) -> int:
         return self.points(ids).count()

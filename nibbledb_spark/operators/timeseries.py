@@ -1,15 +1,25 @@
 """Time-series operators: the reference's full query surface.
 
 Every operator from SURVEY.md §2 Part A, expressed as a declarative
-DataFrame plan over the canonical ``points`` schema
+plan over the canonical ``points`` schema
 (series STRING, ts BIGINT µs, tag MAP<STRING,STRING>, value DOUBLE).
 
 Design notes for scale (the 100 TB stance):
 
+- The scans (A6-A12) are stated once, as SQL builders: the selection
+  (ids and inclusive ts bounds, plus any predicates a caller adds),
+  the per-series top-n and the Q5-ordered selection. ``last_n``/
+  ``first_n``/``since``/``time_range`` compose them into one
+  ``sql_over`` statement over a points frame; ``TimeSeriesEngine``
+  composes the same builders over its store listing. One statement is
+  one parse and one analysis, where a chain of DataFrame calls
+  re-analyzes the whole tree at every call.
 - Per-series top-n (``last_n``/``first_n``) is a window + filter —
   Catalyst executes it as a partial top-n per input partition before
   the shuffle (WindowGroupLimit since Spark 3.5), so no series ever
-  materializes fully.
+  materializes fully. With ids, the result is bounded by n * (distinct
+  ids) (quirk Q4), which plans the final sort as one
+  TakeOrderedAndProject.
 - Time selections are plain predicates on ``ts`` — they reach the
   parquet scan as PushedFilters and prune row groups via min/max
   stats, which is the Spark-native equivalent of the reference's
@@ -28,6 +38,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from nibbledb_spark.session import sql_over
 
 # --------------------------------------------------------------------------
 # selection helpers
@@ -53,30 +65,99 @@ def scaled_long(col: Column, scale: int) -> Column:
     return F.floor(col * F.lit(float(10**scale)) + F.lit(0.5)).cast("long")
 
 
-def _canonical_order(descending: bool) -> list[Column]:
+# Spark plans ORDER BY ... LIMIT k as one TakeOrderedAndProject for k
+# below this (spark.sql.execution.topKSortFallbackThreshold's default)
+_TOP_K_MAX = 2**31 - 16
+
+
+def sql_string(s: str) -> str:
+    """Any string as a SQL string literal with nothing to escape: its
+    UTF-8 bytes as a hex binary literal, cast back to string (Catalyst
+    folds it to a plain literal)."""
+    return f"CAST(X'{s.encode().hex()}' AS STRING)"
+
+
+def _q5_sql(descending: bool) -> str:
     """Q5 canonical total order: (ts, series, value), direction per op."""
     if descending:
-        return [F.col("ts").desc(), F.col("series").asc(), F.col("value").desc()]
-    return [F.col("ts").asc(), F.col("series").asc(), F.col("value").asc()]
+        return "ts DESC, series ASC, value DESC"
+    return "ts ASC, series ASC, value ASC"
 
 
 # --------------------------------------------------------------------------
-# scans (A6-A12, A34)
+# scans (A6-A12, A34): SQL builders, and the operators that compose them
 # --------------------------------------------------------------------------
+
+
+def selection_sql(
+    src: str,
+    cols: str,
+    ids: Sequence[str] = (),
+    ts_from: int | None = None,
+    ts_to: int | None = None,
+    *,
+    where: Sequence[str] = (),
+    hint: str = "",
+) -> str:
+    """THE selection every scan starts from, as a FROM source: ``cols``
+    of ``src`` whose series is one of ``ids`` (A33; all series when
+    empty) with ``ts_from <= ts <= ts_to`` (both inclusive, either
+    optional), plus the caller's ``where`` predicates. ``hint`` goes on
+    this SELECT itself, so it applies to the selection, not to what is
+    built on top of it."""
+    preds = list(where)
+    if ids:
+        preds.append(f"series IN ({', '.join(sql_string(s) for s in ids)})")
+    if ts_from is not None:
+        preds.append(f"ts >= {int(ts_from)}")
+    if ts_to is not None:
+        preds.append(f"ts <= {int(ts_to)}")
+    if not preds and not hint:
+        return src
+    cond = f" WHERE {' AND '.join(preds)}" if preds else ""
+    return f"(SELECT {hint}{cols} FROM {src}{cond})"
+
+
+def top_n_sql(
+    src: str, cols: str, n: int, ids: Sequence[str], *, descending: bool
+) -> str:
+    """Per-series top-n (A6/A8) over the FROM source ``src``, in Q5
+    order. Quirk Q4: k distinct ids return at most n*k rows, so a LIMIT
+    of n*k changes no row or order, but it plans the final sort as one
+    TakeOrderedAndProject instead of a range exchange. Without ids
+    (every series), for a negative n (Spark rejects a negative LIMIT)
+    or past Spark's top-K threshold it is left off."""
+    order = _q5_sql(descending)
+    bound = n * len(set(ids))
+    limit = f" LIMIT {bound}" if ids and 0 <= bound < _TOP_K_MAX else ""
+    return (
+        f"SELECT {cols} FROM ("
+        f"SELECT {cols}, ROW_NUMBER() OVER (PARTITION BY series ORDER BY {order})"
+        f" AS __rn FROM {src}) WHERE __rn <= {int(n)} ORDER BY {order}{limit}"
+    )
+
+
+def ordered_sql(src: str, cols: str) -> str:
+    """The FROM source ``src`` in Q5 order, newest first (A10/A11)."""
+    return f"SELECT {cols} FROM {src} ORDER BY {_q5_sql(descending=True)}"
+
+
+def _cols(points: DataFrame) -> str:
+    return ", ".join(f"`{c}`" for c in points.columns)
+
+
+def _over(points: DataFrame, query: str) -> DataFrame:
+    """``query`` (whose FROM source is ``{points}``) as one statement."""
+    return sql_over(points.sparkSession, query, points=points)
 
 
 def last_n(points: DataFrame, ids: Sequence[str], n: int) -> DataFrame:
     """A6: newest ``n`` points per series (per-series limit — quirk Q4:
     k ids return up to n*k points), globally sorted desc(ts).
     Reference: src/timeseries.re:471-478, 513-518."""
-    w = Window.partitionBy("series").orderBy(*_canonical_order(descending=True))
-    return (
-        for_series(points, ids)
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= n)
-        .drop("__rn")
-        .orderBy(*_canonical_order(descending=True))
-    )
+    cols = _cols(points)
+    sel = selection_sql("{points}", cols, ids)
+    return _over(points, top_n_sql(sel, cols, n, ids, descending=True))
 
 
 def latest(points: DataFrame, ids: Sequence[str]) -> DataFrame:
@@ -87,14 +168,9 @@ def latest(points: DataFrame, ids: Sequence[str]) -> DataFrame:
 def first_n(points: DataFrame, ids: Sequence[str], n: int) -> DataFrame:
     """A8: oldest ``n`` per series, sorted asc(ts)
     (reference src/timeseries.re:525-540)."""
-    w = Window.partitionBy("series").orderBy(*_canonical_order(descending=False))
-    return (
-        for_series(points, ids)
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= n)
-        .drop("__rn")
-        .orderBy(*_canonical_order(descending=False))
-    )
+    cols = _cols(points)
+    sel = selection_sql("{points}", cols, ids)
+    return _over(points, top_n_sql(sel, cols, n, ids, descending=False))
 
 
 def earliest(points: DataFrame, ids: Sequence[str]) -> DataFrame:
@@ -106,11 +182,9 @@ def since(points: DataFrame, ids: Sequence[str], ts_from: int) -> DataFrame:
     """A10: all points with ts >= from (inclusive), sorted desc(ts).
     The predicate pushes to the parquet scan — the Spark-native form of
     the reference's shard pruning (A12, src/timeseries.re:555-588)."""
-    return (
-        for_series(points, ids)
-        .where(F.col("ts") >= F.lit(int(ts_from)))
-        .orderBy(*_canonical_order(descending=True))
-    )
+    cols = _cols(points)
+    sel = selection_sql("{points}", cols, ids, ts_from)
+    return _over(points, ordered_sql(sel, cols))
 
 
 def time_range(
@@ -118,11 +192,9 @@ def time_range(
 ) -> DataFrame:
     """A11: from <= ts <= to, BOTH bounds inclusive
     (reference src/timeseries.re:608-624), sorted desc(ts)."""
-    return (
-        for_series(points, ids)
-        .where(F.col("ts").between(int(ts_from), int(ts_to)))
-        .orderBy(*_canonical_order(descending=True))
-    )
+    cols = _cols(points)
+    sel = selection_sql("{points}", cols, ids, ts_from, ts_to)
+    return _over(points, ordered_sql(sel, cols))
 
 
 # --------------------------------------------------------------------------

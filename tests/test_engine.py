@@ -698,15 +698,85 @@ def test_bounded_top_n_matches_the_unbounded_operators(spark, engine):
     """last/first/latest/earliest carry a limit of n * (distinct ids);
     it must change no row and no order of the unbounded operators,
     including timestamps tied across series, duplicate and unknown ids,
-    and n past the series length."""
+    ids that need quoting in SQL, n of 0, -1 and past the series
+    length. since/range read the same ids with the same rows."""
     from nibbledb_spark.operators import timeseries as ts_ops
 
+    odd = ["it's", "back\\slash", "\U0001F98B", "a%20b"]
     engine.append_rows("a", [(t, {"k": "x"}, 1.0) for t in (10, 20, 30, 40)])
     engine.append_rows("b", [(t, {"k": "y"}, v) for t, v in ((20, 1.0), (30, 2.0), (30, 1.0))])
-    for ids in (["a", "b"], ["a", "a"], ["b", "zz"]):
+    for i, s in enumerate(odd):
+        engine.append_rows(s, [(t, None, t + i / 3) for t in (5, 7)])
+    for ids in (["a", "b"], ["a", "a"], ["b", "zz"], ["zz"], odd):
         pts = engine.points(ids)
-        for n in (2, 50):
+        for n in (-1, 0, 2, 50):
             assert engine.last(ids, n).collect() == ts_ops.last_n(pts, (), n).collect()
             assert engine.first(ids, n).collect() == ts_ops.first_n(pts, (), n).collect()
         assert engine.latest(ids).collect() == ts_ops.last_n(pts, (), 1).collect()
         assert engine.earliest(ids).collect() == ts_ops.first_n(pts, (), 1).collect()
+        assert engine.since(ids, 7).collect() == ts_ops.since(pts, (), 7).collect()
+        assert engine.range(ids, 7, 30).collect() == ts_ops.time_range(pts, (), 7, 30).collect()
+    assert [r["series"] for r in engine.last(odd, 1).collect()] == sorted(odd)
+    assert engine.last(["a"], -1).collect() == engine.last(["a"], 0).collect() == []
+
+
+def test_reads_of_a_store_not_written_yet_are_empty(engine):
+    import os
+
+    assert not os.path.exists(engine.path)
+    for df in (
+        engine.last(["s"], 3),
+        engine.first([], 2),
+        engine.since(["s"], 0),
+        engine.range(["s", "t"], 0, 10),
+    ):
+        assert df.columns == ["series", "ts", "tag", "value"]
+        assert df.collect() == []
+
+
+# ---------------------------------------------------------------------------
+# float aggregates fold in one order
+# ---------------------------------------------------------------------------
+
+
+def test_float_aggregates_do_not_depend_on_layout_or_partitions(spark, tmp_path):
+    """range/.../sum, mean and sd fold the selection in Q5 order on one
+    partition, so they are bit-equal whether the points were appended
+    in one chunk or three, before and after compact(), and under 1 or 4
+    shuffle partitions."""
+    from nibbledb_spark.engine import TimeSeriesEngine
+    from nibbledb_spark.rest import Router
+    from nibbledb_spark.schema import POINT_SCHEMA
+
+    t0, step = 1_439_856_000_000_000, 300_000_000
+    rows = [
+        (s, t0 + j * step, {"loc": str(j % 3)}, ((j * 7919) % 1013) / 7.3 + k / 9)
+        for j in range(3000)
+        for k, s in enumerate(("p", "q"))
+    ]
+    one = TimeSeriesEngine(spark, str(tmp_path / "one"), num_buckets=4)
+    one.append_points(spark.createDataFrame(rows, POINT_SCHEMA))
+    three = TimeSeriesEngine(spark, str(tmp_path / "three"), num_buckets=4)
+    for c in range(3):
+        three.append_points(spark.createDataFrame(rows[c::3], POINT_SCHEMA))
+    a, b = t0 + 17 * step, t0 + 2900 * step
+    paths = [f"/ts/p,q/range/{a}/{b}/{agg}" for agg in ("sum", "mean", "sd")]
+
+    def bodies(eng):
+        router = Router(eng)
+        return [router.handle("GET", p) for p in paths]
+
+    want = bodies(one)
+    assert all(status == 200 and body != "{}" for status, body in want)
+    assert bodies(three) == want
+    three.compact()
+    assert bodies(three) == want
+    conf = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "1")
+        at_one = bodies(one)
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        at_four = bodies(one)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", conf)
+    assert at_one == at_four == want

@@ -167,13 +167,62 @@ def test_per_series_topn_uses_window_group_limit(spark, fixture_points):
     assert "WindowGroupLimit" in p
 
 
-def test_engine_top_n_takes_ordered_without_range_exchange(store_engine):
-    """The engine's last/first are bounded by n * (distinct ids), so the
-    global sort plans as one TakeOrderedAndProject, not a range
-    exchange."""
-    p = plan(store_engine.last(["s1", "s2"], 3))
-    assert "TakeOrderedAndProject" in p
-    assert "rangepartitioning" not in p
+def test_engine_top_n_takes_ordered_without_range_exchange(spark, tmp_path_factory):
+    """Every benchmark read shape is one Spark job through
+    Router.handle, and the engine frame plans no exchange: the
+    selection is read on one partition, so the per-series window, the
+    Q5 sort and the tag filter + aggregate need no shuffle. last/first
+    are bounded by n * (distinct ids), so their sort is one
+    TakeOrderedAndProject. The store holds several files per bucket
+    (three appends), which a parallel scan would spread over several
+    partitions."""
+    from nibbledb_spark.engine import TimeSeriesEngine
+    from nibbledb_spark.rest import Router
+
+    eng = TimeSeriesEngine(
+        spark, str(tmp_path_factory.mktemp("onejob") / "store"), num_buckets=4
+    )
+    t0, minute = 1_439_856_000_000_000, 60_000_000
+    for chunk in range(3):
+        for s in ("s1", "s2"):
+            eng.append_rows(
+                s,
+                [
+                    (t0 + j * minute, {"loc": str(j % 4)}, float(j % 97) / 7)
+                    for j in range(chunk * 600, (chunk + 1) * 600)
+                ],
+            )
+    a, day = t0 + 100 * minute, 24 * 60 * minute
+    since = t0 + 1500 * minute
+    shapes = [
+        ("/ts/s1/last/10", eng.last(["s1"], 10)),
+        ("/ts/s1/last/1000", eng.last(["s1"], 1000)),
+        (f"/ts/s1/range/{a}/{a + 60 * minute - 1}", eng.range(["s1"], a, a + 60 * minute - 1)),
+        (
+            f"/ts/s1,s2/range/{a}/{a + 7 * day}/mean",
+            ts_ops.aggregate(eng.range(["s1", "s2"], a, a + 7 * day), "mean"),
+        ),
+        (
+            "/ts/s2/last/500/filter/loc/equals/1/sd",
+            ts_ops.aggregate(ts_ops.tag_filter(eng.last(["s2"], 500), ["loc"], ["1"]), "sd"),
+        ),
+        (f"/ts/s1/since/{since}/median", ts_ops.aggregate(eng.since(["s1"], since), "median")),
+    ]
+    router = Router(eng)
+    sc = spark.sparkContext
+    for i, (path, frame) in enumerate(shapes):
+        assert "Exchange" not in plan(frame), path
+        group = f"one_job_read_{i}"
+        sc.setJobGroup(group, path)
+        try:
+            status, body = router.handle("GET", path)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert status == 200 and body not in ("[]", "{}"), (path, body)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, path
+    p = plan(eng.last(["s1", "s2"], 3))
+    assert "TakeOrderedAndProject" in p and "rangepartitioning" not in p
 
 
 def test_ts_agg_no_python_in_plan(spark, fixture_points):

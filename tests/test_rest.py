@@ -128,6 +128,38 @@ def test_bounded_top_n_bodies(router):
     assert get(router, "/ts/butterflies/first/2/filter/location/equals/1/sd") == {"sd": 5.5}
 
 
+def test_edge_read_bodies(engine):
+    """Reads at the edges keep their exact bodies: a store not written
+    yet, n of 0 and -1, an unknown id, a duplicated id, and ids that
+    need quoting in SQL."""
+    r = Router(engine)
+    assert r.handle("GET", "/ts/butterflies/last/3") == (200, "[]")
+    assert r.handle("GET", "/ts/butterflies/since/0") == (200, "[]")
+    assert r.handle("GET", "/ts/butterflies/range/0/10/mean") == (200, "{}")
+    assert r.handle("GET", "/ts/butterflies/first/2/sum") == (200, '{"sum": 0.0}')
+    assert r.handle("POST", "/ts/butterflies", json.dumps(BFLY))[0] == 200
+    assert r.handle("GET", "/ts/butterflies/last/0") == (200, "[]")
+    assert r.handle("GET", "/ts/butterflies/last/-1") == (200, "[]")
+    assert r.handle("GET", "/ts/nosuch/last/3") == (200, "[]")
+    # a bound past the long range is still a bound, not a failed request
+    assert r.handle("GET", "/ts/butterflies/since/99999999999999999999") == (200, "[]")
+    last2 = (
+        '[{"timestamp": 1439878320000000, "tag": [{"location": "2"}, {"scientist": "perpetua"}], "value": 7.0}, '
+        '{"timestamp": 1439877960000000, "tag": [{"location": "2"}, {"scientist": "perpetua"}], "value": 8.0}]'
+    )
+    assert r.handle("GET", "/ts/butterflies/last/2") == (200, last2)
+    assert r.handle("GET", "/ts/butterflies,butterflies/last/2") == (200, last2)
+    assert r.handle("GET", "/ts/butterflies,butterflies/first/2/mean") == (200, '{"mean": 6.5}')
+    for sid in ("it's", "back\\slash", "\U0001F98B", "a%20b"):
+        body = json.dumps([{"timestamp": 5, "value": 1.5}, {"timestamp": 7, "value": 2.5}])
+        assert r.handle("POST", f"/ts/{sid}", body)[0] == 200
+        assert r.handle("GET", f"/ts/{sid}/last/2") == (
+            200,
+            '[{"timestamp": 7, "value": 2.5}, {"timestamp": 5, "value": 1.5}]',
+        )
+        assert r.handle("GET", f"/ts/{sid},nosuch/since/6/sum") == (200, '{"sum": 2.5}')
+
+
 def test_aggregates(router):
     assert get(router, "/ts/butterflies/last/8/sum") == {"sum": 45.0}
     assert get(router, "/ts/butterflies/last/8/count") == {"count": 8.0}
