@@ -5,8 +5,8 @@ Scale design (the 100 TB stance):
 
 - Exact dedup hashes the dedup key and keeps one winner per hash group —
   a single shuffle on a short hash, never on the full payload.
-- Near-dup never goes all-pairs: MinHash signatures are computed
-  per-document with JVM array expressions (no explode, no Python), LSH
+- Near-dup never goes all-pairs: MinHash signatures are hash
+  aggregates over (id, shingle) rows (codegen'd, no Python), LSH
   banding turns similarity search into an equi-join on (band, bucket),
   and the exact Jaccard verify runs only on candidate pairs. Cost is
   O(docs) + O(candidates), not O(docs²).
@@ -33,7 +33,7 @@ from __future__ import annotations
 import re as _re
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nibbledb_spark.operators.text import tokens
@@ -62,192 +62,16 @@ def exact_dedup(
 
 
 # ---------------------------------------------------------------------------
-# shingling + MinHash + LSH
-# ---------------------------------------------------------------------------
-
-
-def shingles(text_col: Column | str, n: int = DEFAULT_SHINGLE_N) -> Column:
-    """Distinct word n-gram shingles as an array column (JVM-side:
-    split -> sequence -> transform -> array_distinct; no explode)."""
-    w = tokens(text_col)
-    idx = F.sequence(F.lit(1), F.size(w) - (n - 1))
-    gram = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at(w, i + j) for j in range(n)]
-    )
-    # guard short docs: sequence(1, x) with x < 1 generates a DESCENDING
-    # sequence and element_at then throws under ANSI mode
-    return F.when(
-        F.size(w) >= n, F.array_distinct(F.transform(idx, gram))
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def minhash_signature(
-    shingle_col: Column | str, num_hashes: int = DEFAULT_NUM_HASHES
-) -> Column:
-    """MinHash signature: for seed j, min over shingles of
-    md5('<j>:' || shingle) (lexicographic min over hex — portable across
-    engines). Returns an array<string> of length ``num_hashes``."""
-    s = F.col(shingle_col) if isinstance(shingle_col, str) else shingle_col
-
-    # single-parameter lambdas only: PySpark binds a Column per named
-    # parameter, so a ``j=j`` default would capture the element index
-    def seeded_min(j: int) -> Column:
-        seed = f"{j}:"
-        return F.array_min(
-            F.transform(s, lambda x: F.md5(F.concat(F.lit(seed), x).cast("binary")))
-        )
-
-    return F.array(*[seeded_min(j) for j in range(num_hashes)])
-
-
-def lsh_candidate_pairs(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = DEFAULT_SHINGLE_N,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    band_size: int = DEFAULT_BAND_SIZE,
-) -> DataFrame:
-    """LSH banding: docs sharing any band bucket become candidate pairs
-    (id1 < id2, distinct). The only shuffle is the equi-join on
-    (band, bucket)."""
-    # docs too short to shingle carry no near-dup evidence; excluding them
-    # also keeps null signatures out of the band buckets
-    sig = docs.select(
-        F.col(id_col).alias("id"),
-        shingles(text_col, shingle_n).alias("sh"),
-    ).where(F.size("sh") > 0).select(
-        "id", minhash_signature(F.col("sh"), num_hashes).alias("sig")
-    )
-    n_bands = num_hashes // band_size
-    bands = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.element_at("sig", b * band_size + i + 1)
-                                    for i in range(band_size)
-                                ],
-                            ).cast("binary")
-                        ).alias("bucket"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        .distinct()
-    )
-
-
-def jaccard_verify(
-    docs: DataFrame,
-    pairs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = DEFAULT_SHINGLE_N,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Exact n-gram Jaccard on candidate pairs only. Integer set sizes =>
-    the similarity is a deterministic double ratio."""
-    sh = docs.select(
-        F.col(id_col).alias("id"), shingles(text_col, shingle_n).alias("sh")
-    ).where(F.size("sh") > 0)
-    j1 = pairs.join(sh.withColumnRenamed("id", "id1").withColumnRenamed("sh", "sh1"), "id1")
-    j2 = j1.join(sh.withColumnRenamed("id", "id2").withColumnRenamed("sh", "sh2"), "id2")
-    inter = F.size(F.array_intersect("sh1", "sh2"))
-    union = F.size("sh1") + F.size("sh2") - inter
-    return (
-        j2.select(
-            "id1",
-            "id2",
-            (inter.cast("double") / union).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-
-
-def near_dup_pairs_minhash(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    shingle_n: int = DEFAULT_SHINGLE_N,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    band_size: int = DEFAULT_BAND_SIZE,
-) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: shingle -> signature -> band
-    -> candidate join -> exact Jaccard verify."""
-    cands = lsh_candidate_pairs(
-        docs,
-        id_col=id_col,
-        text_col=text_col,
-        shingle_n=shingle_n,
-        num_hashes=num_hashes,
-        band_size=band_size,
-    )
-    return jaccard_verify(
-        docs, cands, id_col=id_col, text_col=text_col,
-        shingle_n=shingle_n, threshold=threshold,
-    )
-
-
-# ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
 
 SIMHASH_BITS = 32
 
 
-def simhash(text_col: Column | str, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash over whitespace tokens: per-token 32-bit hash (md5-derived,
-    engine-portable), signed bit votes weighted by occurrence, sign =>
-    fingerprint bit. Near-duplicate docs land within small Hamming
-    distance. Pure array expressions — one pass, no shuffle."""
-    w = tokens(text_col)
-    # token hash: first 8 md5 hex chars as a 32-bit unsigned int
-    th = F.transform(
-        w, lambda x: F.conv(F.substring(F.md5(x.cast("binary")), 1, 8), 16, 10).cast("long")
-    )
-    def bit_vote(b: int) -> Column:
-        # two-parameter merge lambda only — a ``b=b`` default would make
-        # PySpark bind a third Column to it
-        return F.aggregate(
-            th,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-
-    out = F.lit(0).cast("long")
-    for b in range(bits):
-        out = out + F.when(bit_vote(b) > 0, F.lit(2**b).cast("long")).otherwise(
-            F.lit(0)
-        )
-    return out
-
-
 def simhash_docs(
     docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Fingerprint every document. Row-oriented fast path (see
-    simhash_rows); ``simhash()`` above is the array-HOF reference
-    implementation of the identical function."""
+    """Fingerprint every document (see :func:`simhash_rows`)."""
     return simhash_rows(docs, id_col=id_col, text_col=text_col)
 
 
@@ -261,9 +85,8 @@ def simhash_rows(
     """Row-oriented SimHash: explode tokens -> one hash aggregate with
     ``bits`` conditional-sum votes -> sign bits. Every operator stays in
     whole-stage codegen (the interpreted F.aggregate HOF formulation
-    measured ~20x slower at sf0.1 — NOTES.md). Bit-identical to
-    :func:`simhash`; token-less docs keep fingerprint 0 via the left
-    join (explode drops them)."""
+    measured ~20x slower at sf0.1 — NOTES.md). Token-less docs keep
+    fingerprint 0 via the left join (explode drops them)."""
     t = docs.select(F.col(id_col), F.explode(tokens(text_col)).alias("tok"))
     h = t.select(
         id_col,
@@ -291,14 +114,13 @@ def simhash_rows(
 
 
 # ---------------------------------------------------------------------------
-# row-oriented formulation (the fast path)
+# shingling + MinHash + LSH (row-oriented)
 # ---------------------------------------------------------------------------
 # Spark's array higher-order functions (transform/aggregate lambdas) are
 # evaluated INTERPRETED, outside whole-stage codegen — measured ~20x slower
 # than the equivalent row pipeline at sf0.1. The row formulation below
 # (posexplode -> lead window -> hash aggregate) keeps every operator inside
-# codegen and is the default for the LSH pipeline; the array versions above
-# remain as reference implementations for array-shaped inputs.
+# codegen; it is the one MinHash-LSH definition.
 
 
 def shingle_rows(

@@ -48,11 +48,6 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
-FEATURE_DIM = 16
-
-_FEATURES_SCHEMA = "media_id long, kind string, feature array<float>"
-
-
 def _decode_bmp(payload: bytes) -> object:
     """Uncompressed 24-bit BI_RGB Windows BMP -> HxWx3 uint8 RGB.
 
@@ -1394,27 +1389,6 @@ def image_dhash(media: DataFrame) -> DataFrame:
     return media.select("media_id", "kind", "payload").mapInPandas(run, schema)
 
 
-def image_near_dup_pairs_dhash(
-    media: DataFrame, *, max_hamming: int = 6, bands: int = 4
-) -> DataFrame:
-    """Image near-dup pairs by dHash hamming distance: band the 64-bit
-    hash into ``bands`` 16-bit substrings, candidates share at least
-    one exact band (a self-equi-join on (band, value), NEVER all
-    pairs), then the exact hamming distance ``bit_count(h1 XOR h2)``
-    verifies candidates JVM-side. Pigeonhole recall contract: every
-    pair with hamming < ``bands`` is GUARANTEED a shared band; above
-    that recall is probabilistic (errors must crowd into few bands) —
-    the SimHash-for-text design (operators/dedup.py) applied to
-    pixels. Only the per-image hash touches Python; banding, join, and
-    verify are codegen'd."""
-    h = image_dhash(media).where(F.col("decoded")).select(
-        F.col("media_id").alias("id"),
-        F.col("dhash").alias("hhex"),
-        F.col("dhash_long").alias("hlong"),
-    )
-    return _banded_hamming_pairs(h, max_hamming=max_hamming, bands=bands)
-
-
 def banded_hamming_pairs(
     hashes: DataFrame,
     *,
@@ -1428,11 +1402,14 @@ def banded_hamming_pairs(
     (equi-join on (*by, band, val), never all pairs), exact hamming via
     ``bit_count(XOR)`` verifies JVM-side. Rows whose hash is NULL
     (undecodable payloads) are dropped — a corrupt file is not
-    near-anything. Output: (*by, id1, id2, hamming). Used by the image
-    dHash and audio spectral-fingerprint dedup paths; the post-decode
-    stage is plain relational algebra over (id, hhex, hlong), which is
-    exactly what the declared ``media_*`` oracle queries verify
-    against DuckDB."""
+    near-anything. Output: (*by, id1, id2, hamming). Pigeonhole recall
+    contract: every pair with hamming < ``bands`` is GUARANTEED a shared
+    band; above that recall is probabilistic (errors must crowd into few
+    bands). Image dHash (:func:`image_dhash`) and audio spectral
+    fingerprints (:func:`audio_fingerprint`) pair through it directly;
+    the post-decode stage is plain relational algebra over (id, hhex,
+    hlong), which is exactly what the declared ``media_*`` oracle
+    queries verify against DuckDB."""
     if not 1 <= bands <= 16 or 64 % bands:
         raise ValueError(f"bands must divide 64: {bands}")
     by = list(by)
@@ -1476,15 +1453,6 @@ def banded_hamming_pairs(
         "id2",
         F.bit_count(F.col("h1").bitwiseXOR(F.col("h2"))).alias("hamming"),
     ).where(F.col("hamming") <= max_hamming)
-
-
-def _banded_hamming_pairs(
-    hashes: DataFrame, *, max_hamming: int, bands: int
-) -> DataFrame:
-    """Ungrouped single-family form of ``banded_hamming_pairs``."""
-    return banded_hamming_pairs(
-        hashes, max_hamming=max_hamming, bands=bands, by=()
-    ).select("id1", "id2", "hamming")
 
 
 def audio_fingerprint(
@@ -1558,19 +1526,6 @@ def audio_fingerprint(
             )
 
     return media.select("media_id", "kind", "payload").mapInPandas(run, schema)
-
-
-def audio_near_dup_pairs_fp(
-    media: DataFrame, *, max_hamming: int = 6, bands: int = 4
-) -> DataFrame:
-    """Audio near-dup pairs by fingerprint hamming distance — the
-    banded join shared with image dedup (_banded_hamming_pairs)."""
-    h = audio_fingerprint(media).where(F.col("decoded")).select(
-        F.col("media_id").alias("id"),
-        F.col("afp").alias("hhex"),
-        F.col("afp_long").alias("hlong"),
-    )
-    return _banded_hamming_pairs(h, max_hamming=max_hamming, bands=bands)
 
 
 def media_canonical_from_hashes(
@@ -1928,45 +1883,6 @@ def audio_stats_features(media: DataFrame) -> DataFrame:
             )
 
     return media.select("media_id", "kind", "payload").mapInPandas(run, schema)
-
-
-def _fake_feature(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
-    """Deterministic stand-in for a learned embedding: bytes -> sha256
-    stream -> dim floats in [-1, 1). Keeps the distributed plumbing and
-    batch shapes real while the codec is stubbed."""
-    out: list[float] = []
-    counter = 0
-    while len(out) < dim:
-        h = hashlib.sha256(payload + counter.to_bytes(4, "big")).digest()
-        for i in range(0, 32, 4):
-            if len(out) >= dim:
-                break
-            v = int.from_bytes(h[i : i + 4], "big")
-            out.append((v / 2**32) * 2.0 - 1.0)
-        counter += 1
-    return out
-
-
-def extract_features(media: DataFrame, *, batch_hint: int | None = None) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads via
-    ``mapInPandas`` — the shape a real image/audio encoder plugs into.
-    Each batch is a pandas DataFrame; the UDF returns (media_id, kind,
-    feature[FEATURE_DIM])."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "feature": [
-                        _fake_feature(bytes(p)) if p is not None else None
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return media.mapInPandas(run, schema=_FEATURES_SCHEMA)
 
 
 def parse_avi(payload: bytes) -> dict:

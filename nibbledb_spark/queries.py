@@ -3923,17 +3923,11 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # recall guarantee (hamming < bands) makes the banded join EXACT here,
 # not probabilistic. Every 23rd row is an "undecodable" NULL-hash row
 # pinning the corrupt-payload contract driver-visibly.
-def _media_hash_ctes(fam_mod: int = 83) -> str:
-    """The oracle CTE chain with a parameterizable family modulus:
-    83 is the declared fixture; bench.py --deep-extras scales it with
-    the corpus (83 * mult) so family SIZE — and therefore pair count
-    per doc — stays constant and the at-scale measurement is
-    input-linear by construction."""
-    return f"""
+_MEDIA_HASH_CTES = """
 WITH RECURSIVE m AS (
   SELECT doc_id AS media_id,
          CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END AS kind,
-         doc_id % {fam_mod} AS fam,
+         doc_id % 83 AS fam,
          doc_id % 59 AS flip,
          doc_id % 23 = 0 AS corrupt
   FROM documents
@@ -3967,11 +3961,7 @@ pairs AS (
 )
 """
 
-
-_MEDIA_HASH_CTES = _media_hash_ctes()
-
-# components + canonical tail shared by the declared query and the
-# bench's scaled replay — one definition so they cannot drift
+# components + canonical tail of the declared media_clean_canonicals
 _MEDIA_CANON_TAIL = """,
 edges AS (
   SELECT id1 AS a, id2 AS b FROM pairs
@@ -3990,9 +3980,7 @@ GROUP BY hh.media_id, hh.kind
 """
 
 
-def _media_hash_fixture(
-    spark: SparkSession, sf_dir: str, fam_mod: int = 83
-) -> DataFrame:
+def _media_hash_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark half of _MEDIA_HASH_CTES: identical (id, kind, hhex,
     hlong) rows. conv(hex,16,10) stays in-range because the hex is 15
     chars (60 bits); the hex image is rebuilt from the long so banding
@@ -4003,7 +3991,7 @@ def _media_hash_fixture(
         F.when(F.col("doc_id") % 2 == 0, F.lit("image"))
         .otherwise(F.lit("audio"))
         .alias("kind"),
-        (F.col("doc_id") % fam_mod).alias("fam"),
+        (F.col("doc_id") % 83).alias("fam"),
         (F.col("doc_id") % 59).alias("flip"),
         (F.col("doc_id") % 23 == 0).alias("corrupt"),
     )
@@ -8744,49 +8732,6 @@ FROM cand c JOIN sh s1 ON c.query_id = s1.doc_id JOIN sh s2 ON c.index_id = s2.d
 WHERE CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE)
          / (len(s1.s) + len(s2.s) - len(list_intersect(s1.s, s2.s))) >= 0.8
 """
-
-
-def _lsh_probe_sqls() -> tuple[str, str]:
-    """DuckDB analogue of the PROBE-ONLY production path against the
-    persisted LSH index (bench.py --deep-extras): ``setup`` materializes
-    the corpus-side shingle + band tables once (the build_lsh_index
-    analogue, untimed), ``probe`` computes query-side signatures on the
-    fly and joins the materialized tables (the lsh_query_near_dups
-    analogue, timed). Kept beside _lsh_incremental_sql so the two can
-    never drift."""
-    bands = ", ".join(
-        f"md5(sig[{2*b+1}]||'|'||sig[{2*b+2}])" for b in range(4)
-    )
-    setup = f"""
-CREATE TEMP TABLE idx_sh AS
-  SELECT doc_id, {_SHINGLES} AS s
-  FROM (SELECT doc_id, {_TOKS} AS w FROM documents WHERE doc_id % 5 <> 0) t;
-CREATE TEMP TABLE idx_bands AS
-  SELECT doc_id, u.b, [{bands}][u.b + 1] AS bucket
-  FROM (SELECT doc_id, {_sig_sql()} AS sig FROM idx_sh) g,
-       (SELECT unnest([0,1,2,3]) AS b) u;
-"""
-    probe = f"""
-WITH qt AS (SELECT doc_id, {_TOKS} AS w FROM documents WHERE doc_id % 5 = 0),
-qsh AS (SELECT doc_id, {_SHINGLES} AS s FROM qt),
-qsig AS (SELECT doc_id, {_sig_sql()} AS sig FROM qsh),
-qbands AS (
-  SELECT doc_id, u.b, [{bands}][u.b + 1] AS bucket
-  FROM qsig, (SELECT unnest([0,1,2,3]) AS b) u
-),
-cand AS (
-  SELECT DISTINCT q.doc_id AS query_id, i.doc_id AS index_id
-  FROM qbands q JOIN idx_bands i ON q.b = i.b AND q.bucket = i.bucket
-)
-SELECT c.query_id, c.index_id,
-       CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE)
-         / (len(s1.s) + len(s2.s) - len(list_intersect(s1.s, s2.s))) AS jaccard
-FROM cand c JOIN qsh s1 ON c.query_id = s1.doc_id
-            JOIN idx_sh s2 ON c.index_id = s2.doc_id
-WHERE CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE)
-         / (len(s1.s) + len(s2.s) - len(list_intersect(s1.s, s2.s))) >= 0.8
-"""
-    return setup, probe
 
 
 @declared("lsh_incremental_near_dups", _lsh_incremental_sql())

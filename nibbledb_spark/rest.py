@@ -57,6 +57,20 @@ class RouteError(Exception):
     """Maps to HTTP 400 (reference src/main.re:216-223)."""
 
 
+_LONG_MIN, _LONG_MAX = -(1 << 63), (1 << 63) - 1
+
+
+def _long(segment: str) -> int:
+    """A numeric path segment that becomes a Spark literal or an engine
+    argument: a signed 64-bit integer, else ValueError (a 400). Past the
+    long range the JVM would throw NumberFormatException from inside
+    py4j, which no route catches."""
+    v = int(segment)
+    if not _LONG_MIN <= v <= _LONG_MAX:
+        raise ValueError(f"numeric path segment out of the 64-bit range: {segment}")
+    return v
+
+
 def _split_path(path: str) -> list[str]:
     """Reference quirk Q10: routes match the tail of the '/'-split full
     URI, ignoring scheme/authority (src/main.re:204-214). Accept either a
@@ -291,13 +305,19 @@ class Router:
         reference grammar intact."""
         from nibbledb_spark.operators.timeseries import delta, resample
 
+        # the width parses first: a bad one is a 400 before any flush,
+        # read or rollup enable
+        every = (
+            _long(rest[0])
+            if verb in ("resample", "rollup") and rest
+            else 3_600_000_000
+        )
         ids = ids_s.split(",")
         self._flush(ids)
         pts = self.engine.points(ids)
         try:
             if verb == "resample" and rest:
                 fill = rest[1] if len(rest) > 1 else None
-                every = int(rest[0])
                 if fill is None and every in self.engine.rollup_widths:
                     # an unfilled resample IS the rollup view — same
                     # scaled-long mean arithmetic (ROLLUP_SCALE ==
@@ -338,7 +358,6 @@ class Router:
                 # read; first call at a width enables maintenance
                 if len(rest) > 1:
                     raise RouteError("unknown path")
-                every = int(rest[0]) if rest else 3_600_000_000
                 if every <= 0:
                     raise RouteError("rollup width must be positive")
                 if every not in self.engine.rollup_widths:
@@ -402,9 +421,10 @@ class Router:
                 # Mutating => POST; flush first so buffered points
                 # participate in the cutoff (reference flush-before-
                 # mutate discipline, src/timeseries.re:294-300)
+                cutoff = _long(p[4])
                 self._flush()
                 try:
-                    self.engine.apply_retention(int(p[4]))
+                    self.engine.apply_retention(cutoff)
                 except ValueError as e:
                     raise RouteError(str(e)) from e
                 return {"retention_floor_us": self.engine.retention_floor_us}
@@ -455,10 +475,10 @@ class Router:
             if p[:1] == ["ts"] and len(p) >= 4:
                 ids, verb = p[1], p[2]
                 if verb == "since":
-                    self._delete(ids, int(p[3]), None, p[4:])
+                    self._delete(ids, _long(p[3]), None, p[4:])
                     return None
                 if verb == "range" and len(p) >= 5:
-                    self._delete(ids, int(p[3]), int(p[4]), p[5:])
+                    self._delete(ids, _long(p[3]), _long(p[4]), p[5:])
                     return None
             raise RouteError("unknown path")
         raise RouteError("unknown method")

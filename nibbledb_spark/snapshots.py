@@ -112,8 +112,8 @@ class LogEntry:
 
 _LOG_DIR = "_log"
 
-# DV read shape choice, COST-BASED (round-10 `bench.py --dv-tax`,
-# measured on both 1.2k- and 150k-row files at 128 files):
+# DV read shape choice, COST-BASED (round-10 DV read-tax measurement,
+# on both 1.2k- and 150k-row files at 128 files):
 #   per-file shape  ~= _DV_PER_FILE_S * n_dvd_files   (fixed plan leg
 #       per file, nothing per row — 18.9 s at 128 files either way)
 #   batched shape   ~= _DV_BATCH_FIXED_S
@@ -539,9 +539,10 @@ class SnapshotLog:
         ``expose_pos`` keeps ``__file`` (input_file_name) and ``__pos``
         (row position) columns — the DV delete's internal view.
 
-        Shape choice is the measured cost model at _DV_* above
-        (bench --dv-tax): few DV'd files — or very LARGE ones, where
-        the batched shape's per-row string-key tax dominates — read
+        Shape choice is the measured cost model at _DV_* above (the
+        round-10 DV read-tax measurement): few DV'd files — or very
+        LARGE ones, where the batched shape's per-row string-key tax
+        dominates — read
         per-file with position-only anti-joins; otherwise ONE batched
         scan with ONE broadcast anti-join keyed on (file identity,
         position). File identity comes from ``_metadata.file_path`` with

@@ -32,10 +32,15 @@ def test_exact_dedup_keeps_one_per_group(spark, docs):
 
 
 def test_minhash_identical_docs_same_signature(spark, docs):
-    from nibbledb_spark.operators.dedup import minhash_signature, shingles
+    from nibbledb_spark.operators.dedup import (
+        DEFAULT_NUM_HASHES,
+        minhash_rows,
+        shingle_rows,
+    )
 
-    sig = docs.select(
-        "doc_id", minhash_signature(shingles("text")).alias("sig")
+    sig = minhash_rows(shingle_rows(docs)).select(
+        F.col("id").alias("doc_id"),
+        F.array(*[f"h{j}" for j in range(DEFAULT_NUM_HASHES)]).alias("sig"),
     )
     a = sig.alias("a")
     b = sig.alias("b")
@@ -52,34 +57,35 @@ def test_minhash_identical_docs_same_signature(spark, docs):
     assert mismatched.count() == 0
 
 
-def test_lsh_finds_planted_near_dups(spark):
+def test_lsh_finds_planted_near_dups(spark, monkeypatch):
     # sf0.01 documents contain 25 planted pairs with 3-gram jaccard >= 0.8;
     # the deterministic md5 minhash + 4x2 banding must recover all of them —
-    # and the array-HOF reference path and the row-oriented fast path must
-    # return the identical pair set
-    from nibbledb_spark.operators.dedup import (
-        near_dup_pairs_minhash,
-        near_dup_pairs_minhash_fast,
-    )
+    # and DuckDB running the declared oracle SQL (an independent statement
+    # of the same signatures, bands and Jaccard) must return the identical
+    # pair set, canonicalised as the oracle harness compares
+    import oracle_harness as oh
 
-    docs01 = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    slow = {
-        (r["id1"], r["id2"], r["jaccard"])
-        for r in near_dup_pairs_minhash(docs01, threshold=0.8).collect()
-    }
-    fast = {
-        (r["id1"], r["id2"], r["jaccard"])
-        for r in near_dup_pairs_minhash_fast(docs01, threshold=0.8).collect()
-    }
-    assert slow == fast
-    assert len(fast) == 25
+    from nibbledb_spark.operators.dedup import near_dup_pairs_minhash_fast
+    from nibbledb_spark.queries import ORACLE
+
+    sf01 = "/root/testdata/sf0.01"
+    monkeypatch.setattr(oh, "SF_DIR", sf01)
+    docs01 = spark.read.parquet(f"{sf01}/documents.parquet")
+    fast = near_dup_pairs_minhash_fast(docs01, threshold=0.8)
+    fast_rows = oh.pandas_rows(fast.toPandas())
+    ocols, orows = oh.run_duckdb(ORACLE["lsh_near_dup_pairs"])
+    assert oh.canon_rows(fast.columns, fast_rows) == oh.canon_rows(ocols, orows)
+    assert len(fast_rows) == 25
 
 
 def test_simhash_near_dups_close_hamming(spark):
-    from nibbledb_spark.operators.dedup import near_dup_pairs_minhash, simhash_docs
+    from nibbledb_spark.operators.dedup import (
+        near_dup_pairs_minhash_fast,
+        simhash_docs,
+    )
 
     docs01 = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    pairs = near_dup_pairs_minhash(docs01, threshold=0.8)
+    pairs = near_dup_pairs_minhash_fast(docs01, threshold=0.8)
     sh = simhash_docs(docs01)
     a = sh.withColumnRenamed("doc_id", "id1").withColumnRenamed("simhash", "h1")
     b = sh.withColumnRenamed("doc_id", "id2").withColumnRenamed("simhash", "h2")
@@ -182,8 +188,6 @@ def test_mrl_truncate_and_topk(spark, embeddings):
 
 def test_multimodal_feature_plumbing(spark, docs):
     from nibbledb_spark.operators.multimodal import (
-        FEATURE_DIM,
-        extract_features,
         frame_sample,
         payload_fingerprint,
     )
@@ -199,14 +203,6 @@ def test_multimodal_feature_plumbing(spark, docs):
             F.lit(5000).cast("long").alias("duration_ms"),
         ).alias("meta"),
     )
-    feats = extract_features(media)
-    row = feats.first()
-    assert len(row["feature"]) == FEATURE_DIM
-    assert feats.count() == docs.count()
-    # deterministic: same payload -> same feature
-    f2 = extract_features(media).where(F.col("media_id") == row["media_id"]).first()
-    assert list(f2["feature"]) == list(row["feature"])
-
     fp = payload_fingerprint(media)
     assert fp.where(F.col("payload_fp").isNull()).count() == 0
 
@@ -3372,6 +3368,20 @@ def _ppm_pattern(w, h, fn):
     return header + bytes(body)
 
 
+def _hamming_pairs(fp, hex_col, long_col, *, max_hamming=6, bands=4):
+    """(id1, id2, hamming) near-dup pairs of a fingerprint frame
+    (``image_dhash`` or ``audio_fingerprint`` output) through the shared
+    banded join, composed the way ``clean_media`` composes it."""
+    from nibbledb_spark.operators.multimodal import banded_hamming_pairs
+
+    h = fp.where(F.col("decoded")).select(
+        F.col("media_id").alias("id"),
+        F.col(hex_col).alias("hhex"),
+        F.col(long_col).alias("hlong"),
+    )
+    return banded_hamming_pairs(h, max_hamming=max_hamming, bands=bands)
+
+
 class TestImageDhash:
     def test_dhash_deterministic_and_upscale_invariant(self, spark):
         """dHash is a pure function of pixels, and an exact 2x
@@ -3399,10 +3409,7 @@ class TestImageDhash:
         hamming budget — GUARANTEED found below the pigeonhole bound —
         while a structurally different image does not pair; undecodable
         payloads are excluded, never fatal."""
-        from nibbledb_spark.operators.multimodal import (
-            image_dhash,
-            image_near_dup_pairs_dhash,
-        )
+        from nibbledb_spark.operators.multimodal import image_dhash
 
         base = lambda x, y: x * 13 + y * 5  # noqa: E731
         # perturb one pooled cell's luminance: flips at most the 2
@@ -3422,20 +3429,22 @@ class TestImageDhash:
         assert not hams[4]["decoded"] and hams[4]["dhash"] is None
         pairs = {
             (r["id1"], r["id2"]): r["hamming"]
-            for r in image_near_dup_pairs_dhash(media, max_hamming=3).collect()
+            for r in _hamming_pairs(
+                image_dhash(media), "dhash", "dhash_long", max_hamming=3
+            ).collect()
         }
         assert (1, 2) in pairs and 0 < pairs[(1, 2)] <= 3
         assert (1, 3) not in pairs and (2, 3) not in pairs
         assert not any(4 in p for p in pairs)
 
     def test_band_validation(self, spark):
-        from nibbledb_spark.operators.multimodal import image_near_dup_pairs_dhash
+        from nibbledb_spark.operators.multimodal import image_dhash
 
         media = spark.createDataFrame(
             [], "media_id long, kind string, payload binary"
         )
         with pytest.raises(ValueError, match="bands"):
-            image_near_dup_pairs_dhash(media, bands=5)
+            _hamming_pairs(image_dhash(media), "dhash", "dhash_long", bands=5)
 
     def test_tiny_images_flagged_not_hashed(self, spark):
         """Images below the 8x9 pooling grid must be FLAGGED, not
@@ -3443,10 +3452,7 @@ class TestImageDhash:
         not an exception), so without the guard every tiny image got
         the same content-independent hash and two unrelated 4x4
         thumbnails became a hamming-0 'near-dup' pair."""
-        from nibbledb_spark.operators.multimodal import (
-            image_dhash,
-            image_near_dup_pairs_dhash,
-        )
+        from nibbledb_spark.operators.multimodal import image_dhash
 
         media = spark.createDataFrame(
             [
@@ -3460,7 +3466,9 @@ class TestImageDhash:
         assert not rows[1]["decoded"] and rows[1]["dhash"] is None
         assert not rows[2]["decoded"] and rows[2]["dhash"] is None
         assert rows[3]["decoded"], "9x8 is exactly the grid — must hash"
-        pairs = image_near_dup_pairs_dhash(media, max_hamming=6).collect()
+        pairs = _hamming_pairs(
+            image_dhash(media), "dhash", "dhash_long", max_hamming=6
+        ).collect()
         assert pairs == [], "tiny images must never pair with anything"
 
 
@@ -3492,10 +3500,7 @@ class TestAudioFingerprint:
         budget (signal-band gradients survive, noise-floor bands may
         flip) and pairs; a reversed tone sequence does not pair;
         corrupt payloads are excluded, never fatal."""
-        from nibbledb_spark.operators.multimodal import (
-            audio_fingerprint,
-            audio_near_dup_pairs_fp,
-        )
+        from nibbledb_spark.operators.multimodal import audio_fingerprint
 
         seq = [(200, 1.0), (1600, 0.2), (400, 1.0), (3200, 0.1), (250, 0.9),
                (1200, 0.3), (300, 1.0), (2800, 0.15), (500, 0.8)]
@@ -3516,7 +3521,9 @@ class TestAudioFingerprint:
         assert not rows[4]["decoded"] and rows[4]["afp"] is None
         pairs = {
             (r["id1"], r["id2"]): r["hamming"]
-            for r in audio_near_dup_pairs_fp(media, max_hamming=8).collect()
+            for r in _hamming_pairs(
+                audio_fingerprint(media), "afp", "afp_long", max_hamming=8
+            ).collect()
         }
         assert pairs.get((1, 5)) == 0
         assert (1, 2) in pairs and 0 < pairs[(1, 2)] <= 8, "re-levelled near-dup"

@@ -404,6 +404,35 @@ def test_malformed_numeric_segments_are_400(router):
         assert body.startswith("Error:")
 
 
+def test_out_of_range_numeric_segments_are_400_and_touch_nothing(router):
+    """Segments that become Spark literals or engine mutations parse as
+    signed 64-bit integers: past that range every such route answers 400
+    before the engine is touched, instead of a py4j
+    NumberFormatException escaping handle() (which drops the connection
+    under serve()) or a rollup width no later call can use."""
+    hour = 3_600_000_000
+    big = "99999999999999999999"
+    assert router.handle("GET", f"/x/ts/butterflies/rollup/{hour}")[0] == 200
+    points = get(router, "/ts/butterflies/since/0")
+    floor = router.engine.retention_floor_us
+    for method, path in [
+        ("DELETE", f"/ts/butterflies/since/{big}"),
+        ("DELETE", f"/ts/butterflies/range/0/{big}"),
+        ("DELETE", f"/ts/butterflies/range/-{big}/0"),
+        ("GET", f"/x/ts/butterflies/resample/{big}"),
+        ("GET", f"/x/ts/butterflies/rollup/{big}"),
+        ("POST", f"/x/ctl/ts/retention/{big}"),
+    ]:
+        status, body = router.handle(method, path)
+        assert status == 400 and body.startswith("Error:"), (method, path, body)
+    assert get(router, "/ts/butterflies/since/0") == points
+    assert sorted(router.engine.rollup_widths) == [hour]
+    assert router.engine.retention_floor_us == floor
+    # the edge of the range is still a bound
+    assert router.handle("DELETE", f"/ts/butterflies/since/{(1 << 63) - 1}")[0] == 200
+    assert get(router, "/ts/butterflies/since/0") == points
+
+
 def test_delete_on_fresh_store_is_ok(engine):
     # nothing ever flushed: reference returns 200 OK for deleting
     # nonexistent series, and compaction of an empty store is a no-op
