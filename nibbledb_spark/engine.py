@@ -34,15 +34,30 @@ single writer, as the reference's one process is (src/main.re:225-227):
 another writer's files are seen by an engine built after that write, or
 after this engine's next one.
 
+The day index is the reference's shard index (src/index.re:92-105) at
+day grain: per series, ``{day: rows}`` of the held listing. It lives
+and dies with the listing. ``append_rows`` carries it forward by the
+appended rows' counts, as the reference's flush updates its index; any
+other mutation (``append_points``, the staged swap behind delete,
+compact and retention, the crash heal) drops it, and the next
+``last``/``first`` rebuilds it with one GROUP BY job over the listing —
+O(store), so a bulk load pays it once. A store not written yet has the
+empty index. It may count fewer rows than the listing holds, never
+more: ``last``/``first`` walk each id's days newest-first (oldest-first)
+until they reach n, and read only the days from there on, so a low
+count only widens that bound.
+
 Every raw read (``last``/``first``/``since``/``range``, and
 ``latest``/``earliest`` through them) is ONE ``sql_over`` statement,
 composed from the scan builders in ``operators/timeseries.py`` over the
-held listing. Its selection prunes the store to the ids' buckets, the
-series and the day/ts bounds, and is read on ONE partition (a
-``COALESCE(1)`` hint on the selection's own SELECT). Over a
-single-partition child the per-series window, the Q5 sort and the tag
-filter + aggregate the REST layer adds all plan with no exchange, so
-each read runs as one Spark job of one task. That costs no parallelism
+held listing — with the caller's buffered rows under ``UNION ALL``
+when it passes any (the REST buffers). Its selection prunes the store
+to the ids' buckets, the series and the day/ts bounds, and is read on
+ONE partition (a ``COALESCE(1)`` hint on the selection's own SELECT).
+Over a single-partition child the per-series window, the Q5 sort and
+the tag filter + aggregate the REST layer adds all plan with no
+exchange, so once the listing's day index is held each read runs as
+one Spark job of one task. That costs no parallelism
 a response could use: every read result goes to the driver anyway, as
 the reference answers every read inside its one process. It also makes
 float ``sum``/``mean``/``sd`` fold in Q5 order, so they depend only on
@@ -66,12 +81,14 @@ from __future__ import annotations
 
 import functools
 import json
+import math
 import os
 import shutil
 import threading
 from collections.abc import Sequence
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -105,8 +122,10 @@ STORE_SCHEMA = T.StructType(
 # any other layout number is refused rather than read as this one
 STORE_LAYOUT = 2
 PARTITION_COLS = ("bucket", "day")
-# the point columns a raw read returns, in POINT_SCHEMA order
+# the point columns a raw read returns, in POINT_SCHEMA order, and the
+# store's columns, in STORE_SCHEMA order
 _READ_COLS = ", ".join(f.name for f in POINT_SCHEMA.fields)
+_STORE_COLS = ", ".join(f.name for f in STORE_SCHEMA.fields)
 
 # Continuous-aggregate rollup (the hypertable-rollup analogue): per
 # (series, time bucket) mergeable partials. Sums are scaled longs
@@ -136,9 +155,46 @@ def bucket_sql(series: str, num_buckets: int) -> str:
 
 
 def day_of(ts_col):
-    # floor division (matches Python's // used for read-side bounds;
-    # double intermediate is exact: |day| < 2^26)
+    """THE ts -> day partition value: floor of the double quotient
+    (``day_number`` is the same arithmetic on the driver)."""
     return F.floor(ts_col / F.lit(DAY_US)).cast("int")
+
+
+# the range of a stored ts (a Spark LONG)
+LONG_MIN, LONG_MAX = -(1 << 63), (1 << 63) - 1
+
+
+def day_number(ts: int) -> int:
+    """``day_of`` for one ts on the driver: the long rounded to a
+    double, IEEE division, floor — so a day bound computed here names
+    the partition the writer put that ts in, even where the double
+    quotient is inexact (|ts| past 2^53). A ts past the long range is
+    clamped to it first; no stored ts lies beyond."""
+    return math.floor(float(min(max(ts, LONG_MIN), LONG_MAX)) / DAY_US)
+
+
+def _points_table(rows: Sequence[tuple]) -> pa.Table:
+    """``(series, ts, tag, value)`` rows as an Arrow table of
+    POINT_SCHEMA. ``createDataFrame`` turns it into a local relation in
+    a few py4j calls, where a list of tuples ships a pickled RDD that a
+    Python worker decodes: 2,000 points, ``createDataFrame`` + ``count``
+    warm, median of 5 on local[2] in a 4-core container, took 490 ms
+    from a list and 161 ms from this table."""
+    series, ts, tag, value = zip(*rows)
+    try:
+        return pa.table(
+            {
+                "series": pa.array(series, pa.string()),
+                "ts": pa.array(ts, pa.int64()),
+                "tag": pa.array(
+                    [None if t is None else list(t.items()) for t in tag],
+                    pa.map_(pa.string(), pa.string()),
+                ),
+                "value": pa.array(value, pa.float64()),
+            }
+        )
+    except OverflowError as e:  # a timestamp past the long range
+        raise ValueError(f"point out of range: {e}") from e
 
 
 def _merge_partials(partials: DataFrame, every_us: int | None = None) -> DataFrame:
@@ -207,8 +263,13 @@ class TimeSeriesEngine:
             int(x) for x in meta.get("rollup_widths", [])
         )
         self.retention_floor_us: int = int(meta.get("retention_floor_us", 0))
-        # the held store listing and its write generation (see _store)
+        # the held store listing, its day index and its write generation
+        # (see _store and _day_counts); a store not written yet has the
+        # empty index
         self._listing: DataFrame | None = None
+        self._days: dict[str, dict[int, int]] | None = (
+            None if os.path.exists(path) else {}
+        )
         self._generation = 0
         self._listing_lock = threading.Lock()
         # heal any bucket swap interrupted by a crash (see _staged_swap)
@@ -274,13 +335,40 @@ class TimeSeriesEngine:
 
     def append_rows(self, series: str, rows: Sequence[tuple]) -> None:
         """Append validated ``(ts, tag, value)`` tuples of one series
-        (the output of ``validate_points``); no-op when empty."""
-        if rows:
-            self.append_points(
-                self.spark.createDataFrame(
-                    [(series, t, tag, v) for (t, tag, v) in rows], POINT_SCHEMA
-                )
-            )
+        (the output of ``validate_points``); no-op when empty.
+
+        The day index carries forward, as the reference's flush updates
+        its shard index (``Index.update``, src/timeseries.re:134-135):
+        when this append is the only mutation since the held index was
+        taken, the next listing's index is that index plus the rows'
+        (series, day) counts, with no job."""
+        if not rows:
+            return
+        with self._listing_lock:
+            days, generation = self._days, self._generation
+        self.append_points(self._points_frame([(series, *r) for r in rows]))
+        if days is None:
+            return
+        counts = dict(days.get(series, {}))
+        for t, _, _ in rows:
+            d = day_number(t)
+            counts[d] = counts.get(d, 0) + 1
+        with self._listing_lock:
+            if self._generation == generation + 1 and self._days is None:
+                self._days = {**days, series: counts}
+
+    def _points_frame(self, rows: Sequence[tuple]) -> DataFrame:
+        """``(series, ts, tag, value)`` rows as a local POINT_SCHEMA frame."""
+        return self.spark.createDataFrame(_points_table(rows), POINT_SCHEMA)
+
+    def _partitioned(self, points: DataFrame) -> DataFrame:
+        """``points`` with the store's partition columns, as the writer
+        derives them."""
+        return points.select(
+            "*",
+            F.expr(bucket_sql("series", self.num_buckets)).alias("bucket"),
+            day_of(F.col("ts")).alias("day"),
+        )
 
     @_drops_listing
     def append_points(self, df: DataFrame) -> None:
@@ -292,9 +380,7 @@ class TimeSeriesEngine:
         file listing; swap the open() for the Hadoop FS API on a
         non-local store)."""
         self._write_meta()
-        out = df.withColumn(
-            "bucket", F.expr(bucket_sql("series", self.num_buckets))
-        ).withColumn("day", day_of(F.col("ts")))
+        out = self._partitioned(df)
 
         def _write_main(src: DataFrame) -> None:
             (
@@ -377,6 +463,44 @@ class TimeSeriesEngine:
         with self._listing_lock:
             self._generation += 1
             self._listing = None
+            self._days = None
+
+    def listing(self) -> DataFrame:
+        """The store as a read sees it now: the held listing, or an
+        empty frame for a store not written yet. A caller that must
+        pair the store with state of its own (the REST buffers) takes
+        both at once and passes this back as the reads' ``store``."""
+        if os.path.exists(self.path):
+            return self._store()
+        return self.spark.createDataFrame([], STORE_SCHEMA)
+
+    def _day_counts(self, store: DataFrame) -> dict[str, dict[int, int]]:
+        """The day index of ``store``: per series, ``{day: rows}`` —
+        the reference's shard index (src/index.re:92-105) at day grain.
+        For the held listing it is held with it: carried forward by
+        ``append_rows``, else built by one GROUP BY job over the listing
+        (read on one partition, so the job is one task) and dropped with
+        the listing. It never counts a row the listing lacks; it may
+        miss rows of a write that landed while the listing was taken,
+        which only widens the day bound of a read."""
+        with self._listing_lock:
+            if store is self._listing and self._days is not None:
+                return self._days
+        if not os.path.exists(self.path):
+            return {}
+        rows = sql_over(
+            self.spark,
+            "SELECT series, day, COUNT(*) AS n FROM "
+            "(SELECT /*+ COALESCE(1) */ series, day FROM {store}) GROUP BY series, day",
+            store=store,
+        ).collect()
+        days: dict[str, dict[int, int]] = {}
+        for r in rows:
+            days.setdefault(r["series"], {})[r["day"]] = r["n"]
+        with self._listing_lock:
+            if store is self._listing and self._days is None:
+                self._days = days
+        return days
 
     def _in_buckets_sql(self, ids: Sequence[str]) -> str:
         """The predicate on the buckets of ``ids``. bucket_sql over
@@ -398,85 +522,194 @@ class TimeSeriesEngine:
         *,
         ts_from: int | None = None,
         ts_to: int | None = None,
+        store: DataFrame | None = None,
     ) -> DataFrame:
-        """The unified points DataFrame, optionally restricted to series
-        ids and/or a time window. The bucket predicate is derived from
-        the ids and the day predicate from the ts bounds, so Catalyst
+        """The unified points DataFrame of ``store`` (default: the
+        current ``listing()``), optionally restricted to series ids
+        and/or a time window. The bucket predicate is derived from the
+        ids and the day predicate from the ts bounds, so Catalyst
         partition-prunes BOTH dimensions to only the relevant
         directories before any file is opened."""
-        if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], POINT_SCHEMA)
-        df = self._store()
+        df = self.listing() if store is None else store
         if ids:
             df = self._in_buckets(df, ids).where(F.col("series").isin(list(ids)))
         if ts_from is not None:
-            df = df.where(F.col("day") >= ts_from // DAY_US)
+            df = df.where(F.col("day") >= day_number(ts_from))
             df = df.where(F.col("ts") >= ts_from)
         if ts_to is not None:
-            df = df.where(F.col("day") <= ts_to // DAY_US)
+            df = df.where(F.col("day") <= day_number(ts_to))
             df = df.where(F.col("ts") <= ts_to)
         return df.select("series", "ts", "tag", "value")
 
     # raw reads: one statement each (see the module docstring) -------------
+    # ``store`` is the listing to read (default: ``listing()``) and
+    # ``buffered`` holds ``(series, ts, tag, value)`` rows not in it,
+    # read as if stored: the REST layer passes its unflushed points.
 
-    def _read(self, query: str) -> DataFrame:
-        """``query`` (whose FROM source is ``{store}``) as one statement
-        over the held listing; a store not written yet reads empty."""
-        store = (
-            self._store()
-            if os.path.exists(self.path)
-            else self.spark.createDataFrame([], STORE_SCHEMA)
-        )
-        return sql_over(self.spark, query, store=store)
+    def _read(
+        self, query: str, store: DataFrame, buffered: Sequence[tuple]
+    ) -> DataFrame:
+        """``query`` (whose FROM source is ``_selection``'s) as one
+        statement over ``store`` and the ``buffered`` rows."""
+        frames = {"store": store}
+        if buffered:
+            frames["buffered"] = self._partitioned(self._points_frame(buffered))
+        return sql_over(self.spark, query, **frames)
 
     def _selection(
         self,
         ids: Sequence[str],
         ts_from: int | None = None,
         ts_to: int | None = None,
+        *,
+        buffered: bool = False,
+        where: Sequence[str] = (),
     ) -> str:
-        """The store pruned to the ids' buckets and series and the
-        day/ts bounds, read on one partition."""
-        where = [self._in_buckets_sql(ids)] if ids else []
+        """The store — with the buffered rows under UNION ALL — pruned
+        to the ids' buckets and series, the day/ts bounds and the
+        caller's ``where``, read on one partition."""
+        src = (
+            f"(SELECT {_STORE_COLS} FROM {{store}} "
+            f"UNION ALL SELECT {_STORE_COLS} FROM {{buffered}})"
+            if buffered
+            else "{store}"
+        )
+        where = list(where)
+        if ids:
+            where.insert(0, self._in_buckets_sql(ids))
         if ts_from is not None:
-            where.append(f"day >= {ts_from // DAY_US}")
+            where.append(f"day >= {day_number(ts_from)}")
         if ts_to is not None:
-            where.append(f"day <= {ts_to // DAY_US}")
+            where.append(f"day <= {day_number(ts_to)}")
         return ts_ops.selection_sql(
-            "{store}", _READ_COLS, ids, ts_from, ts_to,
+            src, _READ_COLS, ids, ts_from, ts_to,
             where=where, hint="/*+ COALESCE(1) */ ",
         )
 
-    def last(self, ids: Sequence[str], n: int) -> DataFrame:
-        sel = self._selection(ids)
-        return self._read(ts_ops.top_n_sql(sel, _READ_COLS, n, ids, descending=True))
+    def _top_n_bound(
+        self,
+        ids: Sequence[str],
+        n: int,
+        store: DataFrame,
+        buffered: Sequence[tuple],
+        descending: bool,
+    ) -> list[str]:
+        """The day predicate that bounds a per-series top-n, as the
+        reference walks its shard index newest-first until it holds n
+        points (src/timeseries.re:399-412). Per id, the index counts
+        plus the buffered rows' days are walked from the newest day
+        (oldest for ``first``) until they reach n; the predicate keeps
+        every day from the furthest such day on. An id that never
+        reaches n — too few points, none, or an index that missed some
+        — may need any day, so there is then no bound; nor for
+        n <= 0."""
+        if n <= 0 or not ids:
+            return []
+        index = self._day_counts(store)
+        in_buffer: dict[str, dict[int, int]] = {}
+        for series, t, _, _ in buffered:
+            days = in_buffer.setdefault(series, {})
+            d = day_number(t)
+            days[d] = days.get(d, 0) + 1
+        edges = []
+        for s in set(ids):
+            days = dict(index.get(s, {}))
+            for d, c in in_buffer.get(s, {}).items():
+                days[d] = days.get(d, 0) + c
+            seen = 0
+            for d in sorted(days, reverse=descending):
+                seen += days[d]
+                if seen >= n:
+                    edges.append(d)
+                    break
+            else:
+                return []
+        return [f"day >= {min(edges)}" if descending else f"day <= {max(edges)}"]
+
+    def _top_n(
+        self,
+        ids: Sequence[str],
+        n: int,
+        store: DataFrame | None,
+        buffered: Sequence[tuple],
+        *,
+        descending: bool,
+    ) -> DataFrame:
+        store = self.listing() if store is None else store
+        bound = self._top_n_bound(ids, n, store, buffered, descending)
+        sel = self._selection(ids, buffered=bool(buffered), where=bound)
+        query = ts_ops.top_n_sql(sel, _READ_COLS, n, ids, descending=descending)
+        return self._read(query, store, buffered)
+
+    def last(
+        self,
+        ids: Sequence[str],
+        n: int,
+        *,
+        store: DataFrame | None = None,
+        buffered: Sequence[tuple] = (),
+    ) -> DataFrame:
+        return self._top_n(ids, n, store, buffered, descending=True)
 
     def latest(self, ids: Sequence[str]) -> DataFrame:
         return self.last(ids, 1)
 
-    def first(self, ids: Sequence[str], n: int) -> DataFrame:
-        sel = self._selection(ids)
-        return self._read(ts_ops.top_n_sql(sel, _READ_COLS, n, ids, descending=False))
+    def first(
+        self,
+        ids: Sequence[str],
+        n: int,
+        *,
+        store: DataFrame | None = None,
+        buffered: Sequence[tuple] = (),
+    ) -> DataFrame:
+        return self._top_n(ids, n, store, buffered, descending=False)
 
     def earliest(self, ids: Sequence[str]) -> DataFrame:
         return self.first(ids, 1)
 
-    def since(self, ids: Sequence[str], ts_from: int) -> DataFrame:
-        sel = self._selection(ids, ts_from=ts_from)
-        return self._read(ts_ops.ordered_sql(sel, _READ_COLS))
+    def since(
+        self,
+        ids: Sequence[str],
+        ts_from: int,
+        *,
+        store: DataFrame | None = None,
+        buffered: Sequence[tuple] = (),
+    ) -> DataFrame:
+        return self._ordered(ids, ts_from, None, store, buffered)
 
-    def range(self, ids: Sequence[str], ts_from: int, ts_to: int) -> DataFrame:
-        sel = self._selection(ids, ts_from=ts_from, ts_to=ts_to)
-        return self._read(ts_ops.ordered_sql(sel, _READ_COLS))
+    def range(
+        self,
+        ids: Sequence[str],
+        ts_from: int,
+        ts_to: int,
+        *,
+        store: DataFrame | None = None,
+        buffered: Sequence[tuple] = (),
+    ) -> DataFrame:
+        return self._ordered(ids, ts_from, ts_to, store, buffered)
 
-    def length(self, ids: Sequence[str] = ()) -> int:
-        return self.points(ids).count()
+    def _ordered(
+        self,
+        ids: Sequence[str],
+        ts_from: int,
+        ts_to: int | None,
+        store: DataFrame | None,
+        buffered: Sequence[tuple],
+    ) -> DataFrame:
+        sel = self._selection(ids, ts_from, ts_to, buffered=bool(buffered))
+        query = ts_ops.ordered_sql(sel, _READ_COLS)
+        return self._read(query, self.listing() if store is None else store, buffered)
+
+    def length(
+        self, ids: Sequence[str] = (), *, store: DataFrame | None = None
+    ) -> int:
+        return self.points(ids, store=store).count()
 
     def names(self) -> list[str]:
         return [r["series"] for r in ts_ops.series_names(self.points()).collect()]
 
-    def stats(self) -> DataFrame:
-        return ts_ops.stats(self.points())
+    def stats(self, *, store: DataFrame | None = None) -> DataFrame:
+        return ts_ops.stats(self.points(store=store))
 
     def aggregate(self, ids: Sequence[str], agg: str, df: DataFrame | None = None):
         sel = df if df is not None else self.points(ids)
@@ -534,11 +767,13 @@ class TimeSeriesEngine:
 
     # -- shard-index observability (A29) ------------------------------------
 
-    def index(self, ids: Sequence[str] = ()) -> DataFrame:
+    def index(
+        self, ids: Sequence[str] = (), *, store: DataFrame | None = None
+    ) -> DataFrame:
         """Per-file (series, t_min, t_max, n) manifest — the engine's
         equivalent of the reference's shard index dump
         (src/index.re:79-90), derived from data, not a second store."""
-        df = self.points(ids)
+        df = self.points(ids, store=store)
         return (
             df.groupBy(F.input_file_name().alias("file"), F.col("series"))
             .agg(

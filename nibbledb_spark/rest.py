@@ -13,10 +13,15 @@ Fidelity notes:
   POSTs land in a per-series in-memory FIFO; when a series reaches
   ``max_buffer_size`` points the oldest ``shard_size`` are flushed to the
   parquet store (defaults 100,000 / 20,000 — reference src/main.re:9-10).
-  Reads and deletes flush the touched series first — observably identical
-  to the reference's memory/disk merge discipline (SURVEY.md A35), which
-  only exists to avoid re-sorting its row-list store; Spark's store is
-  one DataFrame, so flush-then-read gives the same results.
+- **Reads over buffer ∪ store** (reference src/timeseries.re:363-434,
+  SURVEY.md A35): a raw read (``last``/``first``/``since``/``range``)
+  and ``length`` do not flush. The read is one statement over the ids'
+  buffered points, as a local Arrow relation, ``UNION ALL`` the engine's
+  store listing, so it returns what it would after a flush. As the
+  reference does, ids holding ``shard_size`` or more buffered points are
+  flushed first instead. Deletes, the index and extension routes, and a
+  bare range aggregate served by a rollup (whose partials count stored
+  points only) still flush the touched series first.
 - **Serialization** (reference src/shard.re:94-108): points emit as
   ``{"timestamp": µs, "tag": [{k: v}, ...], "value": float}`` with the
   tag key omitted when absent; aggregates emit ``{"<agg>": float}``
@@ -30,8 +35,12 @@ Fidelity notes:
   semantics. Default here is true equality; ``compat_q1=True`` replicates
   the reference bug.
 - **Concurrency**: the reference serializes every request behind one
-  global mutex (src/main.re:225-227). The HTTP wrapper keeps a lock
-  around buffer mutation only; queries run concurrently on Spark.
+  global mutex (src/main.re:225-227). Here one lock guards the buffers;
+  a spill or flush holds it while it appends. A read or ``stats`` takes
+  its snapshot under the lock — the buffered points (or counts) and the
+  engine's store listing together — so each acknowledged point is in
+  exactly one of them; the Spark work runs outside the lock,
+  concurrently with other requests.
 """
 
 from __future__ import annotations
@@ -45,7 +54,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nibbledb_spark.engine import TimeSeriesEngine
+from nibbledb_spark.engine import LONG_MAX, LONG_MIN, TimeSeriesEngine
 from nibbledb_spark.operators import timeseries as ts_ops
 from nibbledb_spark.schema import ValidationError, validate_points
 
@@ -57,16 +66,13 @@ class RouteError(Exception):
     """Maps to HTTP 400 (reference src/main.re:216-223)."""
 
 
-_LONG_MIN, _LONG_MAX = -(1 << 63), (1 << 63) - 1
-
-
 def _long(segment: str) -> int:
     """A numeric path segment that becomes a Spark literal or an engine
     argument: a signed 64-bit integer, else ValueError (a 400). Past the
     long range the JVM would throw NumberFormatException from inside
     py4j, which no route catches."""
     v = int(segment)
-    if not _LONG_MIN <= v <= _LONG_MAX:
+    if not LONG_MIN <= v <= LONG_MAX:
         raise ValueError(f"numeric path segment out of the 64-bit range: {segment}")
     return v
 
@@ -167,14 +173,42 @@ class Router:
         """Flush listed (or all) series buffers to the store (A5;
         reference src/timeseries.re:170-179)."""
         with self._lock:
-            keys = list(self._buffer) if ids is None else [i for i in ids if i in self._buffer]
-            for k in keys:
-                rows = self._buffer.pop(k, [])
-                self._flush_rows(k, rows)
+            self._flush_locked(ids)
+
+    def _flush_locked(self, ids: list[str] | None) -> None:
+        keys = list(self._buffer) if ids is None else [i for i in ids if i in self._buffer]
+        for k in keys:
+            rows = self._buffer.pop(k, [])
+            self._flush_rows(k, rows)
 
     def _buffered(self, ids: list[str]) -> int:
         with self._lock:
             return sum(len(self._buffer.get(i, [])) for i in ids)
+
+    # -- snapshots: the buffers and the store listing, taken together --------
+    # A spill moves points from a buffer to the store under the lock, so
+    # what is read from both under it holds every acknowledged point
+    # exactly once. Spark work on the snapshot runs outside the lock.
+
+    def _snapshot(self, ids: list[str]) -> tuple[DataFrame, list[tuple]]:
+        """The store listing and the ``(series, ts, tag, value)`` rows
+        buffered for the distinct ``ids``. Ids holding ``shard_size`` or
+        more buffered points are flushed first, as the reference flushes
+        rather than merge a large buffer (src/timeseries.re:363-382)."""
+        keys = list(dict.fromkeys(ids))
+        with self._lock:
+            if sum(len(self._buffer.get(i, ())) for i in keys) >= self.shard_size:
+                self._flush_locked(keys)
+            held = [(i, list(self._buffer[i])) for i in keys if self._buffer.get(i)]
+            store = self.engine.listing()
+        return store, [(i, *p) for i, pts in held for p in pts]
+
+    def _counts(self) -> tuple[DataFrame, dict[str, int]]:
+        """The store listing and every series' buffered point count."""
+        with self._lock:
+            mem = {k: len(v) for k, v in self._buffer.items()}
+            store = self.engine.listing()
+        return store, mem
 
     # -- read path ----------------------------------------------------------
 
@@ -215,29 +249,26 @@ class Router:
         return ts_ops.aggregate_result(df, agg)
 
     def _read(self, ids_s: str, kind: str, args: list[str], xargs: list[str]) -> Any:
+        """One raw read over the ids' buffered points and the store
+        listing of one snapshot, with no flush."""
         ids = ids_s.split(",")
-        self._flush(ids)
+        bounds = [int(a) for a in args]
         eng = self.engine
-        if kind == "last":
-            df = eng.last(ids, int(args[0]))
-        elif kind == "first":
-            df = eng.first(ids, int(args[0]))
-        elif kind == "since":
-            df = eng.since(ids, int(args[0]))
-        elif kind == "range":
+        if (
+            kind == "range"
+            and len(xargs) == 1
+            and xargs[0] in ts_ops.AGGREGATES
+            and eng.rollup_every_us
+        ):
             # bare range+aggregate routes through the engine's
             # materialized-view dispatch (rollup when enabled, mergeable
-            # and bucket-aligned; raw scan otherwise)
-            if (
-                len(xargs) == 1
-                and xargs[0] in ts_ops.AGGREGATES
-                and eng.rollup_every_us
-            ):
-                return eng.aggregate_range(ids, int(args[0]), int(args[1]), xargs[0])
-            df = eng.range(ids, int(args[0]), int(args[1]))
-        else:  # pragma: no cover
-            raise RouteError("unknown path")
-        return self._process(df, xargs)
+            # and bucket-aligned; raw scan otherwise); the rollup
+            # partials count flushed points only
+            self._flush(ids)
+            return eng.aggregate_range(ids, *bounds, xargs[0])
+        store, buffered = self._snapshot(ids)
+        read = {"last": eng.last, "first": eng.first, "since": eng.since, "range": eng.range}[kind]
+        return self._process(read(ids, *bounds, store=store, buffered=buffered), xargs)
 
     def _delete(self, ids_s: str, ts_from: int, ts_to: int | None, xargs: list[str]) -> None:
         ids = ids_s.split(",")
@@ -275,15 +306,15 @@ class Router:
 
     def _stats(self) -> list[dict[str, Any]]:
         """A31 shape (reference src/timeseries.re:639-694): a 4-element
-        array of {metric: [{id: n}, ...]} dicts. One Spark pass for the
-        disk counts; index counts from the manifest."""
-        ts = self._names()["timeseries"]
-        disk = {r["series"]: r["length"] for r in self.engine.stats().collect()}
+        array of {metric: [{id: n}, ...]} dicts, all of one snapshot.
+        One Spark pass for the disk counts; index counts from the
+        manifest."""
+        store, mem = self._counts()
+        disk = {r["series"]: r["length"] for r in self.engine.stats(store=store).collect()}
         idx: dict[str, int] = {}
-        for r in self.engine.index().collect():
+        for r in self.engine.index(store=store).collect():
             idx[r["series"]] = idx.get(r["series"], 0) + 1
-        with self._lock:
-            mem = {k: len(v) for k, v in self._buffer.items()}
+        ts = sorted(set(mem) | set(disk))
         return [
             {"length": [{i: disk.get(i, 0) + mem.get(i, 0)} for i in ts]},
             {"length_in_memory": [{i: mem.get(i, 0)} for i in ts]},
@@ -446,9 +477,10 @@ class Router:
                 if verb == "range" and len(rest) >= 2:
                     return self._read(ids, "range", rest[:2], rest[2:])
                 if verb == "length" and not rest:
-                    id_list = ids.split(",")
-                    self._flush(id_list)
-                    return {"length": self.engine.length(id_list)}
+                    id_list = list(dict.fromkeys(ids.split(",")))
+                    store, mem = self._counts()
+                    disk = self.engine.length(id_list, store=store)
+                    return {"length": disk + sum(mem.get(i, 0) for i in id_list)}
                 if verb == "memory" and rest == ["length"]:
                     return {"length": self._buffered(ids.split(","))}
                 if verb == "disk" and rest == ["length"]:

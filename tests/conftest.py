@@ -50,6 +50,19 @@ HONEYBEES = _pts(
 )
 
 
+def run_in_job_group(spark, group, fn):
+    """fn() in its own Spark job group: (its result, the number of
+    Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("nibbledb_spark_tests", shuffle_partitions=8)

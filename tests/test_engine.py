@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 
 from nibbledb_spark.schema import ValidationError
-from tests.conftest import BUTTERFLIES, HONEYBEES
+from tests.conftest import BUTTERFLIES, HONEYBEES, run_in_job_group
 
 WIRE_BUTTERFLIES = [
     {"timestamp": t, "tag": [{k: v} for k, v in tag.items()], "value": v_}
@@ -780,3 +780,130 @@ def test_float_aggregates_do_not_depend_on_layout_or_partitions(spark, tmp_path)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", conf)
     assert at_one == at_four == want
+
+
+# ---------------------------------------------------------------------------
+# day-bounded top-n and the day index
+# ---------------------------------------------------------------------------
+
+
+def test_day_number_is_the_writers_day(spark):
+    """The driver's day of a ts names the partition the writer puts it
+    in, at day edges, for negative ts and where the double quotient is
+    inexact."""
+    from pyspark.sql import functions as F
+
+    from nibbledb_spark.engine import DAY_US, day_number, day_of
+
+    edges = [0, 1, -1, DAY_US - 1, DAY_US, -DAY_US, -DAY_US - 1, 2**53 - 1, 2**53 + 1]
+    edges += [k * DAY_US + d for k in (106_751_990, -106_751_991, 104_249_991) for d in (-1, 0, 1)]
+    edges += [2**62 + 12345, -(2**62) - 1, 2**63 - 1, -(2**63)]
+    frame = spark.createDataFrame([(t,) for t in edges], "ts long")
+    got = [r[0] for r in frame.select(day_of(F.col("ts"))).collect()]
+    assert got == [day_number(t) for t in edges]
+    assert day_number(10**30) == day_number(2**63 - 1)  # clamped, no overflow
+
+
+def test_day_bounded_top_n_matches_the_operators(spark, engine):
+    """last/first read only the days an index walk says can hold the
+    answer; the bodies still equal ts_ops.last_n/first_n over the points
+    for n ending exactly on a day edge, equal timestamps tied across
+    series at a day edge, negative ts, ids with different day spans,
+    n of 0, -1 and past the series length, and buffered rows in the
+    newest day (and older than the store)."""
+    from nibbledb_spark.engine import DAY_US as D
+    from nibbledb_spark.operators import timeseries as ts_ops
+
+    # a: 3 points on day 0, 2 on day 1, 2 on day 2
+    engine.append_rows("a", [(t, {"k": "a"}, float(i)) for i, t in enumerate((5, 6, 7, D, D + 9, 2 * D, 2 * D + 3))])
+    # b: days 1-3, tied with a at the first µs of day 2
+    engine.append_rows("b", [(2 * D, {"k": "b"}, 1.0), (2 * D, None, 3.0), (2 * D - 1, None, 4.0), (3 * D, None, 2.0)])
+    engine.append_rows("neg", [(t, None, float(t)) for t in (-2 * D, -D - 1, -D, -1, 0)])
+    buffered = [("a", 2 * D + 1, None, 8.0), ("a", 3, None, 9.0), ("b", 3 * D + 7, {"k": "z"}, 0.5)]
+    store = engine.listing()
+    assert engine._top_n_bound(["a"], 2, store, (), True) == [f"day >= 2"]
+    assert engine._top_n_bound(["a"], 4, store, (), True) == [f"day >= 1"]
+    assert engine._top_n_bound(["a", "b"], 2, store, buffered, True) == [f"day >= 2"]
+    assert engine._top_n_bound(["neg"], 3, store, (), False) == [f"day <= -1"]
+    assert engine._top_n_bound(["a", "zz"], 1, store, (), True) == []
+
+    def top(rows, n):
+        """ts_ops' top-n at n from its top-n at a larger n: the first n
+        rows of each series, in the same order."""
+        seen: dict = {}
+        out = []
+        for r in rows:
+            seen[r["series"]] = seen.get(r["series"], 0) + 1
+            if seen[r["series"]] <= n:
+                out.append(r)
+        return out
+
+    cases = [(["a", "b"], ()), (["a", "b"], buffered), (["a", "a"], buffered[:2]), (["neg"], ()), (["b", "zz"], ())]
+    for ids, buf in cases:
+        pts = engine.points(ids)
+        if buf:
+            pts = pts.unionByName(engine._points_frame(buf))
+        newest, oldest = ts_ops.last_n(pts, (), 50).collect(), ts_ops.first_n(pts, (), 50).collect()
+        assert top(newest, 3) == ts_ops.last_n(pts, (), 3).collect()
+        assert top(oldest, 3) == ts_ops.first_n(pts, (), 3).collect()
+        longest = max((sum(r["series"] == s for r in newest) for s in ids), default=0)
+        for n in range(-1, longest + 2):
+            got = engine.last(ids, n, store=store, buffered=buf).collect()
+            assert got == top(newest, n), (ids, buf, n)
+            got = engine.first(ids, n, store=store, buffered=buf).collect()
+            assert got == top(oldest, n), (ids, buf, n)
+
+
+def test_day_index_lifecycle(spark, tmp_path):
+    """The day index counts exactly the listing's rows. A store not
+    written yet has the empty one, without a job; append_rows carries
+    it forward; append_points, delete, compact, apply_retention and a
+    crash heal drop it. After an append_points the first last builds it
+    (2 jobs: index and read), the next reads it (1 job)."""
+    import os
+    from collections import Counter
+
+    from nibbledb_spark.engine import DAY_US as D
+    from nibbledb_spark.engine import TimeSeriesEngine, day_number
+    from nibbledb_spark.schema import POINT_SCHEMA
+
+    eng = TimeSeriesEngine(spark, str(tmp_path / "store"), num_buckets=4)
+
+    def exact():
+        counts = Counter((r["series"], day_number(r["ts"])) for r in eng.points().collect())
+        out: dict = {}
+        for (s, d), n in counts.items():
+            out.setdefault(s, {})[d] = n
+        return out
+
+    assert run_in_job_group(spark, "index_new_store", lambda: eng._day_counts(eng.listing())) == ({}, 0)
+    eng.append_rows("a", [(d * D + j, None, 1.0) for d in range(3) for j in range(4)])
+    eng.append_rows("b", [(D + j, {"k": "v"}, 2.0) for j in range(3)])
+    eng.append_rows("a", [(3 * D, None, 1.0)])
+    assert eng._days == exact() and eng._days["a"][3] == 1
+
+    def last_jobs(tag):
+        (rows, jobs) = run_in_job_group(spark, tag, lambda: eng.last(["a"], 2).collect())
+        assert [r["ts"] for r in rows] == [3 * D, 2 * D + 3]
+        return jobs
+
+    assert last_jobs("index_carried") == 1
+    eng.append_points(spark.createDataFrame([("c", 4 * D, None, 1.0)], POINT_SCHEMA))
+    assert eng._days is None
+    assert last_jobs("index_built") == 2
+    assert eng._days == exact()
+    assert last_jobs("index_held") == 1
+
+    eng.enable_rollup(D)
+    for mutate in (
+        lambda: eng.delete(["b"], D, D),
+        lambda: eng.compact(),
+        lambda: eng.apply_retention(D),
+        lambda: (os.makedirs(eng._trash_dir()), eng._recover_staged_swap()),
+    ):
+        eng.last(["a"], 2).collect()
+        assert eng._days is not None
+        mutate()
+        assert eng._days is None
+    eng.last(["a"], 2).collect()
+    assert eng._days == exact()

@@ -12,6 +12,7 @@ import json
 import pytest
 
 from nibbledb_spark.rest import Router, serve
+from tests.conftest import run_in_job_group
 
 BFLY = [
     {"timestamp": 1439856000000000, "tag": [{"location": "1"}, {"scientist": "langstroth"}], "value": 12},
@@ -188,6 +189,8 @@ def test_filtered_aggregate_and_q1_compat(engine):
     path = "/ts/b/last/8/filter/scientist/equals/lang/mean"
     # default: true equality -> no 'lang' scientist -> empty mean
     assert r.handle_json("GET", path)[1] == {}
+    # reads do not flush: store the first router's points for the second
+    assert r.handle("GET", "/ctl/ts/sync")[0] == 200
     # compat_q1: equals+agg degrades to contains, matching the reference
     rq = Router(engine, compat_q1=True)
     status, out = rq.handle_json("GET", path)
@@ -727,3 +730,193 @@ def test_retention_control_route(engine):
     # misaligned cutoff and backwards floor both 400
     assert router.handle("POST", f"/x/ctl/ts/retention/{3 * HOUR + 5}")[0] == 400
     assert router.handle("POST", f"/x/ctl/ts/retention/{HOUR}")[0] == 400
+
+
+# ---------------------------------------------------------------------------
+# reads over buffer ∪ store, with no flush
+# ---------------------------------------------------------------------------
+
+DAY = 86_400_000_000
+
+
+def _read_paths(ids: str) -> list[str]:
+    """last, first, since and range, each bare, filtered, filtered +
+    aggregated and aggregated."""
+    t0 = BFLY[0]["timestamp"]
+    out = []
+    for base in (
+        f"/ts/{ids}/last/3",
+        f"/ts/{ids}/first/3",
+        f"/ts/{ids}/since/{t0 + 360_000_000}",
+        f"/ts/{ids}/range/{t0 - DAY}/{t0 + 21_600_000_000}",
+    ):
+        out += [
+            base,
+            base + "/filter/location/equals/2",
+            base + "/filter/scientist/equals/perpetua/mean",
+            base + "/sum",
+        ]
+    return out
+
+
+def test_reads_over_buffer_and_store_equal_reads_after_sync(spark, engine):
+    """A read with points still buffered returns the literal body it
+    returns once they are stored, leaves the buffer as it was and runs
+    one Spark job. The buffers hold out-of-order POSTs, points older
+    than the stored ones (on the same and on earlier days) and points on
+    a later day; ids include a duplicate, an unknown id and a series
+    with nothing stored."""
+    r = Router(engine)
+    assert r.handle("POST", "/ts/butterflies", json.dumps(BFLY[2:6]))[0] == 200
+    assert r.handle("GET", "/ctl/ts/sync")[0] == 200
+    older = [
+        {"timestamp": BFLY[0]["timestamp"] - DAY + 7, "tag": [{"location": "2"}, {"scientist": "perpetua"}], "value": 4},
+        {"timestamp": BFLY[0]["timestamp"] - 3 * DAY, "tag": [{"location": "3"}], "value": 9},
+    ]
+    later = [{"timestamp": BFLY[-1]["timestamp"] + DAY, "tag": [{"location": "2"}], "value": 5}]
+    for batch in (BFLY[7:8], BFLY[0:2], older, BFLY[6:7], later):
+        assert r.handle("POST", "/ts/butterflies", json.dumps(batch))[0] == 200
+    assert r.handle("POST", "/ts/honeybees", json.dumps(BEES[::-1]))[0] == 200
+    memory = {"butterflies": 7, "honeybees": 4}
+
+    paths = [
+        p
+        for ids in ("butterflies", "butterflies,butterflies", "butterflies,nosuch", "honeybees,butterflies")
+        for p in _read_paths(ids)
+    ]
+    before = {}
+    for i, path in enumerate(paths):
+        (status, body), jobs = run_in_job_group(spark, f"buffered_read_{i}", lambda: r.handle("GET", path))
+        assert status == 200, (path, body)
+        assert jobs == 1, path
+        before[path] = body
+        for s, n in memory.items():
+            assert get(r, f"/ts/{s}/memory/length") == {"length": n}, path
+    assert get(r, "/ts/butterflies,honeybees/length") == {"length": 15}
+    assert get(r, "/ts/butterflies/memory/length") == {"length": 7}
+    assert r.handle("GET", "/ctl/ts/sync")[0] == 200
+    assert get(r, "/ts/butterflies,honeybees/memory/length") == {"length": 0}
+    assert {p: r.handle("GET", p)[1] for p in paths} == before
+    assert before["/ts/butterflies/last/3"] != "[]"
+
+
+def test_read_of_ids_holding_a_shard_flushes_them(engine):
+    """Ids holding shard_size or more buffered points between them are
+    flushed before the read, as the reference flushes rather than merge
+    a large buffer; below that the buffer stays."""
+    r = Router(engine, max_buffer_size=100, shard_size=4)
+    pts = [{"timestamp": t, "value": float(t)} for t in range(1, 4)]
+    r.handle("POST", "/ts/a", json.dumps(pts))
+    assert get(r, "/ts/a/last/2") == [{"timestamp": 3, "value": 3.0}, {"timestamp": 2, "value": 2.0}]
+    assert get(r, "/ts/a/memory/length") == {"length": 3}
+    r.handle("POST", "/ts/b", json.dumps(pts[:1]))
+    assert get(r, "/ts/a,b/since/2/count") == {"count": 2.0}
+    assert get(r, "/ts/a,b/memory/length") == {"length": 0}
+    assert get(r, "/ts/a,b/disk/length") == {"length": 4}
+    r.handle("POST", "/ts/a", json.dumps([{"timestamp": 9, "value": 9.0}]))
+    assert get(r, "/ts/a/first/9/count") == {"count": 4.0}
+    assert get(r, "/ts/a/memory/length") == {"length": 1}
+
+
+def test_spilling_writer_racing_readers_loses_and_doubles_nothing(engine):
+    """One writer POSTs points whose buffer spills every few POSTs while
+    four readers read the series: every read holds each acknowledged
+    point exactly once — a prefix of the writes at least as long as the
+    acknowledged one when the read started."""
+    import sys
+    import threading
+
+    # a spill every 2-3 POSTs leaves 0-4 points buffered, which reads
+    # merge rather than flush (they flush at 5)
+    r = Router(engine, max_buffer_size=6, shard_size=5)
+    step = DAY // 2  # two points a day: the top-n day bound is in play
+    posts, per_post = 24, 2
+    acked = [0]
+    stop = threading.Event()
+    errors: list[str] = []
+
+    def writer():
+        try:
+            for k in range(posts):
+                body = [{"timestamp": (k * per_post + j) * step, "value": float(k * per_post + j)}
+                        for j in range(per_post)]
+                status, text = r.handle("POST", "/ts/w", json.dumps(body))
+                if status != 200:
+                    errors.append(f"POST {k}: {text}")
+                acked[0] = (k + 1) * per_post
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(f"writer: {e}"[:500])
+        finally:
+            stop.set()
+
+    def reader(i: int):
+        path = ("/ts/w/since/0", "/ts/w/last/3", "/ts/w/range/0/9999999999999999", "/ts/w/first/2")[i]
+        try:
+            while not stop.is_set():
+                floor = acked[0]
+                status, body = r.handle_json("GET", path)
+                if status != 200:
+                    errors.append(f"{path}: {body}")
+                    continue
+                ts = [p["timestamp"] // step for p in body]
+                if path.endswith("/first/2"):
+                    want_ok = ts == list(range(min(2, len(ts)))) and len(ts) >= min(2, floor)
+                elif path.endswith("/last/3"):
+                    top = ts[0] + 1 if ts else 0
+                    want_ok = top >= floor and ts == list(range(top - 1, max(top - 3, 0) - 1, -1))
+                else:
+                    want_ok = len(ts) >= floor and ts == list(range(len(ts) - 1, -1, -1))
+                if not want_ok:
+                    errors.append(f"{path} after {floor} acknowledged: {ts}")
+        except Exception as e:
+            errors.append(f"{path}: {e}"[:500])
+
+    threads = [threading.Thread(target=writer)] + [
+        threading.Thread(target=reader, args=(i,)) for i in range(4)
+    ]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        stop.set()
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert get(r, "/ts/w/length") == {"length": posts * per_post}
+
+
+def test_stats_and_length_count_one_snapshot(engine, monkeypatch):
+    """/info/ts/stats and /ts/:ids/length take the buffer counts and the
+    store listing together, so a spill landing while the disk counts run
+    neither drops its batch nor counts it twice; length does not
+    flush."""
+    r = Router(engine, max_buffer_size=6, shard_size=4)
+    pts = [{"timestamp": t, "value": float(t)} for t in range(1, 10)]
+    r.handle("POST", "/ts/s", json.dumps(pts[:3]))
+    r.handle("GET", "/ctl/ts/sync")
+    r.handle("POST", "/ts/s", json.dumps(pts[3:7]))  # 4 buffered, no spill
+    stats = engine.stats
+    spilled = []
+
+    def stats_then_spill(*args, **kwargs):
+        frame = stats(*args, **kwargs)
+        if not spilled:  # 2 more points: 6 buffered -> spill 4
+            spilled.append(r.handle("POST", "/ts/s", json.dumps(pts[7:9]))[0])
+        return frame
+
+    monkeypatch.setattr(engine, "stats", stats_then_spill)
+    out = get(r, "/info/ts/stats")
+    assert spilled == [200]
+    assert out == [
+        {"length": [{"s": 7}]},
+        {"length_in_memory": [{"s": 4}]},
+        {"length_on_disk": [{"s": 3}]},
+        {"length_of_index": [{"s": 1}]},
+    ]
+    assert get(r, "/ts/s/length") == {"length": 9}
+    assert get(r, "/ts/s/memory/length") == {"length": 2}
+    assert get(r, "/ts/s/disk/length") == {"length": 7}
