@@ -94,7 +94,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nibbledb_spark.operators import timeseries as ts_ops
-from nibbledb_spark.schema import POINT_SCHEMA, validate_points
+from nibbledb_spark.schema import LONG_MAX, LONG_MIN, POINT_SCHEMA, validate_points
 from nibbledb_spark.session import sql_over
 
 DEFAULT_NUM_BUCKETS = 32
@@ -158,10 +158,6 @@ def day_of(ts_col):
     """THE ts -> day partition value: floor of the double quotient
     (``day_number`` is the same arithmetic on the driver)."""
     return F.floor(ts_col / F.lit(DAY_US)).cast("int")
-
-
-# the range of a stored ts (a Spark LONG)
-LONG_MIN, LONG_MAX = -(1 << 63), (1 << 63) - 1
 
 
 def day_number(ts: int) -> int:

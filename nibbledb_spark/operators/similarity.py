@@ -788,25 +788,62 @@ def ivf_assign(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cid_col: str = "cid",
-    cvec_col: str = "cvec",
 ) -> DataFrame:
-    """(id, cid) inverted-list assignment: nearest centroid by cosine,
-    ties to the lowest centroid id. Centroids are broadcast; the corpus
-    never shuffles."""
+    """THE nearest-centroid assignment: (id, cid, v, vn), one row per
+    distinct id — the vector's nearest (cid, cvec) centroid by cosine,
+    ties to the lowest cid, with the vector and its L2 norm riding
+    along so no caller re-joins the corpus or re-folds the norm.
+
+    One broadcast cross join, then one aggregate per id:
+    ``max(struct(cos, -cid, v, vn))`` picks exactly the head of
+    ``ORDER BY cos DESC, cid ASC`` (max -cid is the min cid; Spark
+    orders NaN greatest both ways), and its map-side partial collapses
+    a partition's k candidates per vector before the one exchange. The
+    vector norm folds once per vector and the centroid norm once per
+    centroid on the broadcast side, so each pair pays one dot with the
+    same ``dot / (vn * cvn)`` IEEE tree as :func:`cosine` —
+    bit-identical. A repeated id keeps the row of its best-scoring
+    vector."""
     scored = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("v"),
+        l2_norm(vec_col).alias("vn"),
     ).crossJoin(
         F.broadcast(
-            centroids.select(F.col(cid_col).alias("cid"), F.col(cvec_col).alias("cv"))
+            centroids.select(
+                "cid", F.col("cvec").alias("cv"), l2_norm("cvec").alias("cvn")
+            )
         )
     )
-    w = Window.partitionBy("id").orderBy(F.col("cos").desc(), F.col("cid").asc())
+    best = F.struct(
+        (_dot("v", "cv") / (F.col("vn") * F.col("cvn"))).alias("cos"),
+        (-F.col("cid")).alias("ncid"),
+        F.col("v").alias("v"),
+        F.col("vn").alias("vn"),
+    )
     return (
-        scored.select("id", "cid", cosine("v", "cv").alias("cos"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("id", "cid")
+        scored.groupBy("id")
+        .agg(F.max(best).alias("b"))
+        .select(
+            "id",
+            (-F.col("b.ncid")).alias("cid"),
+            F.col("b.v").alias("v"),
+            F.col("b.vn").alias("vn"),
+        )
+    )
+
+
+def _probe_lists(q: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """``q``'s rows (keyed by query_id, vector qv), each with the cid of
+    one of its ``nprobe`` nearest (cid, cvec) centroids by cosine, ties
+    to the lowest cid — the probe set every indexed reader scans."""
+    wq = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cid").asc())
+    return (
+        q.crossJoin(F.broadcast(cents))
+        .select(*q.columns, "cid", cosine("qv", "cvec").alias("cos"))
+        .withColumn("rn", F.row_number().over(wq))
+        .where(F.col("rn") <= nprobe)
+        .select(*q.columns, "cid")
     )
 
 
@@ -821,13 +858,12 @@ def kmeans_centroids(
     """Deterministic Lloyd-refined coarse centroids for IVF.
 
     Init is the ``k`` lowest-id vectors (the previous, honestly-weak
-    default); each of ``n_iter`` rounds broadcast-assigns every vector
-    to its nearest centroid by cosine and recomputes centroids as the
-    per-dimension member mean. Round cost: one broadcast map-side
-    assignment + one (cluster, dim) hash aggregate — the corpus never
-    shuffles whole vectors, and only k x dim mean cells (KBs) return to
-    the driver to seed the next round's broadcast, the same driver-side
-    metadata every KMeans implementation keeps.
+    default); each of ``n_iter`` rounds assigns every vector to its
+    nearest centroid (:func:`ivf_assign`) and recomputes centroids as
+    the per-dimension member mean. Round cost: one broadcast assignment
+    + one (cluster, dim) hash aggregate, and only k x dim mean cells
+    (KBs) return to the driver to seed the next round's broadcast, the
+    same driver-side metadata every KMeans implementation keeps.
 
     Determinism: means use scaled-long sums (order-independent at 1e-9
     resolution), init is id-ordered, ties break on cid — so the
@@ -838,22 +874,15 @@ def kmeans_centroids(
     Returns (cid, cvec) with cid in [0, k).
     """
     spark = corpus.sparkSession
-    v = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     cents = [
-        [float(x) for x in r["v"]]
-        for r in v.orderBy(F.col("id").asc()).limit(k).collect()
+        [float(x) for x in r[vec_col]]
+        for r in corpus.orderBy(F.col(id_col).asc()).select(vec_col).limit(k).collect()
     ]
     for _ in range(n_iter):
         cdf = spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)], "cid int, cv array<double>"
+            [(i, c) for i, c in enumerate(cents)], "cid int, cvec array<double>"
         )
-        w = Window.partitionBy("id").orderBy(F.col("cos").desc(), F.col("cid").asc())
-        best = (
-            v.crossJoin(F.broadcast(cdf))
-            .select("id", "v", "cid", cosine("v", "cv").alias("cos"))
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-        )
+        best = ivf_assign(corpus, cdf, id_col=id_col, vec_col=vec_col)
         cells = (
             best.select("cid", F.posexplode("v").alias("dim", "val"))
             .groupBy("cid", "dim")
@@ -978,8 +1007,11 @@ def semdedup(
     SQL, and for training-data dedup the bias is safe: every dropped
     doc has a kept semantic representative within 2·eps.
 
-    Scale shape: centroid assignment is one broadcast map-side sweep
-    (``ivf_assign`` — the corpus never shuffles for it); the pair step
+    Duplicate ids: :func:`ivf_assign` keeps one row per distinct id
+    (the vector that scores best against the centroids).
+
+    Scale shape: centroid assignment is :func:`ivf_assign` — one
+    broadcast sweep and one per-id aggregate; the pair step
     shuffles vectors ONCE keyed by cid, then self-joins per cluster —
     quadratic only in CLUSTER size, never corpus all-pairs. At 100 TB
     the paper's regime applies: pick ``n_centroids`` so clusters stay
@@ -995,25 +1027,16 @@ def semdedup(
             .limit(n_centroids)
             .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
         )
-    asg = ivf_assign(corpus, centroids, id_col=id_col, vec_col=vec_col)
-    # the assignment sweep (corpus x centroids + a row_number window) is
-    # the dominant cost and has THREE plan consumers (both self-join
-    # sides + the final anti); persist it once — the ngram_jaccard
+    # the assignment (corpus x centroids + one per-id aggregate) is the
+    # dominant cost and has THREE plan consumers (both self-join sides
+    # + the final anti); persist it once — the ngram_jaccard
     # shingle-table contract: the returned frame pins one corpus-sized
     # cache entry for its lifetime, callers wanting it released
-    # materialize and unpersist via their own handle
-    # ||v|| rides the persisted assignment (one fold per corpus row),
-    # so every intra-cluster pair below pays ONE fold (the dot) instead
-    # of three — the cosine_topk norm-factoring lesson (bit-identical:
-    # same dot/(an*bn) IEEE tree; r15 opt).
-    m = asg.join(
-        corpus.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-            l2_norm(vec_col).alias("vn"),
-        ),
-        "id",
-    ).persist()
+    # materialize and unpersist via their own handle. ||v|| rides the
+    # assignment (one fold per corpus row), so every intra-cluster pair
+    # below pays ONE fold (the dot) instead of three — the cosine_topk
+    # norm-factoring lesson (bit-identical: same dot/(an*bn) IEEE tree).
+    m = ivf_assign(corpus, centroids, id_col=id_col, vec_col=vec_col).persist()
     a, b = m.alias("a"), m.alias("b")
     drops = (
         a.join(
@@ -1116,10 +1139,6 @@ def build_ivf_index(
         cents = kmeans_centroids(
             corpus, n_centroids, n_iter=kmeans_iters, id_col=id_col, vec_col=vec_col
         )
-    inv = ivf_assign(corpus, cents, id_col=id_col, vec_col=vec_col,
-                     cid_col="cid", cvec_col="cvec")
-    vecs = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-
     # the two table writes are independent jobs (the assignment plans
     # against the in-memory cents frame, not the written parquet) —
     # overlap them (guide-§2.6, the LSH index-write pattern)
@@ -1127,14 +1146,13 @@ def build_ivf_index(
         cents.write.mode("overwrite").parquet(f"{path}/centroids")
 
     def _postings() -> None:
-        # vn (the vector's L2 norm) is corpus-side state: computed ONCE
-        # here, it saves every probe batch a per-row interpreted fold
-        # over the posting lists forever after (r15 opt — the persisted
-        # analogue of the semdedup norm factoring; parquet doubles
-        # round-trip exactly, so stored-vs-recomputed is bit-identical)
+        # vn (the vector's L2 norm, from ivf_assign) is corpus-side
+        # state: stored ONCE here, it saves every probe batch a per-row
+        # interpreted fold over the posting lists forever after (parquet
+        # doubles round-trip exactly, so stored-vs-recomputed is
+        # bit-identical)
         (
-            inv.join(vecs, "id")
-            .withColumn("vn", l2_norm("v"))
+            ivf_assign(corpus, cents, id_col=id_col, vec_col=vec_col)
             .repartition("cid")
             .write.mode("overwrite")
             .partitionBy("cid")
@@ -1169,62 +1187,28 @@ def ivf_index_add(
     union corpus to the same centroids (pinned test). Retrain = rebuild
     with :func:`build_ivf_index` when drift warrants it.
 
-    ``assignments``: optional precomputed (id, cid) rows for a SUPERSET
-    of ``new_vectors`` against THIS index's centroids (the crawl-gate
-    shape — the sink already assigned the whole batch, so the add
-    semi-filters those rows instead of re-running the broadcast sweep +
-    per-id window; assignment is deterministic for frozen centroids, so
-    the rows are identical). When the frame ALSO carries ``v`` and
-    ``vn`` (the gate's assignment keeps both), those rows are written
-    directly — no vector re-join, no norm re-fold (r16 opt; the values
-    are deterministic projections of the same rows, so the postings are
-    identical either way).
+    Duplicate ids: the postings hold one row per DISTINCT id of
+    ``new_vectors`` (:func:`ivf_assign` keeps each id's best-scoring
+    vector), so a batch repeating an id posts it once.
 
-    Duplicate ids: with ``v``/``vn`` in ``assignments`` the postings
-    are the assignment rows semi-filtered by id, so a batch repeating
-    an id gets one posting per DISTINCT id (the gate's assignments hold
-    one row per id); without them, one posting per input row."""
+    ``assignments``: optional precomputed :func:`ivf_assign` rows
+    (id, cid, v, vn) for a SUPERSET of ``new_vectors`` against THIS
+    index's centroids (the crawl-gate shape — the sink already assigned
+    the whole batch, so the add semi-filters those rows instead of
+    re-running the assignment; it is deterministic for frozen
+    centroids, so the postings are identical)."""
     if assignments is not None:
         keys = new_vectors.select(F.col(id_col).alias("id")).distinct()
-        if {"v", "vn"} <= set(assignments.columns):
-            staged = assignments.select("id", "cid", "v", "vn").join(
-                keys, "id", "semi"
-            )
-        else:
-            inv = assignments.select("id", "cid").join(keys, "id", "semi")
-            staged = inv.join(
-                new_vectors.select(
-                    F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-                ),
-                "id",
-            ).withColumn("vn", l2_norm("v"))
+        staged = assignments.select("id", "cid", "v", "vn").join(keys, "id", "semi")
     else:
         cents = spark.read.parquet(f"{path}/centroids")
-        inv = ivf_assign(new_vectors, cents, id_col=id_col, vec_col=vec_col,
-                         cid_col="cid", cvec_col="cvec")
-        staged = inv.join(
-            new_vectors.select(
-                F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-            ),
-            "id",
-        ).withColumn("vn", l2_norm("v"))  # see build_ivf_index
+        staged = ivf_assign(new_vectors, cents, id_col=id_col, vec_col=vec_col)
     (
         staged.repartition("cid")
         .write.mode("append")
         .partitionBy("cid")
         .parquet(f"{path}/postings")
     )
-
-
-def _ivf_postings_with_norms(spark, path: str) -> DataFrame:
-    """Read an IVF posting table with its stored per-vector norm,
-    recomputing ``vn`` only for indexes written before the column
-    existed (bit-identical either way — same fold, and parquet doubles
-    round-trip exactly)."""
-    post = spark.read.parquet(f"{path}/postings")
-    if "vn" not in post.columns:
-        post = post.withColumn("vn", l2_norm("v"))
-    return post
 
 
 def ivf_topk_indexed(
@@ -1247,22 +1231,14 @@ def ivf_topk_indexed(
     index's stored ``vn`` (r15 opt — same operands and multiply order
     as ``cosine()``, bit-identical)."""
     cents = spark.read.parquet(f"{path}/centroids")
-    post = _ivf_postings_with_norms(spark, path)
+    post = spark.read.parquet(f"{path}/postings")
 
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
         l2_norm(vec_col).alias("qn"),
     )
-    qs = q.crossJoin(F.broadcast(cents)).select(
-        "query_id", "qv", "qn", "cid", cosine("qv", "cvec").alias("cos")
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cid").asc())
-    probes = (
-        qs.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= nprobe)
-        .select("query_id", "qv", "qn", "cid")
-    )
+    probes = _probe_lists(q, cents, nprobe)
     cand = post.join(F.broadcast(probes), "cid").where(
         F.col("id") != F.col("query_id")
     )
@@ -1292,7 +1268,6 @@ def hard_negatives_indexed(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    broadcast_anchors: bool = True,
 ) -> DataFrame:
     """Hard-negative mining over a persisted IVF index — the mining-job
     shape of :func:`hard_negatives`, whose broadcast brute-force sweep
@@ -1306,17 +1281,11 @@ def hard_negatives_indexed(
     n_centroids equal brute force exactly (pinned test); smaller
     nprobe trades recall for pruning like every IVF read.
 
-    ``broadcast_anchors`` (default) hints the probe side of the
-    posting join — right while anchors x dim fits an executor. A
-    million-anchor mining job must pass ``False`` so the probes
-    SHUFFLE-join the cid-keyed postings instead of shipping ~0.5 GB of
-    anchor vectors to every task; everything else is unchanged.
-
     Returns (query_id, query_label, neighbor_id, neighbor_label, rank,
     cos_sim), ties on neighbor id.
     """
     cents = spark.read.parquet(f"{path}/centroids")
-    post = _ivf_postings_with_norms(spark, path)
+    post = spark.read.parquet(f"{path}/postings")
 
     q = queries.select(
         F.col(id_col).alias("query_id"),
@@ -1324,22 +1293,12 @@ def hard_negatives_indexed(
         F.col(vec_col).alias("qv"),
         l2_norm(vec_col).alias("qn"),
     )
-    qs = q.crossJoin(F.broadcast(cents)).select(
-        "query_id", "query_label", "qv", "qn", "cid",
-        cosine("qv", "cvec").alias("cos"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cid").asc())
-    probes = (
-        qs.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= nprobe)
-        .select("query_id", "query_label", "qv", "qn", "cid")
-    )
+    probes = _probe_lists(q, cents, nprobe)
     lab = labels.select(
         F.col(id_col).alias("id"), F.col(label_col).alias("neighbor_label")
     )
-    probe_side = F.broadcast(probes) if broadcast_anchors else probes
     cand = (
-        post.join(probe_side, "cid")
+        post.join(F.broadcast(probes), "cid")
         .where(F.col("id") != F.col("query_id"))
         .join(lab, "id")
         .where(F.col("neighbor_label") != F.col("query_label"))
@@ -1400,12 +1359,13 @@ def semdedup_gate(
     is dropped — content-address ids (or periodic rebuilds) if your
     crawl revisits keys.
 
-    Scale shape per batch: assignment is one broadcast map-side sweep;
-    the vs-index join reads only the probed cid partitions of the
-    posting lists (partition-pruned directories); the intra-batch pair
-    join is batch x batch within clusters; the add appends cid-keyed
-    parquet. The id-guard join scans the postings' id column — the
-    same read class as the LSH gate's sizes-table check.
+    Scale shape per batch: assignment is :func:`ivf_assign` (one
+    broadcast sweep, one per-id aggregate), whose rows also feed the
+    postings append; the vs-index join reads only the probed cid
+    partitions of the posting lists (partition-pruned directories);
+    the intra-batch pair join is batch x batch within clusters; the add
+    appends cid-keyed parquet. The id-guard join scans the postings' id
+    column — the same read class as the LSH gate's sizes-table check.
 
     Reserved name: the sink adds a helper column ``__in_index`` to the
     batch (the replay-guard flag; ``on_pass`` never sees it), so a
@@ -1424,59 +1384,12 @@ def semdedup_gate(
         m = None
         try:
           with micro_batch_tuning(spark, n_rows):
-            # Fused coarse assignment (r16 opt): ONE hash aggregate
-            # replaces ivf_assign's id-window (Exchange + sort) PLUS the
-            # re-join that attached (v, vn) to the winner — max over
-            # struct(cos, -cid) picks exactly the window's ORDER BY
-            # cos DESC, cid ASC head (ties: max -cid = min cid; Spark
-            # orders NaN greatest on both paths), and v/vn ride the
-            # struct instead of a second join. vn is computed BELOW the
-            # broadcast cross join, once per batch row (the r15 norm
-            # factoring, preserved). Measured on the replay: 23 -> 14
-            # jobs/batch with the rest of this batch's changes.
-            scored = batch.select(
-                F.col(id_col).alias("id"),
-                F.col(vec_col).alias("v"),
-                l2_norm(vec_col).alias("vn"),
-            ).crossJoin(
-                F.broadcast(
-                    cents.select(
-                        "cid",
-                        F.col("cvec").alias("cv"),
-                        # centroid norms fold once per centroid on the
-                        # 8-row broadcast side; the per-pair cosine then
-                        # pays ONE (unrolled) dot — same dot/(vn*cvn)
-                        # IEEE tree as cosine(), bit-identical
-                        l2_norm("cvec").alias("cvn"),
-                    )
-                )
-            )
-            m = (
-                scored.groupBy("id")
-                .agg(
-                    F.max(
-                        F.struct(
-                            (
-                                _dot("v", "cv")
-                                / (F.col("vn") * F.col("cvn"))
-                            ).alias("cos"),
-                            (-F.col("cid")).alias("ncid"),
-                            F.col("v").alias("v"),
-                            F.col("vn").alias("vn"),
-                        )
-                    ).alias("b")
-                )
-                .select(
-                    "id",
-                    (-F.col("b.ncid")).alias("cid"),
-                    F.col("b.v").alias("v"),
-                    F.col("b.vn").alias("vn"),
-                )
-                .persist()
-            )
+            # the batch's coarse assignment, with (v, vn) riding along
+            # for the pair cosines below and the postings append
+            m = ivf_assign(batch, cents, id_col=id_col, vec_col=vec_col).persist()
             # corpus norms come from the index (computed once at
-            # build/add, not re-folded per probe batch — r15 opt)
-            post = _ivf_postings_with_norms(spark, path).select(
+            # build/add, not re-folded per probe batch)
+            post = spark.read.parquet(f"{path}/postings").select(
                 "cid", "id", "v", "vn"
             )
             # ONE cluster-bounded reference join covers both drop
@@ -1514,8 +1427,8 @@ def semdedup_gate(
             # posting ids flags already-indexed rows, so the add below
             # is a cache filter instead of its own postings re-read +
             # anti-join stages (r16 opt). The flag side is distinct, so
-            # an id posted twice (a batch added with a repeated id, or
-            # a partly committed add) cannot multiply survivors.
+            # an id posted twice (an add repeated after it committed,
+            # or a partly committed add) cannot multiply survivors.
             flagged = (
                 batch.join(drops, id_col, "left_anti")
                 .join(
@@ -1546,10 +1459,8 @@ def semdedup_gate(
                     ),
                     id_col=id_col,
                     vec_col=vec_col,
-                    # the sink already assigned the whole batch (m), and
-                    # m carries (v, vn) — the add semi-filters those rows
-                    # and writes them directly: no broadcast sweep, no
-                    # vector re-join, no norm re-fold
+                    # the sink already assigned the whole batch (m): the
+                    # add semi-filters those rows and writes them directly
                     assignments=m,
                 )
 
@@ -1657,88 +1568,6 @@ def pq_codebook(
     return _subvectors(head, "c", id_col, vec_col, m, dsub).select(
         "j", F.col("c"), F.col("sv").alias("cw")
     )
-
-
-def pq_codebook_kmeans(
-    corpus: DataFrame,
-    *,
-    m: int = 8,
-    dsub: int = 8,
-    codewords: int = 16,
-    n_iter: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-subspace Lloyd-TRAINED PQ codebook (j, c, cw) — the FAISS
-    training step the deterministic lowest-id / hash-sampled codebooks
-    stand in for. The r15 natural-distribution ANN table measured why
-    it matters: untrained 16-codeword codebooks collapse recall at
-    scale (quantization error swamps inter-neighbor distances once
-    clusters fill in — BASELINE.md round-15 table); training the
-    codewords on the actual subvector distribution is what FAISS does
-    by default.
-
-    Init: the hash-sampled codebook (deterministic uniform sample);
-    each of ``n_iter`` rounds broadcast-assigns every corpus SUBVECTOR
-    to its nearest codeword by squared L2 (ties to the lowest c) and
-    recomputes codewords as per-(j, c, dim) member means via
-    scaled-long sums — order-independent at 1e-9 resolution, so the
-    trained codebook is identical on any partitioning (the
-    kmeans_centroids discipline, applied per subspace). A codeword
-    that loses every member keeps its previous value. Round cost: one
-    broadcast assign + one (j, c, dim) hash aggregate; the corpus
-    never shuffles vectors — only m x codewords x dsub mean cells
-    (KBs) return to the driver to seed the next round's broadcast,
-    the same driver-side metadata every k-means keeps.
-    """
-    spark = corpus.sparkSession
-    sub = _subvectors(corpus, "id", id_col, vec_col, m, dsub)
-    init = pq_codebook(
-        corpus, m=m, dsub=dsub, codewords=codewords,
-        id_col=id_col, vec_col=vec_col, sampled=True,
-    ).collect()
-    cw_map: dict[tuple[int, int], list[float]] = {
-        (r["j"], r["c"]): [float(x) for x in r["cw"]] for r in init
-    }
-
-    def as_df(mapping):
-        return spark.createDataFrame(
-            [(j, c, v) for (j, c), v in sorted(mapping.items())],
-            "j int, c int, cw array<double>",
-        )
-
-    for _ in range(n_iter):
-        w = Window.partitionBy("id", "j").orderBy(
-            F.col("d").asc(), F.col("c").asc()
-        )
-        best = (
-            sub.join(F.broadcast(as_df(cw_map)), "j")
-            .select(
-                "id", "j", "sv", "c",
-                _l2sq(F.col("sv"), F.col("cw")).alias("d"),
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-        )
-        cells = (
-            best.select("j", "c", F.posexplode("sv").alias("dim", "val"))
-            .groupBy("j", "c", "dim")
-            .agg(
-                (
-                    F.sum(scaled_long(F.col("val").cast("double"), 9)).cast("double")
-                    / 1e9
-                    / F.count("*")
-                ).alias("mval")
-            )
-            .collect()
-        )
-        means: dict[tuple[int, int], dict[int, float]] = {}
-        for r in cells:
-            means.setdefault((r["j"], r["c"]), {})[r["dim"]] = r["mval"]
-        for key, dims in means.items():
-            prev = cw_map[key]
-            cw_map[key] = [dims.get(d, prev[d]) for d in range(dsub)]
-    return as_df(cw_map)
 
 
 def _lut_quantize(qsub: DataFrame, cb: DataFrame, mlt: float,
@@ -1978,7 +1807,6 @@ def build_ivfpq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     by_residual: bool = False,
-    trained_codebook: bool = False,
 ) -> None:
     """IVF+PQ index (the FAISS IVFPQ shape, Jegou et al. TPAMI 2011):
     a k-means coarse quantizer routes vectors to posting lists, and
@@ -2000,56 +1828,30 @@ def build_ivfpq_index(
     The residual codebook uses deterministic hash sampling because the
     cluster centers' own residuals are near zero (a lowest-id codebook
     would be degenerate). Partition pruning over cid works exactly as in
-    :func:`build_ivf_index`. ``trained_codebook=True`` swaps the
-    deterministic sampled/lowest-id codebook for the per-subspace
-    Lloyd-trained one (:func:`pq_codebook_kmeans`) — lower
-    quantization MSE, but see the r15 decision-table nuance: on
-    multimodal data with codewords < modes it REDUCES neighbor recall
-    (BASELINE.md round-15 PQ-lever addendum); default stays False for
-    oracle and ledger stability."""
+    :func:`build_ivf_index`."""
     cents = kmeans_centroids(
         corpus, n_centroids, n_iter=kmeans_iters, id_col=id_col, vec_col=vec_col
     )
     cents.write.mode("overwrite").parquet(f"{path}/centroids")
-    inv = ivf_assign(corpus, cents, id_col=id_col, vec_col=vec_col,
-                     cid_col="cid", cvec_col="cvec")
+    inv = ivf_assign(corpus, cents, id_col=id_col, vec_col=vec_col)
     if by_residual:
-        vw = corpus.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-        ).join(inv, "id")
-        resid = _residuals(vw, cents)
-        # trained_codebook: per-subspace Lloyd on the actual (residual)
-        # subvector distribution — the recall fix the r15
-        # natural-distribution table motivates; default stays the
-        # deterministic sampled/lowest-id convention for oracle and
-        # ledger stability
-        if trained_codebook:
-            cb = pq_codebook_kmeans(
-                resid, m=m, dsub=dsub, codewords=codewords,
-                id_col="id", vec_col="res",
-            )
-        else:
-            cb = pq_codebook(
-                resid, m=m, dsub=dsub, codewords=codewords,
-                id_col="id", vec_col="res", sampled=True,
-            )
+        resid = _residuals(inv, cents)
+        cb = pq_codebook(
+            resid, m=m, dsub=dsub, codewords=codewords,
+            id_col="id", vec_col="res", sampled=True,
+        )
         codes = pq_encode(resid, cb, m=m, dsub=dsub, id_col="id", vec_col="res")
     else:
-        if trained_codebook:
-            cb = pq_codebook_kmeans(
-                corpus, m=m, dsub=dsub, codewords=codewords,
-                id_col=id_col, vec_col=vec_col,
-            )
-        else:
-            cb = pq_codebook(
-                corpus, m=m, dsub=dsub, codewords=codewords,
-                id_col=id_col, vec_col=vec_col,
-            )
+        cb = pq_codebook(
+            corpus, m=m, dsub=dsub, codewords=codewords,
+            id_col=id_col, vec_col=vec_col,
+        )
         codes = pq_encode(corpus, cb, m=m, dsub=dsub, id_col=id_col, vec_col=vec_col)
     cb.write.mode("overwrite").parquet(f"{path}/codebook")
     _write_pq_meta(path, by_residual)  # before postings: readers fail closed
     (
-        inv.join(_pack_codes(codes), "id")
+        inv.select("id", "cid")
+        .join(_pack_codes(codes), "id")
         .repartition("cid")
         .write.mode("overwrite")
         .partitionBy("cid")
@@ -2095,15 +1897,7 @@ def ivfpq_topk_indexed(
     mlt = float(10**dist_scale)
 
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    qs = q.crossJoin(F.broadcast(cents)).select(
-        "query_id", "qv", "cid", cosine("qv", "cvec").alias("cos")
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cid").asc())
-    probes = (
-        qs.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= nprobe)
-        .select("query_id", "qv", "cid")
-    )
+    probes = _probe_lists(q, cents, nprobe)
     cand = post.join(F.broadcast(probes.select("query_id", "cid")), "cid").where(
         F.col("id") != F.col("query_id")
     )
@@ -2182,14 +1976,10 @@ def ivfpq_index_add(
     meta = cb.agg(
         F.countDistinct("j").alias("m"), F.first(F.size("cw")).alias("dsub")
     ).collect()[0]
-    inv = ivf_assign(new_vectors, cents, id_col=id_col, vec_col=vec_col,
-                     cid_col="cid", cvec_col="cvec")
+    inv = ivf_assign(new_vectors, cents, id_col=id_col, vec_col=vec_col)
     if by_residual:
-        vw = new_vectors.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-        ).join(inv, "id")
         codes = pq_encode(
-            _residuals(vw, cents), cb, m=meta["m"], dsub=meta["dsub"],
+            _residuals(inv, cents), cb, m=meta["m"], dsub=meta["dsub"],
             id_col="id", vec_col="res",
         )
     else:
@@ -2198,7 +1988,8 @@ def ivfpq_index_add(
             id_col=id_col, vec_col=vec_col,
         )
     (
-        inv.join(_pack_codes(codes), "id")
+        inv.select("id", "cid")
+        .join(_pack_codes(codes), "id")
         .repartition("cid")
         .write.mode("append")
         .partitionBy("cid")

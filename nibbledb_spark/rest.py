@@ -54,9 +54,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nibbledb_spark.engine import LONG_MAX, LONG_MIN, TimeSeriesEngine
+from nibbledb_spark.engine import TimeSeriesEngine
 from nibbledb_spark.operators import timeseries as ts_ops
-from nibbledb_spark.schema import ValidationError, validate_points
+from nibbledb_spark.schema import LONG_MAX, LONG_MIN, ValidationError, validate_points
 
 DEFAULT_MAX_BUFFER_SIZE = 100_000  # reference src/main.re:9
 DEFAULT_SHARD_SIZE = 20_000  # reference src/main.re:10

@@ -21,6 +21,7 @@ Validation modes (quirk Q3, reference src/timeseries.re:64-78):
 
 from __future__ import annotations
 
+import math
 import time
 from typing import Any
 
@@ -47,6 +48,9 @@ WIRE_SCHEMA = T.StructType(
         T.StructField("value", T.DoubleType(), nullable=False),
     ]
 )
+
+# the range of a stored ts (a Spark LONG)
+LONG_MIN, LONG_MAX = -(1 << 63), (1 << 63) - 1
 
 _ALLOWED_KEY_ORDERS = (
     ("value",),
@@ -110,7 +114,13 @@ def validate_point(
     else:
         if isinstance(raw_ts, bool) or not isinstance(raw_ts, (int, float)):
             raise ValidationError(f"timestamp must be numeric: {raw_ts!r}")
+        if isinstance(raw_ts, float) and not math.isfinite(raw_ts):
+            raise ValidationError(f"timestamp must be finite: {raw_ts!r}")
         ts = int(raw_ts)  # reference coerces via Int64.of_float
+        # checked here, before the point is buffered: the store rejects
+        # it only at the flush, after the series' buffer was taken
+        if not LONG_MIN <= ts <= LONG_MAX:
+            raise ValidationError(f"timestamp out of the 64-bit range: {raw_ts!r}")
 
     return ts, _coerce_tag(record.get("tag")), float(value)
 

@@ -247,6 +247,18 @@ def event_ts_us(df: DataFrame):
     return F.unix_micros(df["ts"].cast("timestamp"))
 
 
+def events_to_points(df: DataFrame) -> DataFrame:
+    """events wire shape -> canonical points: THE mapping, shared by the
+    batch reader below and streaming ingest, so both store bit-identical
+    points."""
+    return df.select(
+        F.col("event_type").alias("series"),
+        event_ts_us(df).alias("ts"),
+        F.from_json(F.col("props"), "map<string,string>").alias("tag"),
+        F.col("value").alias("value"),
+    )
+
+
 def points_from_events(
     spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, *, cached: bool = True
 ) -> DataFrame:
@@ -268,13 +280,7 @@ def points_from_events(
             except Exception:
                 pass
             del _POINTS_CACHE[key]
-    ev = load_table(spark, "events", sf_dir)
-    pts = ev.select(
-        F.col("event_type").alias("series"),
-        event_ts_us(ev).alias("ts"),
-        F.from_json(F.col("props"), "map<string,string>").alias("tag"),
-        F.col("value").alias("value"),
-    )
+    pts = events_to_points(load_table(spark, "events", sf_dir))
     if cached:
         # Persist CLUSTERED + SORTED on the canonical ts access path:
         # InMemoryTableScan reports its child's outputPartitioning and

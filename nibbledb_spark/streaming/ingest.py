@@ -34,6 +34,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from nibbledb_spark.engine import TimeSeriesEngine
 from nibbledb_spark.operators.timeseries import scaled_long
+from nibbledb_spark.sources.registry import events_to_points
 
 # raw event schema of the driver's events table (ts is TIMESTAMP(MICROS)
 # isAdjustedToUTC=false in the parquet => TIMESTAMP_NTZ). NOTE: streaming
@@ -51,19 +52,6 @@ EVENTS_SCHEMA = T.StructType(
         T.StructField("props", T.StringType(), True),
     ]
 )
-
-
-def events_to_points(df: DataFrame) -> DataFrame:
-    """events wire shape -> canonical points (same mapping as the batch
-    reader so streaming and batch ingest are bit-identical)."""
-    from nibbledb_spark.sources.registry import event_ts_us
-
-    return df.select(
-        F.col("event_type").alias("series"),
-        event_ts_us(df).alias("ts"),
-        F.from_json(F.col("props"), "map<string,string>").alias("tag"),
-        F.col("value").alias("value"),
-    )
 
 
 class StreamingIngest:

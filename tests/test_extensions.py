@@ -790,6 +790,59 @@ def test_star_components_long_path_few_rounds(spark):
     assert got == {i: 0 for i in range(61)}
 
 
+def test_ivf_assign_matches_the_window_form(spark):
+    """ivf_assign's per-id aggregate picks the head of the window form
+    ``ORDER BY cos DESC, cid ASC``: identical centroids tie to the lower
+    cid, a NaN cosine (Spark orders NaN greatest) goes to the lowest
+    cid, and a repeated id keeps one row — the vector that scores best.
+    ``vn`` is ``l2_norm(v)`` bit for bit. The NaN comes from a NaN
+    component: a zero vector's 0/0 raises DIVIDE_BY_ZERO under ANSI in
+    both forms."""
+    from pyspark.sql import Window
+
+    from nibbledb_spark.operators.similarity import cosine, ivf_assign, l2_norm
+
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0]), (2, [0.0, 1.0, 0.0])],
+        "cid int, cvec array<double>",
+    )
+    corpus = spark.createDataFrame(
+        [
+            (1, [0.0, 2.0, 0.0]),  # cid 1 and 2 tie
+            (2, [float("nan"), 1.0, 0.0]),  # NaN against every centroid
+            (3, [1.0, 0.2, 0.0]),  # repeated id: this one scores 0.98 ...
+            (3, [0.1, 1.0, 0.0]),  # ... this one 0.995 and wins
+            (4, [1.0, 1.0, 0.0]),  # a three-way tie
+            (5, [-1.0, 0.5, 0.25]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    got = ivf_assign(corpus, cents).collect()
+
+    w = Window.partitionBy("id").orderBy(F.col("cos").desc(), F.col("cid").asc())
+    ref = (
+        corpus.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
+        .crossJoin(cents.select("cid", F.col("cvec").alias("cv")))
+        .select("id", "cid", cosine("v", "cv").alias("cos"))
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .select("id", "cid")
+    )
+    assert sorted((r["id"], r["cid"]) for r in got) == sorted(
+        (r["id"], r["cid"]) for r in ref.collect()
+    )
+    assert {r["id"]: r["cid"] for r in got} == {1: 1, 2: 0, 3: 1, 4: 0, 5: 1}
+    assert [r["v"] for r in got if r["id"] == 3] == [[0.1, 1.0, 0.0]]
+
+    norms = (
+        spark.createDataFrame(got)
+        .select("vn", l2_norm(F.col("v")).alias("ref"))
+        .collect()
+    )
+    assert len(norms) == 5
+    assert all(r["vn"].hex() == r["ref"].hex() for r in norms)
+
+
 def test_persisted_ivf_index_roundtrip(spark, clustered_ann, tmp_path):
     """build_ivf_index -> parquet; ivf_topk_indexed over the stored
     index must equal the in-memory ivf_topk with the same k-means
@@ -1399,57 +1452,6 @@ def test_pq_adc_cluster_purity(spark, clustered_ann):
         1 for r in out if cluster(r["neighbor_id"]) == (r["query_id"] - 10_000) % 20
     )
     assert ok / len(out) >= 0.95, f"ADC own-cluster purity {ok / len(out):.3f}"
-
-
-def test_pq_codebook_kmeans_trains_and_is_deterministic(spark, clustered_ann):
-    """pq_codebook_kmeans (round-15): the per-subspace Lloyd refinement
-    must strictly reduce mean quantization error vs its hash-sampled
-    init on the clustered fixture (the property k-means optimizes), be
-    deterministic across partitionings (scaled-long means, id-ordered
-    ties), and keep the (j, c, cw) codebook shape every PQ consumer
-    expects. NOTE the r15 decision-table nuance pinned in BASELINE.md:
-    lower MSE does NOT imply better neighbor recall on multimodal data
-    with codewords < modes — training is an option, not a default."""
-    from pyspark.sql import Window
-
-    from nibbledb_spark.operators.similarity import (
-        _l2sq,
-        _subvectors,
-        pq_codebook,
-        pq_codebook_kmeans,
-    )
-
-    corpus, _, _ = clustered_ann
-    sub = _subvectors(corpus, "id", "vec_id", "embedding", 8, 8)
-
-    def mse(cb) -> float:
-        cbd = spark.createDataFrame(
-            cb.collect(), "j int, c long, cw array<double>"
-        )
-        w = Window.partitionBy("id", "j").orderBy(
-            F.col("d").asc(), F.col("c").asc()
-        )
-        best = (
-            sub.join(F.broadcast(cbd), "j")
-            .select("id", "j", "c", _l2sq(F.col("sv"), F.col("cw")).alias("d"))
-            .withColumn("rn", F.row_number().over(w))
-            .where("rn = 1")
-        )
-        return best.agg(F.avg("d")).collect()[0][0]
-
-    init = pq_codebook(corpus, m=8, dsub=8, codewords=16, sampled=True)
-    trained = pq_codebook_kmeans(corpus, m=8, dsub=8, codewords=16, n_iter=3)
-    assert mse(trained) < mse(init)
-
-    rows = sorted(tuple(r) for r in trained.collect())
-    assert len(rows) == 8 * 16  # every (j, c) cell present
-    rows2 = sorted(
-        tuple(r)
-        for r in pq_codebook_kmeans(
-            corpus.repartition(7), m=8, dsub=8, codewords=16, n_iter=3
-        ).collect()
-    )
-    assert rows == rows2  # partitioning-invariant
 
 
 def test_pq_rerank_recall(spark, clustered_ann):
@@ -5199,9 +5201,9 @@ def test_semdedup_gate_replay_idempotent_and_cross_batch(spark, tmp_path):
 
 
 def test_semdedup_gate_posting_id_twice_passes_survivor_once(spark, tmp_path):
-    """The replay guard's flag side is distinct: an id posted twice (a
-    batch that repeated it, added without assignments) must not
-    multiply that id's survivor row on its replay."""
+    """The replay guard's flag side is distinct: an id posted twice (an
+    add repeated after a crash that committed it) must not multiply
+    that id's survivor row on its replay."""
     from nibbledb_spark.operators.similarity import (
         build_ivf_index,
         ivf_index_add,
@@ -5219,7 +5221,8 @@ def test_semdedup_gate_posting_id_twice_passes_survivor_once(spark, tmp_path):
         idx,
         centroids=seed.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")),
     )
-    ivf_index_add(spark, idx, spark.createDataFrame([(11, vec(1)), (11, vec(1))], schema))
+    for _ in range(2):
+        ivf_index_add(spark, idx, spark.createDataFrame([(11, vec(1))], schema))
     post = spark.read.parquet(f"{idx}/postings")
     assert post.where("id = 11").count() == 2
 

@@ -59,6 +59,26 @@ def test_post_malformed_400(router):
         assert status == 400 and body.startswith("Error:")
 
 
+def test_unstorable_timestamps_are_400_and_keep_the_buffer(engine):
+    """A timestamp that is not finite or lies past the signed 64-bit
+    range is a 400 at POST, before it is buffered. Accepted, it would
+    fail only at the flush, after the flush took the series' buffer, and
+    every buffered point of the series would be lost."""
+    r = Router(engine)
+    for point in BFLY[:2]:
+        assert r.handle("POST", "/ts/a", json.dumps(point))[0] == 200
+    for bad in (
+        '{"timestamp": 1e20, "value": 3}',
+        '{"timestamp": -1e19, "value": 3}',
+        '{"timestamp": Infinity, "value": 3}',
+    ):
+        status, body = r.handle("POST", "/ts/a", bad)
+        assert status == 400 and body.startswith("Error:"), (bad, body)
+    assert get(r, "/ts/a/memory/length") == {"length": 2}
+    assert r.handle("GET", "/ctl/ts/sync")[0] == 200
+    assert get(r, "/ts/a/length") == {"length": 2}
+
+
 def test_last_latest_first_earliest(router):
     last2 = get(router, "/ts/butterflies/last/2")
     assert [p["timestamp"] for p in last2] == [1439878320000000, 1439877960000000]
