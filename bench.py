@@ -16,7 +16,9 @@ with a usage line naming every mode on stderr):
                                       prepared-plan) markdown table
   python bench.py --names a,b,c       time an explicit subset instead of
                                       the headline set (no DEEP keys;
-                                      composes with --baseline)
+                                      composes with --baseline); a
+                                      pytest-only query is timed on
+                                      Spark alone
   python bench.py --scale-trend       flagship aggregation on lineitem
                                       x1/x4/x10, Spark vs DuckDB
   python bench.py --ingest            streaming ingest replay, points/s
@@ -97,7 +99,13 @@ def sample(run, runs: int, before=None) -> tuple[float, float, float]:
     driver's correctness compare uses. The spread rides the output so a
     single capture carries its own noise band: cross-sitting ratios
     drift +-10-20% with the host, and a "regression" inside the
-    recorded band is weather, not a plan change."""
+    recorded band is weather, not a plan change.
+
+    Back-to-back repeats of one query hit the generated classes its
+    warm call compiled, so these samples never see classes that other
+    queries evicted from the session's codegen cache: cross-query
+    recompiles show in perfbench's shuffled ``declared_queries`` cycles,
+    not in the contract line."""
     if before is not None:
         before()
     run()
@@ -121,12 +129,13 @@ def scale_trend(spark) -> None:
     import pyspark.sql.functions as F
 
     path = os.path.join(SF_DIR, "lineitem.parquet")
-    for mult in (1, 4, 10):
+
+    def query(mult: int):
         li = None
         for _ in range(mult):
             d = spark.read.parquet(path)
             li = d if li is None else li.unionAll(d)
-        q = (
+        return (
             li.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
             .groupBy("l_returnflag", "l_linestatus")
             .agg(
@@ -139,7 +148,11 @@ def scale_trend(spark) -> None:
                 F.count("*").alias("n"),
             )
         )
-        sp = sample(q.collect, 3)[0]
+
+    for mult in (1, 4, 10):
+        # a fresh DataFrame per call: re-running one would reuse its
+        # shuffle output
+        sp = sample(lambda: query(mult).collect(), 3)[0]
 
         con = duckdb.connect()
         union = " UNION ALL ".join(
@@ -728,9 +741,10 @@ def parse_args() -> argparse.Namespace:
 def main() -> int:
     args = parse_args()
 
-    from nibbledb_spark.queries import ORACLE, QUERIES
+    from nibbledb_spark.queries import ORACLE, PYTEST_ONLY_QUERIES, QUERIES
     from nibbledb_spark.session import get_spark
 
+    builders = {**QUERIES, **PYTEST_ONLY_QUERIES}
     spark = get_spark("bench")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     if args.mode:
@@ -742,7 +756,7 @@ def main() -> int:
 
     def spark_sample(name: str, runs: int = 5, before=None):
         return sample(
-            lambda: QUERIES[name](spark, SF_DIR).toPandas(), runs, before
+            lambda: builders[name](spark, SF_DIR).toPandas(), runs, before
         )
 
     def duck_sample(name: str, runs: int = 3):
@@ -758,7 +772,7 @@ def main() -> int:
     # (measured ~1.5x order bias on q1). The DuckDB side is warm too,
     # so the comparison is steady-state on both sides.
     for name in headline:
-        QUERIES[name](spark, SF_DIR).toPandas()
+        builders[name](spark, SF_DIR).toPandas()
 
     timings: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
@@ -781,6 +795,7 @@ def main() -> int:
     duck_spread: dict[str, list[float]] = {}
     for name in headline:
         if name not in ORACLE:
+            log(f"duckdb {name}: no oracle declared, Spark timing only")
             continue
         med, lo, hi = duck_sample(name)
         duck_timings[name] = round(med, 4)
@@ -813,9 +828,17 @@ def main() -> int:
             if name not in ORACLE:
                 continue
             duck = duck_sample(name, 5)[0]
-            # prepared-statement analogue: plan built once, executed 5x —
-            # isolates execution throughput from per-call planning cost
-            prep = sample(QUERIES[name](spark, SF_DIR).toPandas, 5)[0]
+            # prepared-statement analogue: each timed call executes a
+            # DataFrame built and analysed untimed just before it, which
+            # isolates execution from per-call plan construction. A fresh
+            # DataFrame per call: re-running one would reuse its shuffle
+            # output.
+            built = {}
+            prep = sample(
+                lambda: built["df"].toPandas(),
+                5,
+                before=lambda: built.update(df=builders[name](spark, SF_DIR)),
+            )[0]
             ratio = timings[name] / duck if duck > 0 else float("inf")
             pratio = prep / duck if duck > 0 else float("inf")
             rows.append((name, duck, timings[name], prep, ratio, pratio))

@@ -40,6 +40,11 @@ def ensure_session_confs(spark: SparkSession) -> None:
     external harnesses construct their own session, so set it on every load
     path rather than relying on builder confs. Memoized per session — each
     conf.set is a Py4J round-trip, and this runs on every table load.
+
+    Only runtime confs can be set here. The codegen class cache size
+    (``spark.sql.codegen.cache.maxEntries``, see session.py) is a static
+    conf, so a plain, driver-built session keeps Spark's 100-entry
+    default and recompiles generated code once a query mix outgrows it.
     """
     if id(spark) in _CONFED_SESSIONS:
         return

@@ -22,7 +22,8 @@ Usage:  python tests/oracle_harness.py [--plain] [--exec-only] [name ...]
 builder confs (no nanosAsLong, no UTC pin, no Arrow) — every query must
 set what it needs at runtime (registry.ensure_session_confs) or it fails
 here exactly as it fails in CORRECTNESS_r*.json. ``--exec-only`` skips
-the DuckDB compare and just proves each query runs and collects.
+the DuckDB compare and just proves each query runs and collects. A
+named pytest-only query (``queries.PYTEST_ONLY_QUERIES``) runs rows-only.
 """
 
 from __future__ import annotations
@@ -148,8 +149,13 @@ def main() -> int:
         from nibbledb_spark.session import get_spark
 
         spark = get_spark("oracle_harness", shuffle_partitions=8)
+    from nibbledb_spark.queries import PYTEST_ONLY_QUERIES
+
     queries, oracles = entry.queries(), entry.oracle_sql()
     names = names or list(queries)
+    # a pytest-only query is run only when named, and rows-only: it
+    # declares no oracle (its accuracy is pinned in pytest)
+    queries = {**queries, **PYTEST_ONLY_QUERIES}
     failed = []
     for name in names:
         try:
