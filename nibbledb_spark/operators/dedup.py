@@ -23,7 +23,8 @@ probe-side bands joined to a persisted index). ``ngram_jaccard_pairs``,
 ``ngram_containment_pairs`` and ``winnow_near_dup_pairs`` add only their
 score and filter to the overlap step; ``lsh_query_near_dups`` runs the
 probe; the crawl gate ``lsh_dedup_gate`` unions the probe statement
-with ``ngram_jaccard_pairs``' pair statement. The Jaccard ratio
+with ``ngram_jaccard_pairs``' pair statement inside the crawl gates'
+shared sink (``streaming.gate.gated_sink``). The Jaccard ratio
 (:func:`_jaccard_sql`), the band query (:func:`_bands_sql`) and the
 stop-key cap (:func:`_drop_hot_keys`) are likewise stated once.
 """
@@ -1879,90 +1880,54 @@ def lsh_dedup_gate(
     rebuild the index on recrawl epochs; the gate does not attempt
     in-place index updates by design (the manifest is append-only).
 
+    The sink is :func:`~nibbledb_spark.streaming.gate.gated_sink`:
+    the drop plans and the add run tuned on the batch's own session,
+    then ``on_pass`` runs under that session's own confs.
+
     Scale shape per batch: probe cost tracks the batch (the measured
     lsh_probe contract — corpus-side state is reads, never recompute);
     the intra-batch pair join is batch x batch through the shared-
     shingle equi-join; the add appends band/shingle/size rows for
     survivors only and publishes with one manifest swap.
     """
+    from nibbledb_spark.session import sql_over
+    from nibbledb_spark.streaming.gate import gated_sink
+
     meta = _lsh_index_meta(path)
     n = int(meta["shingle_n"])
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from nibbledb_spark.session import micro_batch_tuning
-
-        batch = batch_df.persist()
-        # one cheap scan: materializes the batch cache AND sizes the
-        # micro-batch scheduler bypass below (r16 opt — AQE's per-stage
-        # materialization jobs cost 39 driver round-trips per 500-row
-        # batch here; the bypass is a no-op above MICRO_BATCH_ROWS)
-        n_rows = batch.count()
+    def gate(batch: DataFrame, hold):
+        session = batch.sparkSession
         # ONE shingle pass per batch: the probe, the intra-batch pair
         # join and the index add all consume the same persisted
         # (id, shingle) table instead of each re-running the
         # tokenize+lead-window+distinct chain over the batch (3x the
         # batch's corpus pass at crawl scale; measured ~20% off the
-        # per-batch wall clock at sf0.1 — r15 opt). Owning the persist
-        # here also fixes the per-batch cache-entry leak the in-plan
-        # persists created (they could never be unpersisted).
-        batch_sh = shingle_rows(
-            batch, id_col=id_col, text_col=text_col, n=n
-        ).persist()
-        survivors = None
-        try:
-          with micro_batch_tuning(spark, n_rows):
-            # BOTH drop rules in ONE parsed statement and ONE anti join
-            # (r16 opt): the vs-index probe statement of
-            # lsh_query_near_dups and the intra-batch pair statement of
-            # ngram_jaccard_pairs union their drop ids — anti join of a
-            # union equals two chained anti joins (left_anti is
-            # set-semantics on its right side), and the statement
-            # is parsed and analyzed once per batch instead of twice.
-            from nibbledb_spark.session import sql_over
+        # per-batch wall clock at sf0.1 — r15 opt).
+        batch_sh = hold(shingle_rows(batch, id_col=id_col, text_col=text_col, n=n))
+        # BOTH drop rules in ONE parsed statement and ONE anti join
+        # (r16 opt): the vs-index probe statement of
+        # lsh_query_near_dups and the intra-batch pair statement of
+        # ngram_jaccard_pairs union their drop ids — anti join of a
+        # union equals two chained anti joins (left_anti is
+        # set-semantics on its right side), and the statement is parsed
+        # and analyzed once per batch instead of twice.
+        drops = sql_over(
+            session,
+            f"SELECT query_id AS {id_col} FROM ({_probe_sql(meta, threshold)})\n"
+            f"UNION ALL\n"
+            f"SELECT id2 AS {id_col} FROM ({_jaccard_pairs_sql('{q_sh}', threshold)})",
+            q_sh=batch_sh,
+            **_index_frames(session, path),
+        )
 
-            drops = sql_over(
-                spark,
-                f"SELECT query_id AS {id_col} FROM ({_probe_sql(meta, threshold)})\n"
-                f"UNION ALL\n"
-                f"SELECT id2 AS {id_col} FROM ({_jaccard_pairs_sql('{q_sh}', threshold)})",
-                q_sh=batch_sh,
-                **_index_frames(spark, path),
+        def add(survivors: DataFrame) -> None:
+            lsh_index_add(
+                session, path, survivors,
+                id_col=id_col, text_col=text_col, on_duplicate="skip",
+                shingles=batch_sh,
             )
-            survivors = batch.join(drops, id_col, "left_anti").persist()
 
-            def _add() -> None:
-                lsh_index_add(
-                    spark, path, survivors,
-                    id_col=id_col, text_col=text_col, on_duplicate="skip",
-                    shingles=batch_sh,
-                )
+        return batch.join(drops, id_col, "left_anti"), add
 
-            if on_pass is None:
-                _add()
-            else:
-                # materialize once so the two independent publishes read
-                # the cache, then OVERLAP them (guide-§2.6, the semdedup
-                # gate's pattern): the index add and the caller's commit
-                # share no state beyond the cached survivors, and the
-                # sink only returns once BOTH settle — a crash mid-sink
-                # replays the whole batch (add skips, on_pass idempotent
-                # by batch_id), so exactly-once is unchanged.
-                from concurrent.futures import ThreadPoolExecutor
-
-                survivors.count()
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    futures = [
-                        pool.submit(_add),
-                        pool.submit(on_pass, survivors, batch_id),
-                    ]
-                    errs = [f.exception() for f in futures]
-                for err in errs:
-                    if err is not None:
-                        raise err
-        finally:
-            batch.unpersist()
-            batch_sh.unpersist()
-            if survivors is not None:
-                survivors.unpersist()
-
-    return sink
+    return gated_sink(gate, on_pass)

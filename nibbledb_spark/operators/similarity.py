@@ -1367,125 +1367,84 @@ def semdedup_gate(
     appends cid-keyed parquet. The id-guard join scans the postings' id
     column — the same read class as the LSH gate's sizes-table check.
 
+    The sink is :func:`~nibbledb_spark.streaming.gate.gated_sink`:
+    the drop plans and the add run tuned on the batch's own session,
+    then ``on_pass`` runs under that session's own confs.
+
     Reserved name: the sink adds a helper column ``__in_index`` to the
     batch (the replay-guard flag; ``on_pass`` never sees it), so a
     batch frame must not carry a column of that name.
     """
+    from nibbledb_spark.streaming.gate import gated_sink
+
     cents = spark.read.parquet(f"{path}/centroids")
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from nibbledb_spark.session import micro_batch_tuning
-
-        batch = batch_df.persist()
-        # one cheap scan: materializes the batch cache AND sizes the
-        # micro-batch scheduler bypass below (r16 opt)
-        n_rows = batch.count()
-        flagged = None
-        m = None
-        try:
-          with micro_batch_tuning(spark, n_rows):
-            # the batch's coarse assignment, with (v, vn) riding along
-            # for the pair cosines below and the postings append
-            m = ivf_assign(batch, cents, id_col=id_col, vec_col=vec_col).persist()
-            # corpus norms come from the index (computed once at
-            # build/add, not re-folded per probe batch)
-            post = spark.read.parquet(f"{path}/postings").select(
-                "cid", "id", "v", "vn"
-            )
-            # ONE cluster-bounded reference join covers both drop
-            # rules: an INDEXED same-cluster row drops a batch vector
-            # under the self-id guard (rid != id), a BATCH same-cluster
-            # row drops the HIGHER id of the pair (rid < id). Same drop
-            # set as the former vs-index + intra-batch joins, but one
-            # join instead of two, and no distincts — left_anti is
-            # set-semantics on its right side already (fused r15: each
-            # of the two joins paid its own broadcast + agg stages on a
-            # 500-row batch).
-            ref = post.select(
+    def gate(batch: DataFrame, hold):
+        session = batch.sparkSession
+        # the batch's coarse assignment, with (v, vn) riding along for
+        # the pair cosines below and the postings append
+        m = hold(ivf_assign(batch, cents, id_col=id_col, vec_col=vec_col))
+        # corpus norms come from the index (computed once at build/add,
+        # not re-folded per probe batch)
+        post = session.read.parquet(f"{path}/postings").select(
+            "cid", "id", "v", "vn"
+        )
+        # ONE cluster-bounded reference join covers both drop rules: an
+        # INDEXED same-cluster row drops a batch vector under the
+        # self-id guard (rid != id), a BATCH same-cluster row drops the
+        # HIGHER id of the pair (rid < id). One join instead of two, and
+        # no distincts — left_anti is set-semantics on its right side
+        # already (fused r15: each of the two joins paid its own
+        # broadcast + agg stages on a 500-row batch).
+        ref = post.select(
+            "cid", F.col("id").alias("rid"), F.col("v").alias("rv"),
+            F.col("vn").alias("rvn"), F.lit(True).alias("indexed"),
+        ).unionByName(
+            m.select(
                 "cid", F.col("id").alias("rid"), F.col("v").alias("rv"),
-                F.col("vn").alias("rvn"), F.lit(True).alias("indexed"),
-            ).unionByName(
-                m.select(
-                    "cid", F.col("id").alias("rid"), F.col("v").alias("rv"),
-                    F.col("vn").alias("rvn"), F.lit(False).alias("indexed"),
-                )
+                F.col("vn").alias("rvn"), F.lit(False).alias("indexed"),
             )
-            drops = (
-                m.join(ref, "cid")
-                .where(
-                    (F.col("indexed") & (F.col("rid") != F.col("id")))
-                    | (~F.col("indexed") & (F.col("rid") < F.col("id")))
-                )
-                .where(
-                    (_dot("v", "rv") / (F.col("vn") * F.col("rvn"))) > eps
-                )
-                .select(F.col("id").alias(id_col))
+        )
+        drops = (
+            m.join(ref, "cid")
+            .where(
+                (F.col("indexed") & (F.col("rid") != F.col("id")))
+                | (~F.col("indexed") & (F.col("rid") < F.col("id")))
             )
-            # the replay guard (a crash-replayed batch must not re-add
-            # ids the index already holds) rides the SAME materialization
-            # as the survivors themselves: a left join against the
-            # posting ids flags already-indexed rows, so the add below
-            # is a cache filter instead of its own postings re-read +
-            # anti-join stages (r16 opt). The flag side is distinct, so
-            # an id posted twice (an add repeated after it committed,
-            # or a partly committed add) cannot multiply survivors.
-            flagged = (
-                batch.join(drops, id_col, "left_anti")
-                .join(
-                    post.select(
-                        F.col("id").alias(id_col),
-                        F.lit(True).alias("__in_index"),
-                    ).distinct(),
-                    id_col,
-                    "left",
-                )
-                .persist()
+            .where((_dot("v", "rv") / (F.col("vn") * F.col("rvn"))) > eps)
+            .select(F.col("id").alias(id_col))
+        )
+        # the replay guard (a crash-replayed batch must not re-add ids
+        # the index already holds) rides the SAME materialization as the
+        # survivors: a left join against the posting ids flags
+        # already-indexed rows, so the add is a cache filter instead of
+        # its own postings re-read + anti-join stages (r16 opt). The
+        # flag side is distinct, so an id posted twice (an add repeated
+        # after it committed, or a partly committed add) cannot multiply
+        # survivors. The flag is a helper column: on_pass never sees it.
+        flagged = batch.join(drops, id_col, "left_anti").join(
+            post.select(
+                F.col("id").alias(id_col), F.lit(True).alias("__in_index")
+            ).distinct(),
+            id_col,
+            "left",
+        )
+
+        def add(kept: DataFrame) -> None:
+            ivf_index_add(
+                session,
+                path,
+                kept.where(F.col("__in_index").isNull()).drop("__in_index"),
+                id_col=id_col,
+                vec_col=vec_col,
+                # the gate already assigned the whole batch (m): the add
+                # semi-filters those rows and writes them directly
+                assignments=m,
             )
-            # on_pass sees the caller's own columns (the flag stays
-            # internal); both views below are reads of the one cache
-            survivors = flagged.drop("__in_index")
-            # materialize once so the two independent publishes below
-            # are cache reads, then OVERLAP them (guide-§2.6, the LSH
-            # index-write pattern): the postings append and the caller's
-            # on_pass commit share no state beyond the cached frame.
-            flagged.count()
 
-            def _add() -> None:
-                ivf_index_add(
-                    spark,
-                    path,
-                    flagged.where(F.col("__in_index").isNull()).drop(
-                        "__in_index"
-                    ),
-                    id_col=id_col,
-                    vec_col=vec_col,
-                    # the sink already assigned the whole batch (m): the
-                    # add semi-filters those rows and writes them directly
-                    assignments=m,
-                )
+        return flagged, add
 
-            if on_pass is None:
-                _add()
-            else:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    futures = [
-                        pool.submit(_add),
-                        pool.submit(on_pass, survivors, batch_id),
-                    ]
-                    errs = [f.exception() for f in futures]
-                for err in errs:
-                    if err is not None:
-                        raise err
-        finally:
-            batch.unpersist()
-            if m is not None:
-                m.unpersist()
-            if flagged is not None:
-                flagged.unpersist()
-
-    return sink
+    return gated_sink(gate, on_pass)
 
 
 # --------------------------------------------------------------------------

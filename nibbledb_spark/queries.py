@@ -3587,6 +3587,41 @@ ORDER BY batch_id, vec_id
 """
 
 
+def _gate_replay(
+    spark: SparkSession, sf_dir: str, rows: DataFrame, id_col: str, gate
+) -> DataFrame:
+    """The K=3 ordered batch replay of a crawl gate: ``gate(seed,
+    index_dir, on_pass)`` builds the gate's index over the seed rows
+    (``id % 4 = 0``) and returns its foreachBatch sink; batches
+    ``id % 4 = 1, 2, 3`` go through that sink in order, and ``on_pass``
+    appends each batch's survivors as (batch_id, id) to a parquet sink,
+    which is read back."""
+    import shutil
+    import tempfile
+
+    base = os.path.join(
+        tempfile.gettempdir(),
+        f"nibblegate_{id_col}_{os.path.basename(os.path.abspath(sf_dir))}_{os.getpid()}",
+    )
+    passed = os.path.join(base, "passed")
+    shutil.rmtree(base, ignore_errors=True)
+    os.makedirs(base)
+
+    def on_pass(surv: DataFrame, batch_id: int) -> None:
+        # a few hundred cached rows per batch: one part file, not one
+        # per shuffle partition (32 tiny files per batch made the final
+        # read re-list ~100 files)
+        surv.select(
+            F.lit(batch_id).cast("long").alias("batch_id"),
+            F.col(id_col).cast("long").alias(id_col),
+        ).coalesce(1).write.mode("append").parquet(passed)
+
+    sink = gate(rows.where(f"{id_col} % 4 = 0"), os.path.join(base, "index"), on_pass)
+    for t_ in (1, 2, 3):
+        sink(rows.where(f"{id_col} % 4 = {t_}"), t_)
+    return spark.read.parquet(passed).orderBy("batch_id", id_col)
+
+
 @declared("semdedup_gate_replay", _semdedup_gate_replay_sql())
 def semdedup_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The embedding-space crawl-loop dedup gate (semdedup_gate), made
@@ -3600,44 +3635,21 @@ def semdedup_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     that passed; the oracle unrolls the same greedy sequence with the
     semdedup_keep pair algebra, so the stateful embedding-index growth
     is hash-matched end to end."""
-    import shutil
-    import tempfile
-
     from nibbledb_spark.operators.similarity import (
         build_ivf_index,
         semdedup_gate,
     )
 
-    e = _t(spark, sf_dir, "embeddings")
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"nibblesdgate_{os.path.basename(os.path.abspath(sf_dir))}_{os.getpid()}",
-    )
-    idx = os.path.join(base, "index")
-    passed = os.path.join(base, "passed")
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
-    seed = e.where("vec_id % 4 = 0")
-    cents = (
-        seed.orderBy(F.col("vec_id").asc())
-        .limit(8)
-        .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
-    )
-    build_ivf_index(seed, idx, centroids=cents)
+    def gate(seed: DataFrame, idx: str, on_pass):
+        cents = (
+            seed.orderBy(F.col("vec_id").asc())
+            .limit(8)
+            .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
+        )
+        build_ivf_index(seed, idx, centroids=cents)
+        return semdedup_gate(spark, idx, eps=0.35, on_pass=on_pass)
 
-    def on_pass(surv: DataFrame, batch_id: int) -> None:
-        # a few hundred cached rows per batch: one part file, not one
-        # per shuffle partition (guide-§6 output sizing — 32 tiny
-        # files per batch made the final read re-list ~100 files)
-        surv.select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            F.col("vec_id").cast("long").alias("vec_id"),
-        ).coalesce(1).write.mode("append").parquet(passed)
-
-    sink = semdedup_gate(spark, idx, eps=0.35, on_pass=on_pass)
-    for t_ in (1, 2, 3):
-        sink(e.where(f"vec_id % 4 = {t_}"), t_)
-    return spark.read.parquet(passed).orderBy("batch_id", "vec_id")
+    return _gate_replay(spark, sf_dir, _t(spark, sf_dir, "embeddings"), "vec_id", gate)
 
 
 @declared("ivf_ann_topk_kmeans", pytest_only=True)  # recall pinned in pytest
@@ -8856,32 +8868,13 @@ def lsh_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same greedy sequence as three CTE steps (the pagerank
     fixed-iteration precedent), so the stateful crawl loop is
     hash-matched end to end, including the sequential index growth."""
-    import shutil
-    import tempfile
-
     from nibbledb_spark.operators.dedup import build_lsh_index, lsh_dedup_gate
 
-    docs = _t(spark, sf_dir, "documents")
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"nibblegate_{os.path.basename(os.path.abspath(sf_dir))}_{os.getpid()}",
-    )
-    idx = os.path.join(base, "index")
-    passed = os.path.join(base, "passed")
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
-    build_lsh_index(docs.where("doc_id % 4 = 0"), idx)
+    def gate(seed: DataFrame, idx: str, on_pass):
+        build_lsh_index(seed, idx)
+        return lsh_dedup_gate(spark, idx, threshold=0.8, on_pass=on_pass)
 
-    def on_pass(surv: DataFrame, batch_id: int) -> None:
-        surv.select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            F.col("doc_id").cast("long").alias("doc_id"),
-        ).write.mode("append").parquet(passed)
-
-    sink = lsh_dedup_gate(spark, idx, threshold=0.8, on_pass=on_pass)
-    for t_ in (1, 2, 3):
-        sink(docs.where(f"doc_id % 4 = {t_}"), t_)
-    return spark.read.parquet(passed).orderBy("batch_id", "doc_id")
+    return _gate_replay(spark, sf_dir, _t(spark, sf_dir, "documents"), "doc_id", gate)
 
 
 def _bpe_vocab_sql(k: int) -> str:

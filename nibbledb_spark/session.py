@@ -142,11 +142,12 @@ class micro_batch_tuning:
     ``n_rows`` at or below ``MICRO_BATCH_ROWS`` turns AQE off and sizes
     ``spark.sql.shuffle.partitions`` from the batch volume (~128 rows
     per partition, floored at 4, never above the session setting) for
-    the duration of the block; larger batches are a no-op. Confs are
-    session-global, so this is for single-writer sinks (the foreachBatch
-    contract both gates already require); the previous values restore
-    on exit even on failure. Results are conf-independent — AQE and
-    partition counts change scheduling, never semantics.
+    the duration of the block; larger batches are a no-op. The crawl
+    gates' sink tunes the BATCH's session (in a stream, the query's
+    clone, so other queries keep their confs) and runs ``on_pass``
+    after the block, under the session's own confs. The previous values
+    restore on exit even on failure. Results are conf-independent — AQE
+    and partition counts change scheduling, never semantics.
     """
 
     def __init__(self, spark: SparkSession, n_rows: int):

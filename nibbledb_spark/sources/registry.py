@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -214,18 +215,10 @@ def stream_points(spark: SparkSession, path: str, fmt: str = "json") -> DataFram
 # a 100 TB deployment does as an ETL step anyway (the reference holds its
 # points natively in its store). Entries carry the events-file stamp and
 # invalidate (unpersisting the stale view) when the file changes, same
-# contract as _TABLE_CACHE. Bounded: one entry per sf_dir actually
-# queried; clear_points_cache() unpersists.
+# contract as _TABLE_CACHE. An entry that ``spark.catalog.clearCache()``
+# (or any uncache) took out of the cache manager is rebuilt and persisted
+# again on its next use. Bounded: one entry per sf_dir actually queried.
 _POINTS_CACHE: dict[tuple[int, str], tuple[object, DataFrame]] = {}
-
-
-def clear_points_cache() -> None:
-    for _, df in _POINTS_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _POINTS_CACHE.clear()
 
 
 def event_ts_us(df: DataFrame):
@@ -278,9 +271,11 @@ def points_from_events(
     if cached:
         hit = _POINTS_CACHE.get(key)
         if hit is not None:
-            if hit[0] == stamp:
+            # pyspark's is_cached is a python-side flag that clearCache()
+            # leaves True; storageLevel asks the cache manager itself
+            if hit[0] == stamp and hit[1].storageLevel != StorageLevel.NONE:
                 return hit[1]
-            try:  # events.parquet changed: drop the stale persisted view
+            try:  # events.parquet changed or the cache was cleared: rebuild
                 hit[1].unpersist()
             except Exception:
                 pass

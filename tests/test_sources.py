@@ -83,6 +83,22 @@ def test_table_and_points_caches_invalidate_on_rewrite(spark, tmp_path):
     assert n2 == 10 and n1 != n2  # fresh data, not the stale persist
 
 
+def test_points_cache_persists_again_after_clear_cache(spark):
+    """``spark.catalog.clearCache()`` takes the memoized points view out
+    of the cache manager (pyspark's ``is_cached`` flag still reads True);
+    the next call must hand back a persisted frame, with the same rows."""
+    from pyspark import StorageLevel
+
+    from nibbledb_spark.sources.registry import points_from_events
+
+    sf = "/root/testdata/sf0.001"
+    before = _canon(points_from_events(spark, sf))
+    spark.catalog.clearCache()
+    fresh = points_from_events(spark, sf)
+    assert fresh.storageLevel != StorageLevel.NONE
+    assert _canon(fresh) == before
+
+
 # --- nibble_wire custom Python DataSource -----------------------------------
 
 

@@ -718,3 +718,110 @@ def test_micro_batch_tuning_never_raises_session_partitions(spark):
     finally:
         for k, v in saved.items():
             conf.set(k, v)
+
+
+def _gate_and_batch(spark, gate, path):
+    """Build ``gate``'s index at ``path``; return its sink factory
+    (``on_pass`` -> sink) and a 4-row batch of which ids 11 and 13 pass."""
+    from nibbledb_spark.operators import dedup, similarity
+
+    if gate == "lsh":
+        base = "the quick brown fox jumps over the lazy dog again and again"
+        novel = "a brand new document describing winnowing fingerprints nicely"
+        dedup.build_lsh_index(
+            spark.createDataFrame([(1, base)], "doc_id long, text string"), path
+        )
+        batch = spark.createDataFrame(
+            [(10, base + " tail"), (11, novel), (12, novel + " extra"),
+             (13, "unrelated fresh text about parquet row group statistics")],
+            "doc_id long, text string",
+        )
+        return (
+            lambda on_pass: dedup.lsh_dedup_gate(spark, path, threshold=0.6, on_pass=on_pass),
+            batch,
+        )
+
+    def vec(d, jitter=0.0):
+        v = [0.0] * 8
+        v[d], v[(d + 1) % 8] = 1.0, jitter
+        return v
+
+    schema = "vec_id long, embedding array<double>"
+    seed = spark.createDataFrame([(0, vec(0)), (1, vec(4))], schema)
+    similarity.build_ivf_index(
+        seed, path,
+        centroids=seed.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")),
+    )
+    batch = spark.createDataFrame(
+        [(10, vec(0, 0.05)), (11, vec(1)), (12, vec(1, 0.05)), (13, vec(5))], schema
+    )
+    return (
+        lambda on_pass: similarity.semdedup_gate(spark, path, eps=0.8, on_pass=on_pass),
+        batch,
+    )
+
+
+_TUNED = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+
+
+@pytest.mark.parametrize("gate", ["lsh", "semdedup"])
+def test_gate_in_a_stream_tunes_the_batch_session(spark, tmp_path, caplog, gate):
+    """Through a real ``writeStream.foreachBatch`` (whose batches carry
+    the query's own cloned session) a gate passes the same ids as a
+    direct call; ``on_pass`` runs under that session's own AQE and
+    shuffle-partition confs, the outer session's confs are never
+    touched, and the sink logs one DEBUG line for the batch."""
+    import logging
+
+    make_sink, batch = _gate_and_batch(spark, gate, str(tmp_path / "idx_direct"))
+    direct: list[int] = []
+    make_sink(lambda s, _: direct.extend(r[0] for r in s.collect()))(batch, 0)
+
+    make_sink, batch = _gate_and_batch(spark, gate, str(tmp_path / "idx_stream"))
+    drop = str(tmp_path / "drop")
+    batch.coalesce(1).write.parquet(drop)
+    confs = {k: spark.conf.get(k) for k in _TUNED}
+    seen: list[tuple] = []
+
+    def on_pass(surv, batch_id):
+        seen.append((
+            batch_id,
+            sorted(r[0] for r in surv.collect()),
+            {k: surv.sparkSession.conf.get(k) for k in _TUNED},
+            {k: spark.conf.get(k) for k in _TUNED},
+        ))
+
+    caplog.set_level(logging.DEBUG, logger="nibbledb_spark.gate")
+    q = (
+        spark.readStream.schema(batch.schema).parquet(drop)
+        .writeStream.foreachBatch(make_sink(on_pass))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert sorted(direct) == [11, 13]
+    assert seen == [(0, [11, 13], confs, confs)]
+    assert [
+        r.getMessage() for r in caplog.records if r.name == "nibbledb_spark.gate"
+    ] == ["batch_id=0 rows_in=4 survivors=2"]
+
+
+@pytest.mark.parametrize("gate", ["lsh", "semdedup"])
+def test_gate_on_pass_failure_restores_confs_and_caches(spark, tmp_path, gate):
+    """An ``on_pass`` that raises: the error reaches the caller, the
+    session's tuned confs are back to their own values, and every
+    per-batch frame the sink persisted is released."""
+    make_sink, batch = _gate_and_batch(spark, gate, str(tmp_path / "idx"))
+
+    def on_pass(surv, batch_id):
+        raise RuntimeError("commit failed")
+
+    sink = make_sink(on_pass)
+    confs = {k: spark.conf.get(k) for k in _TUNED}
+    n_persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="commit failed"):
+        sink(batch, 0)
+    assert {k: spark.conf.get(k) for k in _TUNED} == confs
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_persisted
