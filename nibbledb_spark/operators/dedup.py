@@ -1219,13 +1219,8 @@ def decontaminate_semantic(
     (:func:`~nibbledb_spark.operators.similarity.ivf_topk_indexed`)
     and exact-verify the survivors with this operator's predicate.
     """
-    from .similarity import _dot, l2_norm
+    from .similarity import _cos, l2_norm
 
-    # Norms factor OUT of the pair loop (the cosine_topk r14 lesson,
-    # ported r15): ||t|| once per training row, ||e|| once per broadcast
-    # eval row, so each (train x eval) pair pays ONE interpreted HOF
-    # fold (the dot) instead of three. Bit-identical: same operands,
-    # same dot/(tn*en) IEEE tree as cosine().
     tr = train.select(
         F.col(id_col).alias("train_id"),
         F.col(vec_col).alias("tv"),
@@ -1241,7 +1236,7 @@ def decontaminate_semantic(
         .select(
             "train_id",
             "eval_id",
-            (_dot("tv", "ev") / (F.col("tn") * F.col("en"))).alias("cos_sim"),
+            _cos("tv", "ev", "tn", "en").alias("cos_sim"),
         )
         .where(F.col("cos_sim") > threshold)
     )

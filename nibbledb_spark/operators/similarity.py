@@ -59,9 +59,13 @@ def _dot(a: Column | str, b: Column | str) -> Column:
     )
 
 
+def _norm_sql(v: str) -> str:
+    return f"sqrt({_dot_sql(v, v)})"
+
+
 def l2_norm(v: Column | str) -> Column:
     if isinstance(v, str):
-        return F.expr(f"sqrt({_dot_sql(v, v)})")
+        return F.expr(_norm_sql(v))
     return F.sqrt(_dot(v, v))
 
 
@@ -78,14 +82,54 @@ def l2_norm(v: Column | str) -> Column:
 # cosine_topk/semdedup/IVF all already do.
 
 
-def _cos_sql(a: str, b: str) -> str:
-    return f"{_dot_sql(a, b)} / (sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)}))"
+def _cos_sql(a: str, b: str, na: str, nb: str) -> str:
+    """SQL twin of :func:`_cos` (same operation order)."""
+    return f"{_dot_sql(a, b)} / NULLIF({na} * {nb}, 0)"
+
+
+def _cos(
+    a: Column | str, b: Column | str, na: Column | str, nb: Column | str
+) -> Column:
+    """THE cosine of vectors ``a`` and ``b`` from their precomputed L2
+    norms ``na`` and ``nb``: ``dot(a, b) / NULLIF(na * nb, 0)``. Every
+    cosine the operators compute is this expression.
+
+    Norms factor OUT of pair loops: a caller folds each side's norm once
+    per row (or reads it stored, like the IVF postings' ``vn``), so each
+    scored pair pays ONE interpreted HOF fold, the dot, instead of
+    three (measured ~2.4x on the x100 eval sweep). The result is
+    bit-identical to folding the norms in place: same operands, same
+    ``dot / (na * nb)`` IEEE tree, and stored parquet doubles round-trip
+    exactly.
+
+    Zero vectors: the NULLIF makes the cosine of a zero vector NULL
+    instead of failing the job with DIVIDE_BY_ZERO under ANSI mode (and
+    non-zero results are unchanged). What a NULL cosine means to each
+    operator is stated once, in :func:`ivf_assign`."""
+    if all(isinstance(x, str) for x in (a, b, na, nb)):
+        return F.expr(_cos_sql(a, b, na, nb))
+    return _dot(a, b) / F.nullif(na * nb, F.lit(0))
 
 
 def cosine(a: Column | str, b: Column | str) -> Column:
+    """Cosine similarity of two vector columns (:func:`_cos`, norms
+    folded in place); NULL when either is a zero vector."""
     if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_cos_sql(a, b))
-    return _dot(a, b) / (l2_norm(a) * l2_norm(b))
+        return _cos(a, b, _norm_sql(a), _norm_sql(b))
+    return _cos(a, b, l2_norm(a), l2_norm(b))
+
+
+def _top_k(scored: DataFrame, k: int, *order: Column) -> DataFrame:
+    """``scored`` cut to its ``k`` first rows per query_id under
+    ``order``, numbered 1..k in ``rank`` — the per-query top-k every
+    reader ends with. The default order is the cosine readers':
+    ``cos_sim`` descending (a NULL cosine last), ties to the lower
+    neighbor_id."""
+    order = order or (F.col("cos_sim").desc(), F.col("neighbor_id").asc())
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )
 
 
 def cosine_topk(
@@ -101,13 +145,6 @@ def cosine_topk(
     Returns (query_id, neighbor_id, rank, cos_sim). Self-matches are
     excluded; ties break on neighbor id for determinism.
     """
-    # Norms factor OUT of the pair loop: ||q|| once per broadcast query
-    # row, ||c|| once per corpus row, so each (corpus x query) pair
-    # pays ONE interpreted HOF fold (the dot) instead of three — with
-    # |Q| queries the per-corpus-row fold count drops from 3|Q| to
-    # |Q|+1 (measured ~2.4x on the x100 eval sweep). Bit-identical to
-    # cosine(): same operands, same dot/(nq*nc) IEEE tree — every
-    # hash-matched oracle downstream is unaffected.
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
@@ -124,19 +161,10 @@ def cosine_topk(
         .select(
             "query_id",
             "neighbor_id",
-            (_dot("qv", "cv") / (F.col("qn") * F.col("cn"))).alias(
-                "cos_sim"
-            ),
+            _cos("qv", "cv", "qn", "cn").alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _top_k(scored, k).select("query_id", "neighbor_id", "rank", "cos_sim")
 
 
 def mmr_topk(
@@ -403,16 +431,9 @@ def hard_negatives(
             cosine("qv", "cv").alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "query_label", "neighbor_id", "neighbor_label",
-            "rank", "cos_sim",
-        )
+    return _top_k(scored, k).select(
+        "query_id", "query_label", "neighbor_id", "neighbor_label",
+        "rank", "cos_sim",
     )
 
 
@@ -510,7 +531,6 @@ def near_dup_pairs_cosine(
                 f"{max_rows}). Use near_dup_pairs_srp (SRP-bucketed "
                 f"candidates + exact verify) for real corpora."
             )
-    # norms factor out of the pair loop (bit-identical; r15 opt)
     a = corpus.select(
         F.col(id_col).alias("id1"),
         F.col(vec_col).alias("v1"),
@@ -526,7 +546,7 @@ def near_dup_pairs_cosine(
         .select(
             "id1",
             "id2",
-            (_dot("v1", "v2") / (F.col("n1") * F.col("n2"))).alias("cos_sim"),
+            _cos("v1", "v2", "n1", "n2").alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= threshold)
     )
@@ -618,14 +638,7 @@ def srp_topk(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", cosine("qv", "cv").alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _top_k(scored, k).select("query_id", "neighbor_id", "rank", "cos_sim")
 
 
 # ---------------------------------------------------------------------------
@@ -752,19 +765,12 @@ def srp_topk_indexed(
         .where(F.col("id") != F.col("query_id"))
         .dropDuplicates(["query_id", "id"])
     )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
+    scored = cand.select(
+        "query_id",
+        F.col("id").alias("neighbor_id"),
+        cosine("qv", "v").alias("cos_sim"),
     )
-    return (
-        cand.select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            cosine("qv", "v").alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _top_k(scored, k).select("query_id", "neighbor_id", "rank", "cos_sim")
 
 
 # ---------------------------------------------------------------------------
@@ -800,10 +806,19 @@ def ivf_assign(
     orders NaN greatest both ways), and its map-side partial collapses
     a partition's k candidates per vector before the one exchange. The
     vector norm folds once per vector and the centroid norm once per
-    centroid on the broadcast side, so each pair pays one dot with the
-    same ``dot / (vn * cvn)`` IEEE tree as :func:`cosine` —
-    bit-identical. A repeated id keeps the row of its best-scoring
-    vector."""
+    centroid on the broadcast side, so each pair pays one dot
+    (:func:`_cos`). A repeated id keeps the row of its best-scoring
+    vector.
+
+    The zero-vector rule, for every operator in this module: the cosine
+    of a zero vector (or against a zero centroid) is NULL. A NULL cosine
+    never passes a ``> eps`` or ``> threshold`` test, so a zero vector
+    drops nothing and is never dropped, and in a top-k (a probe's list
+    choice included) it ranks after every scored neighbor.
+    ``max(struct)`` orders a NULL below every
+    value, so here a zero vector goes to the lowest cid, and a zero
+    centroid wins only a vector whose every cosine is NULL — the same
+    heads the window form picks, whose DESC order puts NULLs last."""
     scored = corpus.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
@@ -816,7 +831,7 @@ def ivf_assign(
         )
     )
     best = F.struct(
-        (_dot("v", "cv") / (F.col("vn") * F.col("cvn"))).alias("cos"),
+        _cos("v", "cv", "vn", "cvn").alias("cos"),
         (-F.col("cid")).alias("ncid"),
         F.col("v").alias("v"),
         F.col("vn").alias("vn"),
@@ -833,10 +848,22 @@ def ivf_assign(
     )
 
 
+def _lowest_id_centroids(
+    corpus: DataFrame, n: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """The default coarse quantizer: the ``n`` lowest-id vectors as
+    (cid, cvec), oracle-replicable in SQL."""
+    return (
+        corpus.orderBy(F.col(id_col).asc())
+        .limit(n)
+        .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
+    )
+
+
 def _probe_lists(q: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
     """``q``'s rows (keyed by query_id, vector qv), each with the cid of
     one of its ``nprobe`` nearest (cid, cvec) centroids by cosine, ties
-    to the lowest cid — the probe set every indexed reader scans."""
+    to the lowest cid — the probe set every IVF reader scans."""
     wq = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cid").asc())
     return (
         q.crossJoin(F.broadcast(cents))
@@ -845,6 +872,38 @@ def _probe_lists(q: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
         .where(F.col("rn") <= nprobe)
         .select(*q.columns, "cid")
     )
+
+
+def _ivf_probe_rerank(
+    lists: DataFrame,
+    cents: DataFrame,
+    queries: DataFrame,
+    k: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """THE IVF read: each query probes its ``nprobe`` nearest (cid,
+    cvec) ``cents`` and reranks the members of those inverted ``lists``
+    (cid, id, v, vn) by exact cosine, keeping the top ``k``. The corpus
+    norm is the lists' ``vn``, so each candidate pair pays one fold.
+    ``lists`` is :func:`ivf_assign` output in memory, or an index's
+    postings, whose cid filter is then a partition predicate.
+    Returns (query_id, neighbor_id, rank, cos_sim)."""
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("qv"),
+        l2_norm(vec_col).alias("qn"),
+    )
+    cand = lists.join(F.broadcast(_probe_lists(q, cents, nprobe)), "cid").where(
+        F.col("id") != F.col("query_id")
+    )
+    scored = cand.select(
+        "query_id",
+        F.col("id").alias("neighbor_id"),
+        _cos("qv", "v", "qn", "vn").alias("cos_sim"),
+    )
+    return _top_k(scored, k).select("query_id", "neighbor_id", "rank", "cos_sim")
 
 
 def kmeans_centroids(
@@ -875,8 +934,8 @@ def kmeans_centroids(
     """
     spark = corpus.sparkSession
     cents = [
-        [float(x) for x in r[vec_col]]
-        for r in corpus.orderBy(F.col(id_col).asc()).select(vec_col).limit(k).collect()
+        [float(x) for x in r["cvec"]]
+        for r in _lowest_id_centroids(corpus, k, id_col, vec_col).collect()
     ]
     for _ in range(n_iter):
         cdf = spark.createDataFrame(
@@ -927,59 +986,21 @@ def ivf_topk(
     quantizer — pass :func:`kmeans_centroids` output for the
     quality/scale path (the default stays oracle-replicable in SQL).
 
-    The whole probe pipeline (assignment, query probing, candidate
-    join, rerank) is ONE ``spark.sql`` call — the analyzer-once
-    rationale of ``near_dup_pairs_minhash_fast`` (build 0.20 s ->
-    0.10 s, plan and results identical: same broadcast joins, same
-    Exchange count — r15 opt). Broadcasts that were ``F.broadcast``
-    calls are ``/*+ BROADCAST(...) */`` hints.
+    The inverted lists are :func:`ivf_assign` in memory; the probe and
+    rerank are the ones :func:`ivf_topk_indexed` runs over a persisted
+    index.
     """
     if centroids is None:
-        cent_sql = (
-            f"SELECT {id_col} AS cid, {vec_col} AS cvec FROM {{corpus}} "
-            f"ORDER BY {id_col} ASC LIMIT {n_centroids}"
-        )
-        frames = dict(corpus=corpus, queries=queries)
-    else:
-        cent_sql = "SELECT cid, cvec FROM {cents}"
-        frames = dict(corpus=corpus, queries=queries, cents=centroids)
-    q = f"""
-WITH cent AS ({cent_sql}),
-inv AS (
-  SELECT id, cid FROM (
-    SELECT id, cid,
-           row_number() OVER (PARTITION BY id ORDER BY cos DESC, cid ASC) AS rn
-    FROM (SELECT /*+ BROADCAST(cent) */ c.id, cent.cid,
-                 {_cos_sql('c.v', 'cent.cvec')} AS cos
-          FROM (SELECT {id_col} AS id, {vec_col} AS v FROM {{corpus}}) c
-          CROSS JOIN cent)
-  ) WHERE rn = 1),
-probes AS (
-  SELECT query_id, qv, cid FROM (
-    SELECT query_id, qv, cid,
-           row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cid ASC) AS rn
-    FROM (SELECT /*+ BROADCAST(cent) */ q.query_id, q.qv, cent.cid,
-                 {_cos_sql('q.qv', 'cent.cvec')} AS cos
-          FROM (SELECT {id_col} AS query_id, {vec_col} AS qv FROM {{queries}}) q
-          CROSS JOIN cent)
-  ) WHERE rn <= {nprobe}),
-cand AS (
-  SELECT /*+ BROADCAST(probes) */ probes.query_id, probes.qv, inv.id
-  FROM inv JOIN probes USING (cid) WHERE inv.id != probes.query_id)
-SELECT query_id, neighbor_id, rank, cos_sim FROM (
-  SELECT query_id, neighbor_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-  FROM (SELECT cand.query_id, cv.neighbor_id,
-               {_cos_sql('cand.qv', 'cv.cv')} AS cos_sim
-        FROM cand
-        JOIN (SELECT {id_col} AS neighbor_id, {vec_col} AS cv FROM {{corpus}}) cv
-        ON cand.id = cv.neighbor_id)
-) WHERE rank <= {k}
-"""
-    from nibbledb_spark.session import sql_over
-
-    return sql_over(corpus.sparkSession, q, **frames)
+        centroids = _lowest_id_centroids(corpus, n_centroids, id_col, vec_col)
+    return _ivf_probe_rerank(
+        ivf_assign(corpus, centroids, id_col=id_col, vec_col=vec_col),
+        centroids,
+        queries,
+        k,
+        nprobe,
+        id_col,
+        vec_col,
+    )
 
 
 def semdedup(
@@ -1022,20 +1043,14 @@ def semdedup(
     oracle-replicable (the ``ivf_ann_topk`` precedent).
     """
     if centroids is None:
-        centroids = (
-            corpus.orderBy(F.col(id_col).asc())
-            .limit(n_centroids)
-            .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-        )
+        centroids = _lowest_id_centroids(corpus, n_centroids, id_col, vec_col)
     # the assignment (corpus x centroids + one per-id aggregate) is the
     # dominant cost and has THREE plan consumers (both self-join sides
     # + the final anti); persist it once — the ngram_jaccard
     # shingle-table contract: the returned frame pins one corpus-sized
     # cache entry for its lifetime, callers wanting it released
     # materialize and unpersist via their own handle. ||v|| rides the
-    # assignment (one fold per corpus row), so every intra-cluster pair
-    # below pays ONE fold (the dot) instead of three — the cosine_topk
-    # norm-factoring lesson (bit-identical: same dot/(an*bn) IEEE tree).
+    # assignment, so every intra-cluster pair below pays one fold.
     m = ivf_assign(corpus, centroids, id_col=id_col, vec_col=vec_col).persist()
     a, b = m.alias("a"), m.alias("b")
     drops = (
@@ -1043,9 +1058,7 @@ def semdedup(
             b,
             (F.col("a.cid") == F.col("b.cid")) & (F.col("a.id") < F.col("b.id")),
         )
-        .where(
-            (_dot("a.v", "b.v") / (F.col("a.vn") * F.col("b.vn"))) > eps
-        )
+        .where(_cos("a.v", "b.v", "a.vn", "b.vn") > eps)
         .select(F.col("b.id").alias("id"))
         .distinct()
     )
@@ -1146,11 +1159,8 @@ def build_ivf_index(
         cents.write.mode("overwrite").parquet(f"{path}/centroids")
 
     def _postings() -> None:
-        # vn (the vector's L2 norm, from ivf_assign) is corpus-side
-        # state: stored ONCE here, it saves every probe batch a per-row
-        # interpreted fold over the posting lists forever after (parquet
-        # doubles round-trip exactly, so stored-vs-recomputed is
-        # bit-identical)
+        # vn (the vector's L2 norm, from ivf_assign) is stored ONCE
+        # here, so no probe batch re-folds it over the posting lists
         (
             ivf_assign(corpus, cents, id_col=id_col, vec_col=vec_col)
             .repartition("cid")
@@ -1226,34 +1236,16 @@ def ivf_topk_indexed(
     partitions (the cid filter is a partition predicate — directories
     outside the probe set are never opened). Results are identical to
     the in-memory :func:`ivf_topk` built with the same centroids
-    (pinned test). The rerank pays ONE fold per candidate pair: the
-    query norm is computed once per query row, the corpus norm is the
-    index's stored ``vn`` (r15 opt — same operands and multiply order
-    as ``cosine()``, bit-identical)."""
-    cents = spark.read.parquet(f"{path}/centroids")
-    post = spark.read.parquet(f"{path}/postings")
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        l2_norm(vec_col).alias("qn"),
-    )
-    probes = _probe_lists(q, cents, nprobe)
-    cand = post.join(F.broadcast(probes), "cid").where(
-        F.col("id") != F.col("query_id")
-    )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            (_dot("qv", "v") / (F.col("qn") * F.col("vn"))).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
+    (pinned test): both run :func:`_ivf_probe_rerank`, this one over
+    the stored lists."""
+    return _ivf_probe_rerank(
+        spark.read.parquet(f"{path}/postings"),
+        spark.read.parquet(f"{path}/centroids"),
+        queries,
+        k,
+        nprobe,
+        id_col,
+        vec_col,
     )
 
 
@@ -1303,25 +1295,16 @@ def hard_negatives_indexed(
         .join(lab, "id")
         .where(F.col("neighbor_label") != F.col("query_label"))
     )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
+    scored = cand.select(
+        "query_id",
+        "query_label",
+        F.col("id").alias("neighbor_id"),
+        "neighbor_label",
+        _cos("qv", "v", "qn", "vn").alias("cos_sim"),
     )
-    return (
-        cand.select(
-            "query_id",
-            "query_label",
-            F.col("id").alias("neighbor_id"),
-            "neighbor_label",
-            # one fold per pair: query norm from the probe row, corpus
-            # norm from the index (bit-identical to cosine(), r15 opt)
-            (_dot("qv", "v") / (F.col("qn") * F.col("vn"))).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "query_label", "neighbor_id", "neighbor_label",
-            "rank", "cos_sim",
-        )
+    return _top_k(scored, k).select(
+        "query_id", "query_label", "neighbor_id", "neighbor_label",
+        "rank", "cos_sim",
     )
 
 
@@ -1411,7 +1394,7 @@ def semdedup_gate(
                 (F.col("indexed") & (F.col("rid") != F.col("id")))
                 | (~F.col("indexed") & (F.col("rid") < F.col("id")))
             )
-            .where((_dot("v", "rv") / (F.col("vn") * F.col("rvn"))) > eps)
+            .where(_cos("v", "rv", "vn", "rvn") > eps)
             .select(F.col("id").alias(id_col))
         )
         # the replay guard (a crash-replayed batch must not re-add ids
@@ -1688,16 +1671,11 @@ def pq_adc_topk(
         .groupBy("query_id", "id")
         .agg(F.sum("dq").alias("dql"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("dql").asc(), F.col("id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            "rank",
-            (F.col("dql").cast("double") / F.lit(mlt)).alias("adc_dist"),
-        )
+    return _top_k(scored, k, F.col("dql").asc(), F.col("id").asc()).select(
+        "query_id",
+        F.col("id").alias("neighbor_id"),
+        "rank",
+        (F.col("dql").cast("double") / F.lit(mlt)).alias("adc_dist"),
     )
 
 
@@ -1744,14 +1722,7 @@ def pq_topk_rerank(
             cosine("qv", "cv").alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _top_k(scored, k).select("query_id", "neighbor_id", "rank", "cos_sim")
 
 
 def build_ivfpq_index(
@@ -1881,18 +1852,20 @@ def ivfpq_topk_indexed(
             "query_id", "id", F.posexplode("codes").alias("j", "code")
         )
         scored = _adc_scores(ex, lut, ("query_id",))
-    w = Window.partitionBy("query_id").orderBy(F.col("dql").asc(), F.col("id").asc())
-    ranked = scored.withColumn("rank", F.row_number().over(w))
+    ranked = _top_k(
+        scored,
+        k if rerank_with is None else n_candidates,
+        F.col("dql").asc(),
+        F.col("id").asc(),
+    )
     if rerank_with is None:
-        return ranked.where(F.col("rank") <= k).select(
+        return ranked.select(
             "query_id",
             F.col("id").alias("neighbor_id"),
             "rank",
             (F.col("dql").cast("double") / F.lit(mlt)).alias("adc_dist"),
         )
-    pool = ranked.where(F.col("rank") <= n_candidates).select(
-        "query_id", F.col("id").alias("neighbor_id")
-    )
+    pool = ranked.select("query_id", F.col("id").alias("neighbor_id"))
     c = rerank_with.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
@@ -1903,14 +1876,7 @@ def ivfpq_topk_indexed(
             "query_id", "neighbor_id", cosine("qv", "cv").alias("cos_sim")
         )
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(wr))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _top_k(rescored, k).select("query_id", "neighbor_id", "rank", "cos_sim")
 
 
 def ivfpq_index_add(

@@ -795,15 +795,21 @@ def test_ivf_assign_matches_the_window_form(spark):
     ``ORDER BY cos DESC, cid ASC``: identical centroids tie to the lower
     cid, a NaN cosine (Spark orders NaN greatest) goes to the lowest
     cid, and a repeated id keeps one row — the vector that scores best.
-    ``vn`` is ``l2_norm(v)`` bit for bit. The NaN comes from a NaN
-    component: a zero vector's 0/0 raises DIVIDE_BY_ZERO under ANSI in
-    both forms."""
+    A zero vector's cosines are all NULL, so it goes to the lowest cid;
+    a zero centroid's cosine is NULL against every vector, so it wins
+    none that has a non-NULL cosine. ``vn`` is ``l2_norm(v)`` bit for
+    bit. The NaN comes from a NaN component."""
     from pyspark.sql import Window
 
     from nibbledb_spark.operators.similarity import cosine, ivf_assign, l2_norm
 
     cents = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0]), (2, [0.0, 1.0, 0.0])],
+        [
+            (0, [1.0, 0.0, 0.0]),
+            (1, [0.0, 1.0, 0.0]),
+            (2, [0.0, 1.0, 0.0]),
+            (3, [0.0, 0.0, 0.0]),  # a zero centroid
+        ],
         "cid int, cvec array<double>",
     )
     corpus = spark.createDataFrame(
@@ -814,6 +820,7 @@ def test_ivf_assign_matches_the_window_form(spark):
             (3, [0.1, 1.0, 0.0]),  # ... this one 0.995 and wins
             (4, [1.0, 1.0, 0.0]),  # a three-way tie
             (5, [-1.0, 0.5, 0.25]),
+            (6, [0.0, 0.0, 0.0]),  # a zero vector
         ],
         "vec_id long, embedding array<double>",
     )
@@ -831,7 +838,7 @@ def test_ivf_assign_matches_the_window_form(spark):
     assert sorted((r["id"], r["cid"]) for r in got) == sorted(
         (r["id"], r["cid"]) for r in ref.collect()
     )
-    assert {r["id"]: r["cid"] for r in got} == {1: 1, 2: 0, 3: 1, 4: 0, 5: 1}
+    assert {r["id"]: r["cid"] for r in got} == {1: 1, 2: 0, 3: 1, 4: 0, 5: 1, 6: 0}
     assert [r["v"] for r in got if r["id"] == 3] == [[0.1, 1.0, 0.0]]
 
     norms = (
@@ -839,8 +846,93 @@ def test_ivf_assign_matches_the_window_form(spark):
         .select("vn", l2_norm(F.col("v")).alias("ref"))
         .collect()
     )
-    assert len(norms) == 5
+    assert len(norms) == 6
     assert all(r["vn"].hex() == r["ref"].hex() for r in norms)
+
+
+def test_zero_vector_has_a_null_cosine_everywhere(spark, tmp_path):
+    """The zero-vector rule (ivf_assign's docstring): a zero vector's
+    cosine is NULL instead of a DIVIDE_BY_ZERO job failure. It drops
+    nothing and is never dropped, ranks after every scored neighbor,
+    and goes to the lowest cid — through cosine_topk, ivf_topk,
+    semdedup, near_dup_pairs_cosine, decontaminate_semantic and one
+    semdedup_gate batch."""
+    from nibbledb_spark.operators.dedup import decontaminate_semantic
+    from nibbledb_spark.operators.similarity import (
+        build_ivf_index,
+        cosine_topk,
+        ivf_topk,
+        near_dup_pairs_cosine,
+        semdedup,
+        semdedup_gate,
+    )
+
+    schema = "vec_id long, embedding array<double>"
+    # id 2 is the zero vector; at n_centroids=2 the lowest-id quantizer
+    # makes it the zero centroid (cid 2) as well
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.6, 0.8]), (4, [0.6, 0.8])],
+        schema,
+    )
+
+    def ranked(df):
+        out: dict = {}
+        for r in df.orderBy("query_id", "rank").collect():
+            out.setdefault(r["query_id"], []).append(
+                (r["neighbor_id"], r["cos_sim"] is None)
+            )
+        return out
+
+    exact = cosine_topk(corpus, corpus, 3)
+    assert ranked(exact) == {
+        1: [(3, False), (4, False), (2, True)],
+        2: [(1, True), (3, True), (4, True)],
+        3: [(4, False), (1, False), (2, True)],
+        4: [(3, False), (1, False), (2, True)],
+    }
+    # every vector lands in cid 1 (the zero vector by the lowest-cid
+    # rule, the rest because the zero centroid's cosine is NULL), so one
+    # probed list holds the whole corpus and IVF equals brute force
+    ivf = ivf_topk(corpus, corpus, 3, n_centroids=2, nprobe=1)
+    assert sorted(ivf.collect()) == sorted(exact.collect())
+
+    # 4 drops (cos 1 to 3); the zero vector neither drops 3 nor drops
+    kept = semdedup(corpus, 0.9, n_centroids=2).collect()
+    assert {r["vec_id"]: r["cid"] for r in kept} == {1: 1, 2: 1, 3: 1}
+
+    pairs = near_dup_pairs_cosine(corpus, 0.5).collect()
+    assert sorted((r["id1"], r["id2"]) for r in pairs) == [(1, 3), (1, 4), (3, 4)]
+
+    eval_set = spark.createDataFrame([(10, [0.0, 0.0]), (11, [1.0, 0.0])], schema)
+    flagged = decontaminate_semantic(corpus, eval_set, 0.5).collect()
+    assert sorted((r["train_id"], r["eval_id"]) for r in flagged) == [
+        (1, 11), (3, 11), (4, 11),
+    ]
+
+    seed = spark.createDataFrame([(0, [1.0, 0.0]), (1, [0.0, 1.0])], schema)
+    idx = str(tmp_path / "zidx")
+    build_ivf_index(
+        seed,
+        idx,
+        centroids=seed.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")),
+    )
+    passed: list[int] = []
+    sink = semdedup_gate(
+        spark, idx, eps=0.8,
+        on_pass=lambda surv, _: passed.extend(r["vec_id"] for r in surv.collect()),
+    )
+    # 11 drops against indexed 0; 13 (cos 0.71 to 0 and 11) passes; the
+    # two zero vectors share cid 0 with both and pass
+    sink(
+        spark.createDataFrame(
+            [(10, [0.0, 0.0]), (11, [1.0, 0.0]), (13, [1.0, 1.0]), (14, [0.0, 0.0])],
+            schema,
+        ),
+        1,
+    )
+    assert sorted(passed) == [10, 13, 14]
+    post = spark.read.parquet(f"{idx}/postings")
+    assert {r["id"]: r["cid"] for r in post.collect()} == {0: 0, 1: 1, 10: 0, 13: 0, 14: 0}
 
 
 def test_persisted_ivf_index_roundtrip(spark, clustered_ann, tmp_path):
